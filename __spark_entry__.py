@@ -1579,7 +1579,7 @@ def oracle_sql() -> dict[str, str]:
                 FROM reach r JOIN edges x ON x.subject = r.t
                 WHERE r.hops < 2
             )
-            SELECT DISTINCT s, t FROM reach WHERE s <> t""",
+            SELECT DISTINCT s, t FROM reach""",
         "ref_bgp_graph": f"""{e}
             SELECT DISTINCT a.subject AS c, a.object AS o,
                    b.object AS p, b.context AS sup
@@ -1770,27 +1770,31 @@ def oracle_sql() -> dict[str, str]:
             FROM events
             UNION ALL
             SELECT 'user_id', COUNT(*),
-                   SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END),
+                   CAST(SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT),
                    COUNT(DISTINCT user_id),
                    CAST(MIN(user_id) AS VARCHAR),
                    CAST(MAX(user_id) AS VARCHAR)
             FROM events
             UNION ALL
             SELECT 'event_type', COUNT(*),
-                   SUM(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END),
+                   CAST(SUM(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT),
                    COUNT(DISTINCT event_type),
                    MIN(event_type), MAX(event_type)
             FROM events
             UNION ALL
             SELECT 'value', COUNT(*),
-                   SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END),
+                   CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT),
                    COUNT(DISTINCT value),
                    printf('%.6f', ROUND(MIN(value), 6) + 0.0),
                    printf('%.6f', ROUND(MAX(value), 6) + 0.0)
             FROM events
             UNION ALL
             SELECT 'props', COUNT(*),
-                   SUM(CASE WHEN props IS NULL THEN 1 ELSE 0 END),
+                   CAST(SUM(CASE WHEN props IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT),
                    COUNT(DISTINCT props),
                    MIN(props), MAX(props)
             FROM events""",
@@ -1811,7 +1815,8 @@ def oracle_sql() -> dict[str, str]:
             FROM events
             UNION ALL
             SELECT 'event_type', COUNT(*),
-                   SUM(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END),
+                   CAST(SUM(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END)
+                        AS BIGINT),
                    COUNT(DISTINCT event_type),
                    MIN(event_type), MAX(event_type)
             FROM events""",

@@ -213,10 +213,13 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — record, don't die
             out["scale_probe"] = {"error": f"{type(exc).__name__}: {exc}"}
 
-    # Full record (probe per-query timings, notes) → an IMMUTABLE
-    # per-configuration file: rounds 2+3 proved that (a) one shared
-    # last_run.json gets clobbered by later runs at another sf, and
-    # (b) the driver captures only the LAST 2000 chars of stdout, so an
+    # Full record (probe per-query timings, notes) → a per-configuration
+    # ``_last`` file, gitignored: one shared last_run.json got clobbered
+    # by later runs at another sf, and writing run_sf{sf}_c{cores}.json
+    # itself overwrote the curated, committed record of that
+    # configuration with whatever host load the latest run saw (copy a
+    # run over the curated file by hand when it is the one to keep).
+    # The driver captures only the LAST 2000 chars of stdout, so an
     # 86-query JSON line (~2.8 KB) can never parse from the tail. The
     # final stdout line is therefore built to a hard 1900-char budget:
     # keep the SLOWEST queries (the headline numbers) and drop the
@@ -224,7 +227,7 @@ def main() -> None:
     # the complete record lives.
     repo = os.path.dirname(os.path.abspath(__file__))
     sf_tag = str(sf).replace(".", "p") if sf >= 0 else "unknown"
-    rec_name = f"run_sf{sf_tag}_c{cores}.json"
+    rec_name = f"run_sf{sf_tag}_c{cores}_last.json"
     # BTD_BENCH_RECORD_DIR redirects the record (e.g. the contract test
     # writes to a tmp dir so pytest runs never dirty a committed record)
     rec_dir = os.environ.get(

@@ -192,7 +192,8 @@ class _Compiled:
             )
         self.df = closure.select(*sel)
         # s/o constants count toward selectivity; the path itself doesn't
-        self.bound = 2 - len(self.vars)
+        # ((?x <p>+ ?x) binds one variable yet has no constant endpoint)
+        self.bound = sum(not _is_var(t) for t in (s_term, o_term))
         self.idx = idx
         self.pattern = tuple(pattern)
 

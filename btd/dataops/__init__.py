@@ -1,6 +1,7 @@
 """Training-data pipeline operations over document/embedding tables:
 deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard,
-embedding-cosine), similarity search (brute-force + LSH-bucketed ANN),
+embedding-cosine), similarity search (exact broadcast-BLAS baselines +
+LSH/IVF/PQ-bucketed ANN),
 text analysis (language-ID, quality scoring, token counts,
 fingerprinting), and multimodal column plumbing.
 

@@ -210,9 +210,9 @@ def _gate_corpus_n() -> int:
 
 
 def _q_emb_near_dup(spark, sf):
-    """Scale-path near-dup gate: LSH-bucketed candidate gen + the
-    shared distributed join+dot scorer + threshold — zero full-matrix
-    collect anywhere in the plan. The oracle replicates the
+    """Scale-path near-dup gate: LSH-bucketed candidate gen scored
+    bucket-locally with the threshold pushed into the kernel — zero
+    full-matrix collect anywhere in the plan. The oracle replicates the
     deterministic bucketing exactly (same hyperplanes, same auto-sized
     bit width), so the approximate operator is hash-gated exactly;
     blas_near_dup stays gated as the labeled exact baseline
@@ -222,16 +222,16 @@ def _q_emb_near_dup(spark, sf):
 
 
 def _q_emb_near_dup_exact(spark, sf):
-    # blas kernel: identical output to the fold-per-pair cosine_near_dup
-    # (cross-validated in tests), ~10x faster single-node — the labeled
-    # EXACT baseline (documented broadcast ceiling ~10^7 × 10^2);
-    # emb_cosine_near_dup above is the bucketed 100 TB path
+    # the labeled EXACT baseline (broadcast-BLAS kernel; documented
+    # broadcast ceiling ~10^7 × 10^2, equal to a Catalyst fold-per-pair
+    # reference in tests); emb_cosine_near_dup above is the bucketed
+    # 100 TB path
     return blas_near_dup(_emb(spark, sf), 0.45)
 
 
 def _q_emb_brute_topk(spark, sf):
-    # exact brute-force top-k via the BLAS kernel (brute_force_topk's
-    # Catalyst fold version is equivalence-tested against it)
+    # exact top-k via the BLAS kernel (equal to a Catalyst fold-per-pair
+    # reference in tests)
     return blas_topk(_emb(spark, sf), 3)
 
 
@@ -1048,8 +1048,9 @@ SELECT vec_id, cluster, rn FROM kept WHERE rn <= {per_cluster}"""
     return "\n".join(parts)
 
 
-#: normalize-then-dot, element order preserved — the exact float path
-#: of btd.dataops.similarity.normalized/_ndot, so ROUND(.,6) agrees.
+#: normalize-then-dot over every ordered pair: the exact cosine every
+#: embedding kernel in btd.dataops.similarity rounds to 6 places
+#: (ROUND(.,6) absorbs summation-order differences vs numpy's matmul).
 _COSINE_SQL = """
 v AS (SELECT vec_id,
              list_transform(CAST(embedding AS DOUBLE[]),

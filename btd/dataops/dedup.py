@@ -6,11 +6,13 @@ Scale notes (the point of each variant):
 - n-gram Jaccard: exact pairwise similarity via shingle explode +
   equi-join on shingle — full recall, cost ~ sum of posting-list²; the
   quadratic baseline you run at small scale to validate the LSH path.
-- MinHash-LSH: signatures in ONE groupBy (k partial mins), banding
-  self-join — the 100 TB path; recall is probabilistic, precision
-  restored by an exact-jaccard filter on candidates only.
+- MinHash-LSH (btd.lsh, shared with entity blocking): signatures in
+  ONE groupBy (k partial mins), banding self-join — the 100 TB path;
+  recall is probabilistic, precision restored by the same
+  exact-jaccard verification as the n-gram path, on candidates only.
 - SimHash: 64-bit fingerprint via vectorized pandas UDF (bit ops are
-  Python/numpy territory), near-dup = equal band keys.
+  Python/numpy territory), near-dup = equal band keys (same band
+  self-join as MinHash).
 
 Hashes are md5-derived so the DuckDB oracle can reproduce them
 byte-for-byte.
@@ -25,8 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-NUM_HASHES = 8
-BAND_SIZE = 2
+from btd.lsh import NUM_HASHES, band_pairs, minhash_bands
 
 # ---------------------------------------------------------------- exact
 
@@ -66,6 +67,31 @@ def word_shingles(col: str = "text", n: int = 3):
 
 def _with_shingles(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", word_shingles().alias("sh"))
+
+
+def _jaccard_verified(
+    cands: DataFrame, sh: DataFrame, threshold: float
+) -> DataFrame:
+    """Candidate (id_a, id_b) pairs with their exact shingle-set Jaccard
+    (ROUND 6), kept at >= threshold — the one verification step behind
+    both the exact and the LSH near-dup paths."""
+    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
+    return (
+        cands.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("n_shared", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("n_shared")
+                / (F.size("sh_a") + F.size("sh_b") - F.col("n_shared")),
+                6,
+            ),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 # ------------------------------------------------- exact n-gram jaccard
@@ -124,112 +150,28 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
         )
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("n_shared", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_shared")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("n_shared")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verified(cand, sh, threshold)
 
 
 # --------------------------------------------------------- minhash-LSH
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    ex = _with_shingles(docs).select("doc_id", F.explode("sh").alias("shingle"))
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"sig_{i}")
-        for i in range(NUM_HASHES)
-    ]
-    return ex.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_candidates(
     docs: DataFrame, salt_hot_bands: int | None = None
 ) -> DataFrame:
-    """LSH banding: candidate pairs sharing >= 1 band key.
+    """LSH banding (btd.lsh): candidate pairs sharing >= 1 band key.
 
-    ``salt_hot_bands``: replicate-salt the band self-join
-    (btd.skew.salted_self_join) for corpora where one band key goes
-    viral (boilerplate text); identical result, skew-proof shuffle."""
-    sigs = minhash_signatures(docs)
-    n_bands = NUM_HASHES // BAND_SIZE
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.lit(str(bb)),
-                            *[
-                                F.col(f"sig_{bb * BAND_SIZE + r}")
-                                for r in range(BAND_SIZE)
-                            ],
-                        )
-                    )
-                    for bb in range(n_bands)
-                ]
-            )
-        ).alias("band_key"),
-    )
-    return _band_pairs(bands, salt_hot_bands)
-
-
-def _band_pairs(
-    bands: DataFrame, salt_hot_bands: int | None = None
-) -> DataFrame:
-    """bands(doc_id, band_key) → distinct (id_a < id_b) pairs sharing a
-    band key; optionally salted (shared by minhash + simhash)."""
-    if salt_hot_bands:
-        from btd.skew import salted_self_join
-
-        return salted_self_join(
-            bands, "band_key", "doc_id", n_salts=salt_hot_bands
-        )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, "band_key")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
+    ``salt_hot_bands``: salt the band self-join for corpora where one
+    band key goes viral (boilerplate text); identical result, see
+    :func:`btd.lsh.band_pairs`."""
+    ex = _with_shingles(docs).select("doc_id", F.explode("sh").alias("shingle"))
+    return band_pairs(minhash_bands(ex, "doc_id"), "doc_id", salt_hot_bands)
 
 
 def minhash_near_dup(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """LSH candidates verified with exact shingle Jaccard >= threshold."""
-    cands = minhash_candidates(docs)
-    sh = _with_shingles(docs)
-    sha = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    shb = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cands.join(sha, "id_a")
-        .join(shb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _jaccard_verified(
+        minhash_candidates(docs), _with_shingles(docs), threshold
     )
 
 
@@ -331,7 +273,7 @@ def simhash_near_dup(
             )
         ).alias("band_key"),
     )
-    return _band_pairs(bands, salt_hot_bands)
+    return band_pairs(bands, "doc_id", salt_hot_bands)
 
 
 def auto_band_size(

@@ -1,12 +1,14 @@
 """Similarity search over an embedding column (array<float>).
 
-- brute-force cosine top-k: the exact baseline — JVM-side dot product
-  via F.zip_with/F.aggregate over a (bucketed) self-join.
+- exact cosine top-k / near-dup: the baselines — Arrow-batched numpy
+  matmul against a broadcast L2-normalized matrix (blas_topk,
+  blas_near_dup), bounded by the driver-side collect.
 - random-hyperplane LSH buckets: the scale path — each vector hashed to
   a sign-bit bucket; neighbors searched only within the bucket, so the
   self-join is equi-keyed (shuffle ∝ bucket sizes, not n²). Hyperplanes
   are derived deterministically from md5 (no RNG state to ship).
-- embedding-cosine near-dup: threshold variant used by the dedup suite.
+- IVF / PQ / SemDeDup: clustered and compressed variants, all scored
+  bucket-locally.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ import struct
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -32,51 +34,57 @@ def normalized(emb: DataFrame) -> DataFrame:
     )
 
 
-def _ndot(a: str, b: str):
-    """Dot product of two pre-normalized double arrays."""
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _batch_cosines(pdf: pd.DataFrame, Mn):
+    """ROUND(,6) cosines of a batch's vectors (rows) against an
+    L2-normalized member matrix (columns) — the float path the DuckDB
+    oracles hash-match."""
+    import numpy as np
+
+    q = np.array(list(pdf["embedding"]), dtype=np.float64)
+    q /= np.linalg.norm(q, axis=1, keepdims=True)
+    return np.round(q @ Mn.T, 6)
 
 
-def brute_force_topk(emb: DataFrame, k: int = 5) -> DataFrame:
-    """Exact top-k cosine neighbors per vector (excluding self).
-
-    All-pairs self-join over pre-normalized vectors: correct at any
-    scale but O(n²) — the oracle baseline you validate the LSH/BLAS
-    variants against.
+def _select_pairs(S, qids, mids, k=None, threshold=None) -> pd.DataFrame:
+    """The one exact pair-selection rule of every scoring kernel here,
+    over a ROUND(,6) score matrix ``S`` (rows = queries ``qids``,
+    columns = members ``mids``; modified in place) → (id_a, id_b,
+    cosine[, rank]). Exactly one of:
+      threshold — every pair id_a < id_b (so never self) scoring
+                  >= threshold;
+      k         — each query's k best members by (score DESC, id_b
+                  ASC), self excluded, ranked 1..k.
     """
-    from pyspark.sql import Window
+    import numpy as np
 
-    n = normalized(emb)
-    a = n.select(F.col("vec_id").alias("id_a"), F.col("en").alias("e_a"))
-    b = n.select(F.col("vec_id").alias("id_b"), F.col("en").alias("e_b"))
-    pairs = (
-        a.crossJoin(b)
-        .where(F.col("id_a") != F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(_ndot("e_a", "e_b"), 6).alias("cosine"),
+    if threshold is not None:
+        r, c = np.nonzero((S >= threshold) & (qids[:, None] < mids[None, :]))
+        return pd.DataFrame(
+            {"id_a": qids[r], "id_b": mids[c], "cosine": S[r, c]}
         )
-    )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("id_a", "id_b", "cosine", "rank")
+    rows, cols, ranks = ([np.empty(0, np.int64)] for _ in range(3))
+    for r, qid in enumerate(qids):
+        S[r, mids == qid] = -np.inf  # exclude self
+        order = np.lexsort((mids, -S[r]))[:k]
+        order = order[S[r, order] > -np.inf]
+        rows.append(np.full(len(order), r))
+        cols.append(order)
+        ranks.append(np.arange(1, len(order) + 1))
+    r, c = np.concatenate(rows), np.concatenate(cols)
+    return pd.DataFrame(
+        {
+            "id_a": qids[r],
+            "id_b": mids[c],
+            "cosine": S[r, c],
+            "rank": np.concatenate(ranks),
+        }
     )
 
 
-def blas_topk(emb: DataFrame, k: int = 5) -> DataFrame:
-    """Exact top-k via Arrow-batched numpy matmul against a broadcast
-    normalized matrix — the single-node-fast path (~2 orders faster
-    than the fold-per-pair join). The broadcast side must fit in
-    executor memory (fine up to ~10^7 × 10^2 dims); beyond that,
-    LSH/IVF bucketing (lsh_topk) is the scale path.
-    """
+def _blas_pairs(emb: DataFrame, schema: str, **select) -> DataFrame:
+    """The exact kernels: collect (vec_id, embedding) to the driver,
+    L2-normalize the matrix ONCE, broadcast it, and score each Arrow
+    batch against all of it with one matmul."""
     import numpy as np
 
     rows = emb.select("vec_id", "embedding").collect()
@@ -87,26 +95,29 @@ def blas_topk(emb: DataFrame, k: int = 5) -> DataFrame:
     b_ids, b_m = sc.broadcast(ids), sc.broadcast(M)
 
     def kernel(batches):
-        import pandas as pd
-
         all_ids, Mn = b_ids.value, b_m.value
-        pos = {int(v): i for i, v in enumerate(all_ids)}
         for pdf in batches:
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            S = np.round(q @ Mn.T, 6)
-            out = {"id_a": [], "id_b": [], "cosine": [], "rank": []}
-            for r, qid in enumerate(pdf["vec_id"]):
-                S[r, pos[int(qid)]] = -np.inf  # exclude self
-                order = np.lexsort((all_ids, -S[r]))[:k]
-                out["id_a"].extend([qid] * len(order))
-                out["id_b"].extend(all_ids[order])
-                out["cosine"].extend(S[r, order])
-                out["rank"].extend(range(1, len(order) + 1))
-            yield pd.DataFrame(out)
+            yield _select_pairs(
+                _batch_cosines(pdf, Mn),
+                pdf["vec_id"].to_numpy(),
+                all_ids,
+                **select,
+            )
 
-    return emb.mapInPandas(
-        kernel, "id_a long, id_b long, cosine double, rank int"
+    return emb.mapInPandas(kernel, schema)
+
+
+def blas_topk(emb: DataFrame, k: int = 5) -> DataFrame:
+    """Exact top-k cosine neighbors per vector (excluding self; ties by
+    id_b ASC) via Arrow-batched numpy matmul against a broadcast
+    normalized matrix — the exact baseline the ANN paths are
+    recall-tested against (~2 orders faster than a Catalyst
+    fold-per-pair self-join). The broadcast side must fit in executor
+    memory (fine up to ~10^7 × 10^2 dims); beyond that, LSH/IVF
+    bucketing (lsh_topk) is the scale path.
+    """
+    return _blas_pairs(
+        emb, "id_a long, id_b long, cosine double, rank int", k=k
     )
 
 
@@ -186,63 +197,6 @@ def lsh_bucket(
     return emb.select("vec_id", "embedding").mapInPandas(kernel, schema)
 
 
-def _pair_scorer(emb: DataFrame):
-    """Return a function scoring an ARBITRARY (id_a, id_b) candidate
-    frame: two equi-joins of the candidates against the embedding
-    table (one per side), then an Arrow-batched per-pair normalize+dot
-    (ROUND 6 — the float path _COSINE_SQL mirrors).
-
-    This is the general scorer for externally-supplied pair lists
-    (e.g. MinHash doc-pair candidates re-scored in embedding space) —
-    fully distributed, nothing on the driver, candidate ids absent
-    from ``emb`` dropped by the inner joins. The ANN paths no longer
-    use it: joining the vector payload onto every pair row moved ~90
-    GB at the 100x probe (BENCH/sf10_probe_r03.json), so
-    lsh_topk/ivf_topk/lsh_near_dup/semantic_dedup score bucket-LOCALLY
-    (:func:`_bucket_local_pairs`) — reach for THIS only when the
-    candidate list does not come from a bucketing whose groups could
-    score themselves.
-    """
-    import numpy as np
-
-    ea = emb.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("_ea")
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("_eb")
-    )
-
-    def score_pairs(cand: DataFrame) -> DataFrame:
-        joined = (
-            cand.join(ea, "id_a")
-            .join(eb, "id_b")
-            .select("id_a", "id_b", "_ea", "_eb")
-        )
-
-        def score(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                A = np.array(list(pdf["_ea"]), dtype=np.float64)
-                B = np.array(list(pdf["_eb"]), dtype=np.float64)
-                # per-row L2 normalize + row dot: numerically identical
-                # to the normalized-matrix gather-dot (same numpy ops,
-                # same pairwise summation), so ROUND 6 agrees with the
-                # DuckDB oracle exactly as before
-                A /= np.linalg.norm(A, axis=1, keepdims=True)
-                B /= np.linalg.norm(B, axis=1, keepdims=True)
-                cos = np.round((A * B).sum(axis=1), 6)
-                yield pd.DataFrame(
-                    {"id_a": pdf["id_a"], "id_b": pdf["id_b"], "cosine": cos}
-                )
-
-        return joined.mapInPandas(
-            score, "id_a long, id_b long, cosine double"
-        )
-
-    return score_pairs
-
-
 def auto_lsh_bits(n: int, n_tables: int = 8, target_pairs_per_vec: int = 1024) -> int:
     """Signature width that keeps expected candidate volume linear in n.
 
@@ -314,53 +268,35 @@ def lsh_topk(
     Bucket-local top-k provably preserves the global top-k because the
     local order (cosine DESC, id_b ASC) equals the global rank order.
     """
-    from pyspark.sql import Window
-
     if bits is None:
         bits = auto_lsh_bits(emb.count(), n_tables)
 
     grouped = lsh_bucket(
         emb, dim, n_tables, bits, carry_embedding=True
     ).withColumn("side", F.lit("b"))
-    pairs = _bucket_local_pairs(grouped, k=k).distinct()
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
+    return _global_topk(_bucket_local_pairs(grouped, k=k).distinct(), k)
+
+
+def _global_topk(pairs: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """(id_a, id_b, score, rank): the k best rows per id_a by (score
+    DESC, id_b ASC) — the same order the bucket-local kernels rank by,
+    so their per-bucket top-k candidates contain the global top-k."""
+    w = Window.partitionBy("id_a").orderBy(F.desc(score), F.asc("id_b"))
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("id_a", "id_b", "cosine", "rank")
+        .select("id_a", "id_b", score, "rank")
     )
 
 
 def blas_near_dup(emb: DataFrame, threshold: float = 0.99) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b) via the
-    broadcast-BLAS kernel — exact same output as cosine_near_dup,
-    ~10x faster single-node (matmul vs fold-per-pair)."""
-    import numpy as np
-
-    rows = emb.select("vec_id", "embedding").collect()
-    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-    M = np.array([r.embedding for r in rows], dtype=np.float64)
-    M /= np.linalg.norm(M, axis=1, keepdims=True)
-    sc = emb.sparkSession.sparkContext
-    b_ids, b_m = sc.broadcast(ids), sc.broadcast(M)
-
-    def kernel(batches):
-        import pandas as pd
-
-        all_ids, Mn = b_ids.value, b_m.value
-        for pdf in batches:
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            S = np.round(q @ Mn.T, 6)
-            qids = pdf["vec_id"].to_numpy()
-            # only pairs id_a < id_b, at or above threshold
-            keep = (S >= threshold) & (qids[:, None] < all_ids[None, :])
-            r, c = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"id_a": qids[r], "id_b": all_ids[c], "cosine": S[r, c]}
-            )
-
-    return emb.mapInPandas(kernel, "id_a long, id_b long, cosine double")
+    """Exact embedding-cosine near-duplicate pairs (id_a < id_b,
+    cosine >= threshold) via the broadcast-BLAS kernel — the baseline
+    lsh_near_dup is recall-tested against, ~10x faster single-node
+    than a Catalyst fold-per-pair self-join."""
+    return _blas_pairs(
+        emb, "id_a long, id_b long, cosine double", threshold=threshold
+    )
 
 
 def lsh_near_dup(
@@ -396,21 +332,6 @@ def lsh_near_dup(
     # threshold pushed INTO the bucket kernel: output is proportional
     # to true near-dups, and vectors never ride a pair row
     return _bucket_local_pairs(grouped, threshold=threshold).distinct()
-
-
-def cosine_near_dup(emb: DataFrame, threshold: float = 0.99) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b)."""
-    n = normalized(emb)
-    a = n.select(F.col("vec_id").alias("id_a"), F.col("en").alias("e_a"))
-    b = n.select(F.col("vec_id").alias("id_b"), F.col("en").alias("e_b"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", F.round(_ndot("e_a", "e_b"), 6).alias("cosine")
-        )
-        .where(F.col("cosine") >= threshold)
-    )
 
 
 # ----------------------------------------------------------------- IVF
@@ -532,8 +453,6 @@ def cluster_sample(
     """
     if n_clusters is None:
         n_clusters = auto_nlist(emb.count())
-    from pyspark.sql import Window
-
     C = ivf_train(emb, n_clusters, n_iter)
     buckets = emb.select(
         "vec_id",
@@ -575,7 +494,6 @@ def ivf_topk(
     at the gate corpus: nlist = max(16, round(sqrt(500))) = 22).
     """
     import numpy as np
-    from pyspark.sql import Window
     from pyspark.sql import types as T
 
     if n_clusters is None:
@@ -618,12 +536,7 @@ def ivf_topk(
     pairs = _bucket_local_pairs(
         members.unionByName(queries), k=k, shard_cap=shard_cap
     ).distinct()
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("id_a", "id_b", "cosine", "rank")
-    )
+    return _global_topk(pairs, k)
 
 
 def auto_semdedup_nlist(n: int, cluster_target: int = 200) -> int:
@@ -782,8 +695,9 @@ def _bucket_local_pairs(
                   local top-k under the identical order);
       threshold — all pairs id_a < id_b with cosine >= threshold.
 
-    Float path = blas_topk's exactly (numpy row-normalize, matmul,
-    ROUND 6) — the path the DuckDB oracles already hash-match.
+    Float path and pair selection are the exact kernels' own
+    (:func:`_batch_cosines`, :func:`_select_pairs`) — the path the
+    DuckDB oracles already hash-match.
     Queries are scored in chunks of 1024 so kernel memory is
     chunk x occupancy, never queries x occupancy. Same pair met in
     several buckets yields the IDENTICAL row (deterministic float per
@@ -804,9 +718,6 @@ def _bucket_local_pairs(
     grouped = _shard_hot_buckets(grouped, shard_cap)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_a: list = []
-        out_b: list = []
-        out_c: list = []
         m = pdf[pdf["side"] != "q"]
         q = pdf[pdf["side"] != "m"]
         if len(m) == 0 or len(q) == 0:
@@ -816,37 +727,18 @@ def _bucket_local_pairs(
         mids = m["vec_id"].to_numpy()
         qids = q["vec_id"].to_numpy()
         CH = 1024
-        for lo in range(0, len(q), CH):
-            qc = q.iloc[lo : lo + CH]
-            Q = np.array(list(qc["embedding"]), dtype=np.float64)
-            Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-            S = np.round(Q @ M.T, 6)
-            ids_c = qids[lo : lo + CH]
-            if threshold is not None:
-                # unordered pairs: keep id_a < id_b (also drops self)
-                keep = (S >= threshold) & (ids_c[:, None] < mids[None, :])
-                r, c = np.nonzero(keep)
-                out_a.append(ids_c[r])
-                out_b.append(mids[c])
-                out_c.append(S[r, c])
-            else:
-                for r in range(len(ids_c)):
-                    row = S[r].copy()
-                    row[mids == ids_c[r]] = -np.inf  # exclude self
-                    order = np.lexsort((mids, -row))[:k]
-                    order = order[row[order] > -np.inf]
-                    out_a.append(np.full(len(order), ids_c[r]))
-                    out_b.append(mids[order])
-                    out_c.append(row[order])
-        if not out_a:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        return pd.concat(
+            [
+                _select_pairs(
+                    _batch_cosines(q.iloc[lo : lo + CH], M),
+                    qids[lo : lo + CH],
+                    mids,
+                    k=k,
+                    threshold=threshold,
+                )
+                for lo in range(0, len(q), CH)
+            ]
+        )[["id_a", "id_b", "cosine"]]
 
     return grouped.groupBy("bucket", "_sh").applyInPandas(
         fn, "id_a long, id_b long, cosine double"
@@ -1040,7 +932,6 @@ def pq_topk(
     with recall MEASURED (recall_at_k), not assumed.
     """
     import numpy as np
-    from pyspark.sql import Window
     from pyspark.sql import types as T
 
     if n_clusters is None:
@@ -1103,17 +994,14 @@ def pq_topk(
     )
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "adc": []})
         mr = pdf[pdf["side"] == "m"]
         qr = pdf[pdf["side"] == "q"]
         if not len(mr) or not len(qr):
-            return empty
+            return pd.DataFrame({"id_a": [], "id_b": [], "adc": []})
         codes = np.array(list(mr["codes"]), dtype=np.int64)
         mids = mr["vec_id"].to_numpy(dtype=np.int64)
         qids = qr["vec_id"].to_numpy(dtype=np.int64)
-        out_a: list = []
-        out_b: list = []
-        out_c: list = []
+        parts = []
         CH = 1024  # kernel memory = chunk × occupancy, never q × occ
         for lo in range(0, len(qr), CH):
             qc = qr.iloc[lo : lo + CH]
@@ -1125,34 +1013,14 @@ def pq_topk(
             for s in range(1, books.shape[0]):
                 T_s = Q[:, s * sd : (s + 1) * sd] @ books[s].T
                 S = S + T_s[:, codes[:, s]]
-            S = np.round(S, 6)
-            ids_c = qids[lo : lo + CH]
-            for r in range(len(ids_c)):
-                row = S[r].copy()
-                row[mids == ids_c[r]] = -np.inf  # exclude self
-                order = np.lexsort((mids, -row))[:k]
-                order = order[row[order] > -np.inf]
-                out_a.append(np.full(len(order), ids_c[r]))
-                out_b.append(mids[order])
-                out_c.append(row[order])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "adc": np.concatenate(out_c),
-            }
-        )
+            parts.append(
+                _select_pairs(np.round(S, 6), qids[lo : lo + CH], mids, k=k)
+            )
+        return pd.concat(parts).rename(columns={"cosine": "adc"})[
+            ["id_a", "id_b", "adc"]
+        ]
 
     local = grouped.groupBy("bucket", "_sh").applyInPandas(
         score, "id_a long, id_b long, adc double"
     )
-    w = Window.partitionBy("id_a").orderBy(
-        F.col("adc").desc(), F.col("id_b").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("id_a", "id_b", "adc", F.col("rank").cast("int"))
-    )
+    return _global_topk(local, k, score="adc")

@@ -117,7 +117,9 @@ def infer(
     Raises RuntimeError if the rule set has not converged after
     ``max_rounds`` — a recursive rule that needs unbounded depth
     should use the ``<p>+`` property-path operator instead (see module
-    docstring).
+    docstring). ``optional=`` is rejected: a NULL binding in a derived
+    triple never equi-matches in the fixpoint anti-join, so the loop
+    could only end in that RuntimeError.
     """
     from btd.ckpt import CheckpointLoop
 
@@ -126,8 +128,14 @@ def infer(
     ]
     if not rules:
         raise ValueError("at least one rule is needed")
+    if "optional" in bgp_kwargs:
+        raise ValueError(
+            "infer rules take no optional= patterns: an unbound template "
+            "variable derives NULL triples that never reach a fixpoint"
+        )
     loop = CheckpointLoop(triples.sparkSession)
     g = loop.step(triples.select(*columns).distinct())
+    converged = False
     try:
         for _ in range(max_rounds):
             derived = reduce(
@@ -146,6 +154,7 @@ def infer(
                 # g IS the result: drop the empty fresh step and restore
                 # g as the kept checkpoint (close() keeps the last step)
                 loop.rollback_step()
+                converged = True
                 return g
             g = loop.step(g.unionByName(fresh))
             loop.release_prev()
@@ -155,4 +164,6 @@ def infer(
             "recursive rule as a <p>+ property path (khop BFS)"
         )
     finally:
-        loop.close(keep_last=True)
+        # on no-fixpoint or any error nothing is returned, so nothing
+        # may stay pinned
+        loop.close(keep_last=converged)

@@ -1,17 +1,13 @@
-"""Candidate-pair blocking: hand-rolled MinHash-LSH, pure Catalyst.
-
-Hand-rolled rather than pyspark.ml MinHashLSH so hashes are
-deterministic across runs/engines (md5-based, no seeded JVM RNG) and
-there is no MLlib/Vector dependency — every step is DataFrame ops that
-whole-stage-codegen.
+"""Candidate-pair blocking: MinHash-LSH (btd.lsh) plus a name-token
+blocker, pure Catalyst.
 
 Pipeline: normalize surface → char-3gram shingles (explode) →
-NUM_HASHES min-hashes (one groupBy) → LSH bands → self-join on band key.
-A second, cheap blocker on the last name-token catches person-name
-variants whose shingle jaccard is too low for LSH (standard multi-pass
-blocking). Self-join is on (band, key) — at scale AQE skew-split
-handles hot bands (stopword-ish tokens), and candidates are
-deduplicated before scoring so each pair is scored once.
+btd.lsh.minhash_bands → self-join on band key. A second, cheap blocker
+on the last name-token catches person-name variants whose shingle
+jaccard is too low for LSH (standard multi-pass blocking). Self-join is
+on (band, key) — at scale AQE skew-split handles hot bands
+(stopword-ish tokens), and candidates are deduplicated before scoring
+so each pair is scored once.
 """
 
 from __future__ import annotations
@@ -19,8 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-NUM_HASHES = 8
-BAND_SIZE = 2  # 4 bands × 2 rows
+from btd.lsh import band_pairs, minhash_bands
 
 
 def normalize(col):
@@ -42,26 +37,6 @@ def shingles(col, n: int = 3):
     )
 
 
-def minhash_signatures(entities: DataFrame) -> DataFrame:
-    """entities(entity_id, surface) → (entity_id, sig_0..sig_{k-1}).
-
-    min-hash_i = MIN over shingles of md5(i || shingle): one explode +
-    one groupBy with k partial-aggregated mins — a single shuffle keyed
-    on entity_id regardless of k.
-    """
-    sh = entities.select(
-        "entity_id",
-        F.explode(shingles("norm")).alias("shingle"),
-    )
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(str(i) + ":"), F.col("shingle")))).alias(
-            f"sig_{i}"
-        )
-        for i in range(NUM_HASHES)
-    ]
-    return sh.groupBy("entity_id").agg(*aggs)
-
-
 def candidate_pairs(
     entities: DataFrame,
     salt_hot_bands: int | None = None,
@@ -70,10 +45,8 @@ def candidate_pairs(
     """entities(entity_id, surface) → (id_a, id_b) candidate pairs,
     id_a < id_b, deduplicated across blockers.
 
-    ``salt_hot_bands``: replicate-salt the band self-join over that
-    many salts (btd.skew.salted_self_join) when a viral surface form
-    makes one band's posting list swamp a reducer past what AQE
-    skew-split fixes; result is identical either way.
+    ``salt_hot_bands``: salt the block self-join against a viral
+    surface form (see :func:`btd.lsh.band_pairs`); identical result.
 
     ``max_block_size``: block purging (standard entity-resolution
     block cleaning). A block key shared by more than K entities has no
@@ -94,59 +67,25 @@ def candidate_pairs(
     ents = entities.withColumn("norm", normalize(F.col("surface")))
 
     # --- blocker 1: MinHash-LSH bands -------------------------------
-    sigs = minhash_signatures(ents)
-    n_bands = NUM_HASHES // BAND_SIZE
-    bands = sigs.select(
+    bands = minhash_bands(
+        ents.select("entity_id", F.explode(shingles("norm")).alias("shingle")),
         "entity_id",
-        F.explode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.lit(str(b)),
-                            *[
-                                F.col(f"sig_{b * BAND_SIZE + r}")
-                                for r in range(BAND_SIZE)
-                            ],
-                        )
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("block_key"),
     )
 
     # --- blocker 2: last name-token ----------------------------------
     tokens = ents.select(
         "entity_id",
         F.concat(F.lit("tok:"), F.element_at(F.split("norm", " "), -1)).alias(
-            "block_key"
+            "band_key"
         ),
     )
 
     blocks = bands.unionByName(tokens)
     if max_block_size:
-        sizes = blocks.groupBy("block_key").agg(
+        sizes = blocks.groupBy("band_key").agg(
             F.count(F.lit(1)).alias("_bn")
         )
         blocks = blocks.join(
-            sizes.where(F.col("_bn") <= max_block_size), "block_key"
+            sizes.where(F.col("_bn") <= max_block_size), "band_key"
         ).drop("_bn")
-    if salt_hot_bands:
-        from btd.skew import salted_self_join
-
-        return salted_self_join(
-            blocks, "block_key", "entity_id", n_salts=salt_hot_bands
-        )
-    a = blocks.alias("a")
-    b = blocks.alias("b")
-    return (
-        a.join(b, "block_key")
-        .where(F.col("a.entity_id") < F.col("b.entity_id"))
-        .select(
-            F.col("a.entity_id").alias("id_a"),
-            F.col("b.entity_id").alias("id_b"),
-        )
-        .distinct()
-    )
+    return band_pairs(blocks, "entity_id", salt_hot_bands)

@@ -1,11 +1,34 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import SparkSession
 
 from btd.fixtures import gen_transcripts, gen_triples
 from btd.schema import TRANSCRIPTS, TRIPLES
 from btd.session import get_spark
+
+#: the reference repo's own 63-line n-quad fixture, read by the goldens
+#: marked ``reference_sample``; those skip where it is not mounted
+REFERENCE_SAMPLE = "/root/reference/assets/sample.txt"
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "reference_sample: reads the reference n-quad fixture sample.txt",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    needs_sample = pytest.mark.skipif(
+        not os.path.exists(REFERENCE_SAMPLE),
+        reason=f"reference fixture {REFERENCE_SAMPLE} is absent",
+    )
+    for item in items:
+        if item.get_closest_marker("reference_sample"):
+            item.add_marker(needs_sample)
 
 
 @pytest.fixture(scope="session")

@@ -249,6 +249,20 @@ def test_path_same_variable_enumerates_cycle_nodes(cyclic_kg):
     assert _set(short) == {("d",)}  # only the self-loop closes in 1 hop
 
 
+def test_path_selectivity_counts_constant_endpoints(cyclic_kg):
+    # (?x <p>+ ?x) binds one variable but has no constant endpoint: it
+    # must rank (and broadcast) like the all-roots closure it is
+    from btd.bgp import _Compiled
+
+    def bound(pattern):
+        return _Compiled(cyclic_kg, pattern, 0).bound
+
+    assert bound(("?x", "next+", "?x")) == 0
+    assert bound(("?s", "next+", "?t")) == 0
+    assert bound(("a", "next+", "?t")) == 1
+    assert bound(("?s", "next+", "a")) == 1
+
+
 def test_path_bound_object_is_rooted_not_filtered(cyclic_kg):
     # the reverse-BFS plan must not expand the full closure: the
     # joined-frontier per level only ever contains ancestors of 'a'

@@ -10,10 +10,13 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 SAMPLE = "/root/reference/assets/sample.txt"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+@pytest.mark.reference_sample
 def test_cli_dedup_gzip_reference_bytes(tmp_path):
     """analyze dedup --text-output: gzip part file whose LINES are the
     reference's dedup output bytes — descending (s,p,o), cleared

@@ -18,7 +18,7 @@ from btd.dataops.dedup import (
     simhash_near_dup,
 )
 from btd.dataops.multimodal import decode_image, extract_features, synthesize_media
-from btd.dataops.similarity import brute_force_topk, cosine_near_dup, lsh_topk
+from btd.dataops.similarity import blas_near_dup, blas_topk, lsh_topk
 from btd.dataops.textstats import (
     LANG_MARKERS,
     STOPWORDS,
@@ -157,7 +157,7 @@ def test_brute_force_topk_vs_numpy(spark, emb):
     Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
     S = Mn @ Mn.T
     got = {}
-    for r in brute_force_topk(emb, 3).collect():
+    for r in blas_topk(emb, 3).collect():
         got.setdefault(r.id_a, []).append((r.rank, r.id_b, r.cosine))
     for ai, a in enumerate(ids):
         sims = sorted(
@@ -169,7 +169,7 @@ def test_brute_force_topk_vs_numpy(spark, emb):
 
 
 def test_cosine_near_dup_finds_planted(spark, emb):
-    pairs = {(r.id_a, r.id_b): r.cosine for r in cosine_near_dup(emb, 0.999).collect()}
+    pairs = {(r.id_a, r.id_b): r.cosine for r in blas_near_dup(emb, 0.999).collect()}
     for i in [r.vec_id for r in emb.where(F.col("vec_id") >= 10000).collect()]:
         assert (i - 10000, i) in pairs
         assert pairs[(i - 10000, i)] == 1.0
@@ -177,7 +177,7 @@ def test_cosine_near_dup_finds_planted(spark, emb):
 
 def test_lsh_topk_structure_and_recall(spark, emb):
     brute = {
-        (r.id_a, r.rank): r.id_b for r in brute_force_topk(emb, 1).collect()
+        (r.id_a, r.rank): r.id_b for r in blas_topk(emb, 1).collect()
     }
     approx = {
         (r.id_a, r.rank): r.id_b for r in lsh_topk(emb, dim=64, k=1).collect()

@@ -121,6 +121,33 @@ def test_infer_frees_loop_checkpoints(kg, spark):
     assert len(after - before) <= 1
 
 
+def test_infer_no_fixpoint_frees_every_checkpoint(spark):
+    # the RuntimeError path returns nothing, so the loop must not keep
+    # its last step pinned for the session lifetime
+    rows = [(f"n{i}", "next", f"n{i+1}") for i in range(6)]
+    df = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    rules = [
+        (
+            [("?a", "next", "?b"), ("?b", "next", "?c")],
+            [("?a", "next", "?c")],
+        )
+    ]
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        infer(df, rules, max_rounds=1)
+    assert jsc.getPersistentRDDs().size() == baseline
+
+
+def test_infer_rejects_optional(kg):
+    with pytest.raises(ValueError, match="optional"):
+        infer(
+            kg,
+            [([("?p", "works_at", "?co")], [("?p", "employed", "?co")])],
+            optional=[("?co", "located_in", "?city")],
+        )
+
+
 def test_infer_empty_rules_raise(kg):
     with pytest.raises(ValueError, match="at least one rule"):
         infer(kg, [])

@@ -82,3 +82,20 @@ def test_every_query_has_an_exact_oracle():
     # and no orphaned oracles either
     orphaned = sorted(set(entrymod.oracle_sql()) - set(entrymod.queries()))
     assert orphaned == [], f"oracles without queries: {orphaned}"
+
+
+def test_no_oracle_column_is_hugeint(duck):
+    """Type gate the value comparison above cannot see: DuckDB widens
+    SUM over integers to HUGEINT, which renders as a float (0.0) where
+    Spark's BIGINT renders 0 — a hash mismatch under a type-sensitive
+    gate even when every value agrees. DuckDB binds each oracle at
+    sf0.01 without running it, so this needs no Spark."""
+    wide = []
+    for name, sql in sorted(entrymod.oracle_sql().items()):
+        rel = duck.sql(sql)
+        wide += [
+            f"{name}.{col}"
+            for col, ty in zip(rel.columns, rel.types)
+            if str(ty) in ("HUGEINT", "UHUGEINT")
+        ]
+    assert wide == [], f"HUGEINT oracle columns (CAST them AS BIGINT): {wide}"

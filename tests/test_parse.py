@@ -6,23 +6,28 @@ from __future__ import annotations
 
 import collections
 
+import pytest
+
 from btd.fixtures import gen_triples, to_lines
 from btd.parse import parse_metrics, parse_nquads, read_nquads, to_nquad_lines
 
 SAMPLE = "/root/reference/assets/sample.txt"
 
 
+@pytest.mark.reference_sample
 def test_sample_txt_all_lines_parse(spark):
     df = read_nquads(spark, SAMPLE)
     assert df.count() == 63
 
 
+@pytest.mark.reference_sample
 def test_sample_txt_distinct_subjects(spark):
     # report/report.md:161-192: 9 distinct subjects in sample.txt
     df = read_nquads(spark, SAMPLE)
     assert df.select("subject").distinct().count() == 9
 
 
+@pytest.mark.reference_sample
 def test_sample_txt_outdegree_histogram(spark):
     # FIXTURES.md golden: {1:1, 6:6, 12:1, 14:1} on the 63-line file
     from btd.analytics import outdegree_histogram
@@ -32,6 +37,7 @@ def test_sample_txt_outdegree_histogram(spark):
     assert hist == {1: 1, 6: 6, 12: 1, 14: 1}
 
 
+@pytest.mark.reference_sample
 def test_sample_txt_field_shapes(spark):
     rows = read_nquads(spark, SAMPLE).collect()
     for r in rows:
@@ -87,6 +93,7 @@ def test_empty_context_roundtrip_matches_python_oracle(spark):
     assert got == ctx_counter
 
 
+@pytest.mark.reference_sample
 def test_dedup_reference_order_bytes_golden(spark):
     """The report's duplicate-then-diff procedure (report.md:364-376):
     duplicate sample.txt, run dedup, and the output must byte-match the
@@ -119,6 +126,7 @@ def test_dedup_reference_order_bytes_golden(spark):
     assert sorted(got) == sorted(expected)
 
 
+@pytest.mark.reference_sample
 def test_histogram_text_bytes_golden(spark):
     """Byte-identical TextOutputFormat shape for the degree histogram:
     sample.txt's published outdegree distribution (report.md:196-198)
@@ -130,14 +138,14 @@ def test_histogram_text_bytes_golden(spark):
     from btd.parse import parse_nquads
 
     # full 63-line sample.txt
-    t = read_nquads(spark, "/root/reference/assets/sample.txt")
+    t = read_nquads(spark, SAMPLE)
     lines = [
         r.value for r in histogram_text_lines(outdegree_histogram(t)).collect()
     ]
     assert lines == ["1\t1", "6\t6", "12\t1", "14\t1"]
     # the report's published histogram is for the ORIGINAL 27-line
     # sample (report.md:161-198): first 27 lines reproduce it exactly
-    raw27 = spark.read.text("/root/reference/assets/sample.txt").limit(27)
+    raw27 = spark.read.text(SAMPLE).limit(27)
     lines27 = [
         r.value
         for r in histogram_text_lines(
@@ -209,5 +217,7 @@ def test_gz_decompress_then_repartition(spark, tmp_path):
     )
 
     # a well-split input passes through untouched (no gratuitous shuffle)
-    well_split = read_nquads(spark, SAMPLE, min_partitions=1)
+    plain = tmp_path / "quads.nq"
+    plain.write_text("\n".join(to_lines(rows)) + "\n")
+    well_split = read_nquads(spark, str(plain), min_partitions=1)
     assert "Exchange" not in well_split._jdf.queryExecution().executedPlan().toString()

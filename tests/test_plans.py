@@ -99,11 +99,14 @@ def test_histogram_plan_shape(spark):
     )
 
 
-def test_parse_is_jvm_only(spark):
+def test_parse_is_jvm_only(spark, tmp_path):
     """The n-quad parse path must contain no Python evaluation."""
+    from btd.fixtures import gen_triples, to_lines
     from btd.parse import read_nquads
 
-    plan = _plan(read_nquads(spark, "/root/reference/assets/sample.txt"))
+    path = tmp_path / "quads.nq"
+    path.write_text("\n".join(to_lines(gen_triples(50, seed=3))) + "\n")
+    plan = _plan(read_nquads(spark, str(path)))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
 
