@@ -1,14 +1,22 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
-``entry(spark)`` smoke-runs the flagship query on sf0.001;
-``queries()[name](spark, sf_dir)`` are compared against
+``entry(spark)`` smoke-runs the flagship query on sf0.001. ``gates()`` is
+the ordered table of gated queries, one ``(name, query fn, oracle SQL)``
+row each; ``queries()`` and ``oracle_sql()`` are its two projections,
+and ``queries()[name](spark, sf_dir)`` is compared against
 ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash). One entry per implemented operator from
-SURVEY.md §2.
+order-insensitive value-hash).
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
+import hashlib
+import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,7 +25,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from btd import analytics as A
-from btd.dataops.contract import oracle_sql_dataops, queries_dataops
+from btd.dataops import contract as D
+from btd.dataops.similarity import auto_lsh_bits, auto_nlist, auto_semdedup_nlist
 from btd.extract.derive import TRANSCRIPTS_SQL, transcripts_from_events
 from btd.extract.mentions import detect_mentions
 from btd.extract.relations import extract_triples
@@ -183,7 +192,15 @@ def _q_parse_metrics(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_SINK_SEQ = [0]
+@functools.cache
+def _gate_dir() -> str:
+    """The process's one scratch directory for gate outputs (sink
+    roundtrips, stream sources), removed at interpreter exit. Being
+    private to the process, nothing in it can be stale or shared with a
+    concurrent run (e.g. bench + pytest on the same sf)."""
+    path = tempfile.mkdtemp(prefix="btd_gate_")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _sink_roundtrip(spark: SparkSession, sf: str, codec: str | None) -> DataFrame:
@@ -192,18 +209,11 @@ def _sink_roundtrip(spark: SparkSession, sf: str, codec: str | None) -> DataFram
     lines, write them through the REAL text sink (gzip codec for S4),
     re-read with read_nquads and aggregate. The gz variant re-reads
     with ``min_partitions`` so the decompress-then-repartition escape
-    hatch for unsplittable gz inputs is itself driver-gated. Write
-    target is pid+seq-unique under tempdir (same hygiene as the
-    streaming gate's transcript materialization)."""
-    import os as _os
-    import tempfile
-
+    hatch for unsplittable gz inputs is itself driver-gated. Each call
+    writes a fresh directory under the gate dir."""
     from btd.parse import read_nquads
 
-    _SINK_SEQ[0] += 1
-    tmp = (
-        f"{tempfile.gettempdir()}/btd_sink_{_os.getpid()}_{_SINK_SEQ[0]}"
-    )
+    tmp = tempfile.mkdtemp(prefix="sink_", dir=_gate_dir())
     w = _edges_to_lines(edges(spark, sf)).write.mode("overwrite")
     if codec:
         w = w.option("compression", codec)
@@ -757,56 +767,34 @@ def _q_kg_mentions(spark: SparkSession, sf: str) -> DataFrame:
     return detect_mentions(tx.where(F.col("text").like("% uses %")), surfaces)
 
 
-_TX_WRITTEN: set[str] = set()
-
-
-def _write_transcripts_tmp(spark: SparkSession, sf: str) -> str:
-    """Materialize the derived transcripts as parquet for a file-source
-    stream (streaming sources read files, not in-memory frames).
-    Written once per (process, sf): five streaming gate queries share
-    one derive+write instead of each paying it — and a same-process
-    cache (not an on-disk marker) means a stale directory from an older
-    code version can never poison a fresh run. The path mixes in the
-    pid so two concurrent processes on the same sf (e.g. bench +
-    pytest) can never overwrite a directory the other's streaming
-    query is mid-read on (ADVICE r2)."""
-    import hashlib
-    import os as _os
-    import tempfile
-
+def _gate_parquet(df: DataFrame, kind: str, sf: str) -> str:
+    """Write ``df`` as parquet once per (process, kind, sf) under the
+    gate dir, for a file-source stream (streaming sources read
+    directories, and the testdata is read-only): the streaming gate
+    queries share one derive+write instead of each paying it."""
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
-    tmp = f"{tempfile.gettempdir()}/btd_stream_tx_{_os.getpid()}_{tag}"
-    if tmp not in _TX_WRITTEN:
-        transcripts_from_events(spark, sf).write.mode("overwrite").parquet(
-            tmp
-        )
-        _TX_WRITTEN.add(tmp)
-    return tmp
+    path = os.path.join(_gate_dir(), f"{kind}_{tag}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        df.write.mode("overwrite").parquet(path)
+    return path
 
 
-_EV_WRITTEN: set = set()
+def _tx_stream(spark: SparkSession, sf: str) -> DataFrame:
+    """File-source stream over the derived transcripts."""
+    from btd.streaming import stream_transcripts
+
+    path = _gate_parquet(transcripts_from_events(spark, sf), "tx", sf)
+    return stream_transcripts(spark, path)
 
 
-def _write_events_tmp(spark: SparkSession, sf: str) -> str:
-    """Events twin of _write_transcripts_tmp: the streaming file
-    source needs a DIRECTORY, and /root/testdata is read-only — copy
-    the events table once per (process, sf), pid-unique for the same
-    concurrent-process reason."""
-    import hashlib
-    import os as _os
-    import tempfile
+def _drain(stream: DataFrame, mode: str = "append") -> DataFrame:
+    """Run a gate stream over all available input into a fresh memory
+    sink and return the sink's table."""
+    from btd.streaming import run_to_memory
 
-    tag = hashlib.md5(sf.encode()).hexdigest()[:8]
-    tmp = f"{tempfile.gettempdir()}/btd_stream_ev_{_os.getpid()}_{tag}"
-    if tmp not in _EV_WRITTEN:
-        spark.read.parquet(f"{sf}/events.parquet").select(
-            "event_id", "ts", "user_id", "value"
-        ).write.mode("overwrite").parquet(tmp)
-        _EV_WRITTEN.add(tmp)
-    return tmp
-
-
-_STREAM_SEQ = [0]
+    name = f"gate_stream_{uuid.uuid4().hex}"
+    run_to_memory(stream, name, mode=mode)
+    return stream.sparkSession.table(name)
 
 
 def _q_stream_extract(spark: SparkSession, sf: str) -> DataFrame:
@@ -815,17 +803,9 @@ def _q_stream_extract(spark: SparkSession, sf: str) -> DataFrame:
     extraction → memory sink, drained with processAllAvailable. Shares
     the batch extraction oracle — the stream must produce byte-equal
     triples (stateless/narrow ⇒ append mode, no watermark)."""
-    from btd.streaming import (
-        run_to_memory,
-        stream_extract_triples,
-        stream_transcripts,
-    )
+    from btd.streaming import stream_extract_triples
 
-    path = _write_transcripts_tmp(spark, sf)
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_extract_{_STREAM_SEQ[0]}"
-    run_to_memory(stream_extract_triples(stream_transcripts(spark, path)), name)
-    return spark.table(name)
+    return _drain(stream_extract_triples(_tx_stream(spark, sf)))
 
 
 def _q_stream_windowed_counts(spark: SparkSession, sf: str) -> DataFrame:
@@ -835,21 +815,11 @@ def _q_stream_windowed_counts(spark: SparkSession, sf: str) -> DataFrame:
     unsupported on streams); at role cardinality <= 3 HLL++ is
     deterministic-exact, so the COUNT(DISTINCT) oracle is a true
     pass/fail."""
-    from btd.streaming import (
-        run_to_memory,
-        stream_transcripts,
-        windowed_turn_counts,
-    )
+    from btd.streaming import windowed_turn_counts
 
-    path = _write_transcripts_tmp(spark, sf)
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_windows_{_STREAM_SEQ[0]}"
-    run_to_memory(
-        windowed_turn_counts(stream_transcripts(spark, path)),
-        name,
-        mode="complete",
+    return _drain(
+        windowed_turn_counts(_tx_stream(spark, sf)), mode="complete"
     )
-    return spark.table(name)
 
 
 def _q_stream_hopping(spark: SparkSession, sf: str) -> DataFrame:
@@ -858,23 +828,12 @@ def _q_stream_hopping(spark: SparkSession, sf: str) -> DataFrame:
     every turn lands in 2 windows and the state store carries the
     overlap — the 'rate over 10 min, refreshed every 5' streaming
     shape. Complete-mode drain; twin enumerates slide-aligned starts."""
-    from btd.streaming import (
-        run_to_memory,
-        stream_transcripts,
-        windowed_turn_counts,
-    )
+    from btd.streaming import windowed_turn_counts
 
-    path = _write_transcripts_tmp(spark, sf)
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_hopping_{_STREAM_SEQ[0]}"
-    run_to_memory(
-        windowed_turn_counts(
-            stream_transcripts(spark, path), slide="5 minutes"
-        ),
-        name,
+    return _drain(
+        windowed_turn_counts(_tx_stream(spark, sf), slide="5 minutes"),
         mode="complete",
     )
-    return spark.table(name)
 
 
 def _q_stream_sessionize(spark: SparkSession, sf: str) -> DataFrame:
@@ -885,21 +844,12 @@ def _q_stream_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     so each session — closed or final-open — is emitted exactly once
     and the result equals the batch formulation: a full SQL oracle for
     the arbitrary-state operator."""
-    from btd.streaming import (
-        run_to_memory,
-        sessionize_stream,
-        stream_transcripts,
-    )
+    from btd.streaming import sessionize_stream
 
-    path = _write_transcripts_tmp(spark, sf)
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_sessions_{_STREAM_SEQ[0]}"
-    run_to_memory(
-        sessionize_stream(stream_transcripts(spark, path), gap_minutes=30),
-        name,
+    return _drain(
+        sessionize_stream(_tx_stream(spark, sf), gap_minutes=30),
         mode="update",
     )
-    return spark.table(name)
 
 
 def _q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
@@ -908,15 +858,10 @@ def _q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     against the state store must restore exactly one row per
     (conv_id, turn_idx) — then aggregated per conversation so the
     oracle compares a stable shape."""
-    from btd.streaming import dedup_stream, run_to_memory, stream_transcripts
+    from btd.streaming import dedup_stream
 
-    path = _write_transcripts_tmp(spark, sf)
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_dedup_{_STREAM_SEQ[0]}"
-    s = stream_transcripts(spark, path)
-    run_to_memory(dedup_stream(s.unionByName(s)), name)
-    deduped = spark.table(name)
-    return deduped.groupBy("conv_id").agg(
+    s = _tx_stream(spark, sf)
+    return _drain(dedup_stream(s.unionByName(s))).groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.count_distinct("turn_idx").alias("n_distinct_turns"),
     )
@@ -928,20 +873,10 @@ def _q_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     watermarked (bounded join state). The static input arrives in one
     micro-batch so every match is emitted; aggregated per conversation
     to a stable shape the static SQL self-join replicates exactly."""
-    from btd.streaming import (
-        response_join_stream,
-        run_to_memory,
-        stream_transcripts,
-    )
+    from btd.streaming import response_join_stream
 
-    path = _write_transcripts_tmp(spark, sf)
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_join_{_STREAM_SEQ[0]}"
-    run_to_memory(
-        response_join_stream(stream_transcripts(spark, path)), name
-    )
     return (
-        spark.table(name)
+        _drain(response_join_stream(_tx_stream(spark, sf)))
         .groupBy(F.col("u_conv_id").alias("conv_id"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -958,25 +893,22 @@ def _q_stream_anomaly(spark: SparkSession, sf: str) -> DataFrame:
     stream. One micro-batch for the static replay, so the output
     equals the batch expanding-window formulation — a full SQL oracle
     for an arbitrary-state operator, like stream_sessionize."""
-    from btd.streaming import run_to_memory, zscore_anomaly_stream
+    from btd.streaming import zscore_anomaly_stream
 
-    path = _write_events_tmp(spark, sf)
+    ev = spark.read.parquet(f"{sf}/events.parquet")
+    path = _gate_parquet(ev.select("event_id", "ts", "user_id", "value"), "ev", sf)
     stream = spark.readStream.schema(
         spark.read.parquet(path).schema
     ).parquet(path)
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_anomaly_{_STREAM_SEQ[0]}"
-    run_to_memory(zscore_anomaly_stream(stream, threshold=2.0), name)
-    return spark.table(name)
+    return _drain(zscore_anomaly_stream(stream, threshold=2.0))
 
 
 def _q_stream_enrich(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-static enrichment join in the gate: streaming turns
     broadcast-joined to a static tool dimension (derived from events),
     aggregated per tool category."""
-    from btd.streaming import enrich_stream, run_to_memory, stream_transcripts
+    from btd.streaming import enrich_stream
 
-    path = _write_transcripts_tmp(spark, sf)
     dim = (
         spark.read.parquet(f"{sf}/events.parquet")
         .select(F.col("event_type").alias("tool"))
@@ -986,11 +918,8 @@ def _q_stream_enrich(spark: SparkSession, sf: str) -> DataFrame:
             F.when(F.length("tool") > 5, "long").otherwise("short"),
         )
     )
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_enrich_{_STREAM_SEQ[0]}"
-    run_to_memory(enrich_stream(stream_transcripts(spark, path), dim), name)
     return (
-        spark.table(name)
+        _drain(enrich_stream(_tx_stream(spark, sf), dim))
         .groupBy("tool_category")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
@@ -1265,501 +1194,76 @@ def _q_ref_bgp_graph(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def queries() -> dict[str, QueryFn]:
-    """Query registry. ORDER MATTERS: the driver's correctness gate grades the
-    FIRST 50 entries in insertion order, so slots 1-50 are reserved for queries
-    that need a fresh hard-signal row (never graded, or code rewritten since
-    their last green row). Round 5 rotation: slots 1-2 are ev_profile (r04's
-    one red row — min/max rendering made engine-neutral) and the new
-    ev_profile_approx HLL gate; 3-11 the nine stale-signal queries the r4
-    verdict flagged (8 never-graded late-r4 ops + stream_sessionize, whose
-    green predated its NULL-safe state fix); the rest re-grade every query
-    whose module was touched this round (similarity.py — the bucketed pq_topk
-    rewrite — so all emb_*; streaming.py — stable expanding moments — so all
-    stream_*; graph.py — pagerank early-exit — so kg_pagerank/khop/triangles;
-    quality.py/materialize.py → kg_fk_check/kg_upsert), then the eight
-    never-graded queries added this round (six BGP pattern queries incl. the
-    quad/GRAPH form, btd/bgp.py; CONSTRUCT + fixpoint inference,
-    btd/infer.py), plus the oldest untouched r03 greens (kg_* graph/extract
-    block, ref_* analyses) so every row in CORRECTNESS_r05 is
-    at-current-code. The eight new slots push the last eight ref_* refreshes
-    (indegree_histogram through top_contexts — all r03-green, code
-    untouched) just past slot 50; they keep their old rows.
-    The r04-green untouched doc_* dataops and ev_* batch suites rotate to the
-    tail —
-    tests/test_oracle_parity.py still covers the full registry (count asserted
-    at runtime, not here)."""
-    head = {
-        # --- r04's one red row, now engine-neutral + its new HLL twin
-        "ev_profile": _q_ev_profile,
-        "ev_profile_approx": _q_ev_profile_approx,
-        # --- the 9 stale-signal queries (verdict item 2)
-        "emb_pq_topk": None,
-        "emb_recall_at_k": None,
-        "doc_dsir": _q_doc_dsir,
-        "doc_winnow_fingerprints": _q_doc_winnow,
-        "doc_winnow_near_dup": None,
-        "kg_temporal_triples": _q_kg_temporal_triples,
-        "kg_entity_cooccur": _q_kg_entity_cooccur,
-        "stream_anomaly": _q_stream_anomaly,
-        "stream_sessionize": _q_stream_sessionize,
-        # --- modules touched in r5: every query through them re-grades
-        "kg_upsert": _q_kg_upsert,
-        "kg_pagerank": None,
-        "kg_fk_check": _q_kg_fk_check,
-        "emb_lsh_topk": None,
-        "emb_ivf_topk": None,
-        "emb_cosine_near_dup": None,
-        "emb_semantic_dedup": None,
-        "emb_cluster_sample": None,
-        "emb_cosine_near_dup_exact": None,
-        "emb_brute_force_topk": None,
-        "stream_extract_triples": _q_stream_extract,
-        "stream_windowed_counts": _q_stream_windowed_counts,
-        "stream_hopping": _q_stream_hopping,
-        "stream_dedup": _q_stream_dedup,
-        "stream_enrich": _q_stream_enrich,
-        "stream_join": _q_stream_join,
-        "kg_khop": _q_kg_khop,
-        "kg_triangles": _q_kg_triangles,
-        # --- new in r5: BGP pattern-query surface (btd/bgp.py) —
-        # never graded, so they take window slots from two untouched
-        # r03-green ref_* refreshes (which keep their old rows)
-        "kg_bgp": _q_kg_bgp,
-        "kg_bgp_optional": _q_kg_bgp_optional,
-        "ref_bgp_chain": _q_ref_bgp_chain,
-        "ref_bgp_minus": _q_ref_bgp_minus,
-        "ref_bgp_path": _q_ref_bgp_path,
-        "ref_construct": _q_ref_construct,
-        "kg_infer": _q_kg_infer,
-        "ref_bgp_graph": _q_ref_bgp_graph,
-        # --- oldest greens (r03, code untouched since): refresh to
-        # current-code rows so no signal in CORRECTNESS_r05 is stale
-        "kg_copurchase": _q_kg_copurchase,
-        "kg_neighbor_jaccard": _q_kg_neighbor_jaccard,
-        "kg_adamic_adar": _q_kg_adamic_adar,
-        "kg_eval_pr": _q_kg_eval_pr,
-        "kg_turn_order": _q_kg_turn_order,
-        "kg_extract_triples": _q_kg_extract,
-        "kg_extract_windowed": _q_kg_extract_windowed,
-        "kg_mentions": _q_kg_mentions,
-        "kg_outdegree_histogram": _q_kg_outdegree_hist,
-        "kg_turn_integrity": _q_kg_turn_integrity,
-        "ref_distinct_subjects": _q_distinct,
-        "ref_distinct_spo_counts": _q_distinct_spo,
-        "ref_outdegree_histogram": _q_outdegree_hist,
-        "ref_indegree_histogram": _q_indegree_hist,
-        "ref_topk_outdegree": _q_topk_outdegree,
-        "ref_percentages": _q_percentages,
-        "ref_distinct_contexts": _q_distinct_contexts,
-        "ref_distinct_contexts_salted": _q_distinct_contexts_salted,
-        "ref_distinct_contexts_hll": _q_distinct_contexts_hll,
-        "ref_outdegree_histogram_salted": _q_outdegree_hist_salted,
-        "ref_top_contexts": _q_top_contexts,
-    }
-    tail = {
-        # r03/r04-green and code-untouched this round
-        "ref_dedup": _q_dedup,
-        "ref_percentages_compat": _q_percentages_compat,
-        "ref_parse_metrics": _q_parse_metrics,
-        "ref_parse_roundtrip": _q_parse_roundtrip,
-        "ref_text_sink_roundtrip": _q_text_sink_roundtrip,
-        "ref_gzip_sink_roundtrip": _q_gzip_sink_roundtrip,
-        "kg_entities": _q_kg_entities,
-        "kg_same_as": _q_kg_same_as,
-        "kg_components": _q_kg_components,
-        "kg_components_star": _q_kg_components_star,
-        "kg_ontology_stats": _q_kg_ontology_stats,
-        "kg_type_infer": _q_kg_type_infer,
-        "kg_conflict_resolve": _q_kg_conflict_resolve,
-        "kg_two_hop_reach": _q_kg_two_hop_reach,
-        "doc_heavy_hitters": _q_doc_heavy_hitters,
-        "doc_postings": _q_doc_postings,
-        "ev_anomaly": _q_ev_anomaly,
-        "ev_funnel": _q_ev_funnel,
-        "ev_asof_join": _q_ev_asof_join,
-        "ev_range_count": _q_ev_range_count,
-        "ev_moving_avg": _q_ev_moving_avg,
-        "ev_hopping": _q_ev_hopping,
-        "ev_sessionize": _q_ev_sessionize,
-        "ev_rollup": _q_ev_rollup,
-        "ev_quantiles": _q_ev_quantiles,
-        "ev_quantiles_approx": _q_ev_quantiles_approx,
-        "ev_pivot": _q_ev_pivot,
-        "ev_json_extract": _q_ev_json_extract,
-        "ev_retention": _q_ev_retention,
-    }
-    dataops = queries_dataops()
-    out: dict[str, QueryFn] = {}
-    for name, fn in head.items():
-        out[name] = dataops[name] if fn is None else fn
-    for name, fn in dataops.items():
-        if name not in out:
-            out[name] = fn
-    for name, fn in tail.items():
-        if name not in out:
-            out[name] = fn
-    assert len(out) == len(head) + len(tail) + sum(
-        1 for n in dataops if n not in head and n not in tail
-    )
-    return out
+# --------------------------------------------------------------------------
+# the gate table: oracle SQL shared by several rows, then the rows
+# --------------------------------------------------------------------------
 
-
-def oracle_sql() -> dict[str, str]:
-    e = f"WITH edges AS ({EDGES_SQL})"
-    tx = f"WITH tx AS ({TRANSCRIPTS_SQL})"
-    # extracted-triples CTE (the kg_extract_triples SELECT, reused by
-    # the schema-mining / conflict-resolution oracles)
-    trips = f"""{tx},
+_EDGES_CTE = f"WITH edges AS ({EDGES_SQL})"
+_TX_CTE = f"WITH tx AS ({TRANSCRIPTS_SQL})"
+#: the extraction rule's columns over the tx CTE (kg_extract_triples)
+_TRIPLE_COLS = """split_part(text, ' ', 1) AS subj,
+                   CASE WHEN text LIKE '% uses %' THEN 'uses'
+                        ELSE 'met_with' END AS pred,
+                   CASE WHEN text LIKE '% uses %'
+                        THEN substr(text, strpos(text, ' uses ') + 6,
+                                    length(text) - strpos(text, ' uses ') - 6)
+                        ELSE substr(text, strpos(text, ' met with ') + 10,
+                                    length(text) - strpos(text, ' met with ') - 10)
+                   END AS obj,
+                   conv_id, turn_idx"""
+_EXTRACT_TRIPLES_SQL = f"""{_TX_CTE}
+            SELECT {_TRIPLE_COLS}
+            FROM tx"""
+# extracted-triples CTE, reused by the schema-mining / conflict-resolution
+# oracles
+_TRIPLES_CTE = f"""{_TX_CTE},
             triples AS (
-            SELECT split_part(text, ' ', 1) AS subj,
-                   CASE WHEN text LIKE '% uses %' THEN 'uses'
-                        ELSE 'met_with' END AS pred,
-                   CASE WHEN text LIKE '% uses %'
-                        THEN substr(text, strpos(text, ' uses ') + 6,
-                                    length(text) - strpos(text, ' uses ') - 6)
-                        ELSE substr(text, strpos(text, ' met with ') + 10,
-                                    length(text) - strpos(text, ' met with ') - 10)
-                   END AS obj,
-                   conv_id, turn_idx
+            SELECT {_TRIPLE_COLS}
             FROM tx)"""
-    return {
-        "ev_asof_join": """
-            SELECT l.event_id, l.ts, l.user_id, l.value,
-                   r.value AS value_asof, r.ts AS ts_asof
-            FROM (SELECT * FROM events WHERE event_type = 'error') l
-            ASOF LEFT JOIN
-                 (SELECT * FROM events WHERE event_type = 'click') r
-              ON l.user_id = r.user_id AND r.ts <= l.ts""",
-        "ev_range_count": """
-            SELECT l.event_id, l.ts, l.user_id, l.value,
-                   CAST(COUNT(r.user_id) AS BIGINT) AS n_in_range
-            FROM (SELECT * FROM events WHERE event_type = 'error') l
-            LEFT JOIN
-                 (SELECT * FROM events WHERE event_type = 'click') r
-              ON l.user_id = r.user_id AND r.ts <= l.ts
-                 AND r.ts >= l.ts - INTERVAL 86400 SECOND
-            GROUP BY l.event_id, l.ts, l.user_id, l.value""",
-        "ref_parse_metrics": f"""{e},
-            lines AS (
-              SELECT CASE WHEN context = ''
-                          THEN subject || ' ' || predicate || ' '
-                               || object || ' .'
-                          ELSE subject || ' ' || predicate || ' '
-                               || object || ' ' || context || ' .'
-                     END AS value
-              FROM edges
-              UNION ALL
-              SELECT 'malformed line ' || CAST(r AS VARCHAR)
-              FROM range(50) t(r)
-              UNION ALL
-              SELECT '<s> <p> "v"^^<t> .'
-              UNION ALL
-              SELECT 'garbage <s> <p> <o> . trailing')
-            SELECT CAST(SUM(CASE WHEN regexp_full_match(value, '(<[^>]+>|[a-zA-Z0-9_:]+) (<[^ ]+>) (<[^>]+>|".*"|[a-zA-Z0-9_:]+|"[^>]*>) (?:(<[^>]+>) )?\\.')
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS parsed,
-                   CAST(SUM(CASE WHEN regexp_full_match(value, '(<[^>]+>|[a-zA-Z0-9_:]+) (<[^ ]+>) (<[^>]+>|".*"|[a-zA-Z0-9_:]+|"[^>]*>) (?:(<[^>]+>) )?\\.')
-                                 THEN 0 ELSE 1 END) AS BIGINT) AS dropped
-            FROM lines""",
-        "ev_json_extract": """
-            SELECT event_type,
-                   CAST(SUM(TRY_CAST(json_extract_string(props, '$.k')
-                                     AS BIGINT)) AS BIGINT) AS sum_k,
-                   CAST(COUNT(TRY_CAST(json_extract_string(props, '$.k')
-                                       AS BIGINT)) AS BIGINT) AS n_with_k,
-                   CAST(MAX(TRY_CAST(json_extract_string(props, '$.k')
-                                     AS BIGINT)) AS BIGINT) AS max_k
-            FROM events GROUP BY event_type""",
-        "ev_sessionize": """
-            WITH g AS (
-              SELECT user_id, ts,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                               OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w))
-                                  > 1800
-                          THEN 1 ELSE 0 END AS ns
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-            s AS (SELECT user_id, ts,
-                         SUM(ns) OVER (PARTITION BY user_id ORDER BY ts
-                                       ROWS UNBOUNDED PRECEDING) AS session_id
-                  FROM g)
-            SELECT user_id,
-                   CAST(session_id AS BIGINT) AS session_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_events,
-                   MIN(ts) AS session_start,
-                   MAX(ts) AS session_end
-            FROM s GROUP BY user_id, session_id""",
-        "ev_rollup": """
-            SELECT event_type,
-                   date_trunc('hour', ts) AS hour,
-                   CAST(GROUPING(event_type) AS INTEGER) AS g_event_type,
-                   CAST(GROUPING(date_trunc('hour', ts)) AS INTEGER)
-                       AS g_hour,
-                   CAST(COUNT(*) AS BIGINT) AS n_events,
-                   ROUND(SUM(value), 4) AS sum_value
-            FROM events
-            GROUP BY ROLLUP (event_type, date_trunc('hour', ts))""",
-        "ev_quantiles": """
-            SELECT event_type,
-                   ROUND(quantile_cont(value, 0.25), 6) AS q25,
-                   ROUND(quantile_cont(value, 0.5), 6) AS q50,
-                   ROUND(quantile_cont(value, 0.75), 6) AS q75,
-                   ROUND(quantile_cont(value, 0.99), 6) AS q99
-            FROM events GROUP BY event_type""",
-        "ev_quantiles_approx": """
-            SELECT event_type,
-                   ROUND(quantile_disc(value, 0.25), 6) AS q25,
-                   ROUND(quantile_disc(value, 0.5), 6) AS q50,
-                   ROUND(quantile_disc(value, 0.75), 6) AS q75,
-                   ROUND(quantile_disc(value, 0.99), 6) AS q99
-            FROM events GROUP BY event_type""",
-        "ev_pivot": """
-            SELECT user_id,
-                   CAST(COUNT(*) FILTER (event_type = 'click') AS BIGINT)
-                       AS click,
-                   CAST(COUNT(*) FILTER (event_type = 'error') AS BIGINT)
-                       AS error,
-                   CAST(COUNT(*) FILTER (event_type = 'purchase') AS BIGINT)
-                       AS purchase,
-                   CAST(COUNT(*) FILTER (event_type = 'signup') AS BIGINT)
-                       AS signup,
-                   CAST(COUNT(*) FILTER (event_type = 'view') AS BIGINT)
-                       AS view
-            FROM events GROUP BY user_id""",
-        "kg_turn_order": f"""{tx}
-            SELECT conv_id, turn_idx,
-                   CAST(ROW_NUMBER() OVER (PARTITION BY conv_id
-                        ORDER BY turn_idx) AS INTEGER) AS turn_rank,
-                   role, tool, text
-            FROM tx""",
-        "kg_extract_triples": f"""{tx}
-            SELECT split_part(text, ' ', 1) AS subj,
-                   CASE WHEN text LIKE '% uses %' THEN 'uses'
-                        ELSE 'met_with' END AS pred,
-                   CASE WHEN text LIKE '% uses %'
-                        THEN substr(text, strpos(text, ' uses ') + 6,
-                                    length(text) - strpos(text, ' uses ') - 6)
-                        ELSE substr(text, strpos(text, ' met with ') + 10,
-                                    length(text) - strpos(text, ' met with ') - 10)
-                   END AS obj,
-                   conv_id, turn_idx
-            FROM tx""",
-        "kg_bgp": f"""{trips}
-            SELECT DISTINCT a.subj AS u, b.obj AS tool, c.obj AS crew
-            FROM triples a
-            JOIN triples b ON b.subj = a.subj
-            JOIN triples c ON c.subj = a.subj
-            WHERE a.pred = 'uses' AND a.obj = 'click'
-              AND b.pred = 'uses' AND c.pred = 'met_with'""",
-        "kg_bgp_optional": f"""{trips}
-            SELECT DISTINCT a.subj AS u, a.obj AS crew,
-                   b.obj AS tool, c.obj AS loc
-            FROM triples a
-            LEFT JOIN triples b ON b.subj = a.subj AND b.pred = 'uses'
-            LEFT JOIN triples c ON c.subj = a.obj AND c.pred = 'located_in'
-            WHERE a.pred = 'met_with'""",
-        "ref_bgp_chain": f"""{e}
-            SELECT DISTINCT a.subject AS c, a.object AS o, b.object AS p
-            FROM edges a
-            JOIN edges b ON b.subject = a.object
-            WHERE a.predicate = '<ordered>'
-              AND b.predicate = '<contains>'""",
-        "ref_bgp_minus": f"""{e}
-            SELECT DISTINCT a.subject AS c, a.object AS o
-            FROM edges a
-            WHERE a.predicate = '<ordered>'
-              AND NOT EXISTS (SELECT 1 FROM edges b
-                              WHERE b.predicate = '<contains>'
-                                AND b.subject = a.object)""",
-        "ref_bgp_path": f"""WITH RECURSIVE edges AS ({EDGES_SQL}),
-            reach AS (
-                SELECT subject AS s, object AS t, 1 AS hops FROM edges
-                UNION
-                SELECT r.s, x.object, r.hops + 1
-                FROM reach r JOIN edges x ON x.subject = r.t
-                WHERE r.hops < 2
-            )
-            SELECT DISTINCT s, t FROM reach""",
-        "ref_bgp_graph": f"""{e}
-            SELECT DISTINCT a.subject AS c, a.object AS o,
-                   b.object AS p, b.context AS sup
-            FROM edges a
-            JOIN edges b ON b.subject = a.object
-            WHERE a.predicate = '<ordered>' AND a.context = ''
-              AND b.predicate = '<contains>'""",
-        "ref_construct": f"""{e}
-            SELECT DISTINCT a.subject AS subject,
-                   '<bought>' AS predicate, b.object AS object
-            FROM edges a
-            JOIN edges b ON b.subject = a.object
-            WHERE a.predicate = '<ordered>'
-              AND b.predicate = '<contains>'""",
-        "kg_infer": f"""{trips},
-            base AS (SELECT DISTINCT subj, pred, obj FROM triples),
-            inter AS (SELECT DISTINCT subj,
-                             'interacts_with' AS pred, obj
-                      FROM base WHERE pred IN ('uses', 'met_with')),
-            touched AS (SELECT DISTINCT obj AS subj,
-                               'touched_by' AS pred, subj AS obj
-                        FROM inter)
-            SELECT subj, pred, obj FROM base
-            UNION SELECT subj, pred, obj FROM inter
-            UNION SELECT subj, pred, obj FROM touched""",
-        "kg_extract_windowed": f"""{tx},
-            planted AS (
-              SELECT conv_id, 1000000 AS turn_idx, 'user' AS role,
-                     'It uses beacon.' AS text, 'beacon' AS tool,
-                     MAX(ts) AS ts
-              FROM tx GROUP BY conv_id),
-            allt AS (SELECT * FROM tx UNION ALL SELECT * FROM planted),
-            wt AS (SELECT conv_id, turn_idx, text,
-                          lag(text) OVER (PARTITION BY conv_id
-                                          ORDER BY turn_idx, ts) AS prev
-                   FROM allt)
-            SELECT CASE WHEN text = 'It uses beacon.'
-                        THEN split_part(prev, ' ', 1)
-                        ELSE split_part(text, ' ', 1) END AS subj,
-                   CASE WHEN text LIKE '% uses %' THEN 'uses'
-                        ELSE 'met_with' END AS pred,
-                   CASE WHEN text LIKE '% uses %'
-                        THEN substr(text, strpos(text, ' uses ') + 6,
-                                    length(text) - strpos(text, ' uses ') - 6)
-                        ELSE substr(text, strpos(text, ' met with ') + 10,
-                                    length(text) - strpos(text, ' met with ') - 10)
-                   END AS obj,
-                   conv_id, turn_idx
-            FROM wt""",
-        "kg_mentions": f"""{tx}
-            SELECT conv_id, turn_idx, tool AS surface,
-                   CAST(strpos(text, tool) - 1 AS INTEGER) AS start,
-                   CAST(strpos(text, tool) - 1 + length(tool) AS INTEGER) AS "end"
-            FROM tx WHERE text LIKE '% uses %'""",
-        "kg_components": """
-            SELECT 'n' || CAST(n_nationkey AS VARCHAR) AS entity_id,
-                   MIN('n' || CAST(n_nationkey AS VARCHAR))
-                       OVER (PARTITION BY n_regionkey) AS canonical_id
-            FROM nation""",
-        "kg_components_star": """
-            SELECT 'n' || CAST(n_nationkey AS VARCHAR) AS entity_id,
-                   MIN('n' || CAST(n_nationkey AS VARCHAR))
-                       OVER (PARTITION BY n_regionkey) AS canonical_id
-            FROM nation""",
-        "kg_same_as": """
-            WITH t_even AS (SELECT DISTINCT event_type FROM events
-                            WHERE event_id % 2 = 0),
-                 t_odd AS (SELECT DISTINCT event_type FROM events
-                           WHERE event_id % 2 = 1)
-            SELECT LEAST(e.event_type, 'crew ' || e.event_type) AS id_a,
-                   GREATEST(e.event_type, 'crew ' || e.event_type) AS id_b,
-                   CAST(0.9 AS DOUBLE) AS score
-            FROM t_even e JOIN t_odd o ON e.event_type = o.event_type""",
-        "kg_entities": """
-            WITH surf AS (
-                SELECT DISTINCT 'u' || CAST(user_id AS VARCHAR) AS s FROM events
-                UNION
-                SELECT DISTINCT event_type AS s FROM events WHERE event_id % 2 = 0
-                UNION
-                SELECT DISTINCT 'crew ' || event_type AS s FROM events
-                WHERE event_id % 2 = 1)
-            SELECT s AS entity_id,
-                   CASE WHEN s LIKE 'crew %'
-                             AND substr(s, 6) IN (SELECT DISTINCT event_type
-                                                  FROM events WHERE event_id % 2 = 0)
-                        THEN LEAST(s, substr(s, 6))
-                        WHEN s IN (SELECT DISTINCT event_type FROM events
-                                   WHERE event_id % 2 = 1)
-                             AND s IN (SELECT DISTINCT event_type FROM events
-                                       WHERE event_id % 2 = 0)
-                        THEN LEAST(s, 'crew ' || s)
-                        ELSE s END AS canonical_id,
-                   s AS surface
-            FROM surf""",
-        "kg_outdegree_histogram": """
-            WITH deg AS (SELECT CAST(COUNT(*) AS BIGINT) AS degree
-                         FROM events GROUP BY user_id)
+_PERCENTAGES_SQL = f"""{_EDGES_CTE}
+            SELECT CAST(SUM(CASE WHEN substr(subject, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_subject,
+                   CAST(SUM(CASE WHEN substr(object, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_object,
+                   CAST(SUM(CASE WHEN context = '' THEN 1 ELSE 0 END) AS BIGINT) AS no_context,
+                   CAST(COUNT(*) AS BIGINT) AS total
+            FROM edges"""
+_DISTINCT_CONTEXTS_SQL = f"""{_EDGES_CTE}
+            SELECT subject, predicate, object,
+                   CAST(COUNT(DISTINCT context) AS BIGINT) AS n_contexts
+            FROM edges GROUP BY subject, predicate, object"""
+_OUTDEGREE_HIST_SQL = f"""{_EDGES_CTE},
+            deg AS (SELECT subject, CAST(COUNT(*) AS BIGINT) AS degree
+                    FROM edges GROUP BY subject)
             SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
-            FROM deg GROUP BY degree""",
-        "ev_retention": """
-            WITH first AS (SELECT user_id,
-                                  CAST(date_trunc('week', MIN(ts)) AS DATE)
-                                      AS cohort_week
-                           FROM events GROUP BY user_id),
-            act AS (SELECT user_id,
-                           CAST(date_trunc('week', ts) AS DATE) AS week
-                    FROM events)
-            SELECT f.cohort_week,
-                   CAST(date_diff('day', f.cohort_week, a.week) // 7
-                        AS BIGINT) AS offset_weeks,
-                   CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_users
-            FROM act a JOIN first f USING (user_id)
-            GROUP BY f.cohort_week, offset_weeks""",
-        "ev_funnel": """
-            WITH a0 AS (SELECT user_id, MIN(ts) AS t0 FROM events
-                        WHERE event_type = 'view' GROUP BY user_id),
-            a1 AS (SELECT e.user_id, MIN(e.ts) AS t1
-                   FROM events e JOIN a0 USING (user_id)
-                   WHERE e.event_type = 'click' AND e.ts >= a0.t0
-                   GROUP BY e.user_id),
-            a2 AS (SELECT e.user_id, MIN(e.ts) AS t2
-                   FROM events e JOIN a1 USING (user_id)
-                   WHERE e.event_type = 'purchase' AND e.ts >= a1.t1
-                   GROUP BY e.user_id)
-            SELECT 'view' AS step, 0 AS step_idx,
-                   (SELECT CAST(COUNT(*) AS BIGINT) FROM a0) AS n_users
-            UNION ALL
-            SELECT 'click', 1, (SELECT CAST(COUNT(*) AS BIGINT) FROM a1)
-            UNION ALL
-            SELECT 'purchase', 2,
-                   (SELECT CAST(COUNT(*) AS BIGINT) FROM a2)""",
-        "kg_copurchase": """
-            WITH items AS (SELECT DISTINCT l_orderkey AS b,
-                                           l_partkey AS i
-                           FROM lineitem)
-            SELECT a.i AS item_a, c.i AS item_b,
-                   CAST(COUNT(*) AS BIGINT) AS n_baskets
-            FROM items a JOIN items c ON a.b = c.b AND a.i < c.i
-            GROUP BY a.i, c.i
-            HAVING COUNT(*) >= 2""",
-        "kg_triangles": """
-            WITH items AS (SELECT DISTINCT l_orderkey AS b,
-                                           l_partkey AS i
-                           FROM lineitem),
-            pairs AS (SELECT a.i AS u, c.i AS v
-                      FROM items a JOIN items c ON a.b = c.b AND a.i < c.i
-                      GROUP BY a.i, c.i HAVING COUNT(*) >= 2),
-            tri AS (SELECT e1.u AS u, e1.v AS v, e2.v AS w
-                    FROM pairs e1
-                    JOIN pairs e2 ON e2.u = e1.u AND e2.v > e1.v
-                    JOIN pairs e3 ON e3.u = e1.v AND e3.v = e2.v),
-            nodes AS (SELECT u AS node FROM tri
-                      UNION ALL SELECT v FROM tri
-                      UNION ALL SELECT w FROM tri)
-            SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
-            FROM nodes GROUP BY node""",
-        "kg_neighbor_jaccard": """
-            WITH e AS (SELECT DISTINCT l_partkey AS b, l_orderkey AS i
-                       FROM lineitem),
-            kept AS (SELECT b, i FROM
-                         (SELECT b, i, COUNT(*) OVER (PARTITION BY b) AS sz
-                          FROM e)
-                     WHERE sz <= 40),
-            deg AS (SELECT i, COUNT(*) AS d FROM kept GROUP BY i),
-            common AS (SELECT a.i AS na, c.i AS nb, COUNT(*) AS n_common
-                       FROM kept a JOIN kept c ON a.b = c.b AND a.i < c.i
-                       GROUP BY a.i, c.i)
-            SELECT na AS node_a, nb AS node_b,
-                   CAST(n_common AS BIGINT) AS n_common,
-                   ROUND(n_common / (da.d + db.d - n_common), 6) AS jaccard
-            FROM common
-            JOIN deg da ON da.i = na
-            JOIN deg db ON db.i = nb
-            WHERE ROUND(n_common / (da.d + db.d - n_common), 6) >= 0.5""",
+            FROM deg GROUP BY degree"""
+_COMPONENTS_SQL = """
+            SELECT 'n' || CAST(n_nationkey AS VARCHAR) AS entity_id,
+                   MIN('n' || CAST(n_nationkey AS VARCHAR))
+                       OVER (PARTITION BY n_regionkey) AS canonical_id
+            FROM nation"""
+
+
+@functools.cache
+def gates() -> tuple[tuple[str, QueryFn, str], ...]:
+    """One row per gated query: (name, query fn, DuckDB oracle SQL). Row
+    order is the driver's grading order, and it grades only the FIRST 50
+    rows per round, so the head of the table is a rotation schedule that
+    puts queries needing a fresh row first. tests/test_oracle_parity.py
+    checks every row. Built on first use: the ANN twins apply the SAME
+    auto-sizing rules the Spark queries use to the gate corpus's vector
+    count, read from its parquet footer (no inlined layout constant can
+    desync)."""
+    n = D._gate_corpus_n()
+    lsh_topk = D._lsh_topk_sql(bits=auto_lsh_bits(n))
+    brute_topk = D._brute_topk_sql(3)
+    return (
+        # slots 1-2: r04's one red row (rendering made engine-neutral) and
+        # its new HLL twin
         # numeric columns profile NUMERICALLY (typed min/max, then an
         # engine-neutral rendering: ints plain cast, doubles fixed
         # %.6f after ROUND(,6)+0.0) — lexicographic min/max of
         # stringified numbers was both wrong and engine-unstable
         # (Spark 1.0E-4 vs DuckDB 0.0001 — the r04 hash miss)
-        "ev_profile": """
+        ("ev_profile", _q_ev_profile, """
             SELECT 'event_id' AS "column",
                    CAST(COUNT(*) AS BIGINT) AS n_rows,
                    CAST(SUM(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END)
@@ -1797,14 +1301,14 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT),
                    COUNT(DISTINCT props),
                    MIN(props), MAX(props)
-            FROM events""",
+            FROM events"""),
         # exact COUNT(DISTINCT) oracle for the HLL++ path: on the gate
         # corpus these columns' cardinalities (user_id 150, event_type
         # 5) sit in HLL++'s deterministic-exact linear-counting range
         # at rsd=0.005 — same trick as ref_distinct_contexts_hll, so
         # the hash gate is a true pass/fail, not a tolerance (props is
         # excluded: 100 distinct estimates as 99 at this precision)
-        "ev_profile_approx": """
+        ("ev_profile_approx", _q_ev_profile_approx, """
             SELECT 'user_id' AS "column",
                    CAST(COUNT(*) AS BIGINT) AS n_rows,
                    CAST(SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END)
@@ -1819,166 +1323,15 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT),
                    COUNT(DISTINCT event_type),
                    MIN(event_type), MAX(event_type)
-            FROM events""",
-        "kg_fk_check": """
-            SELECT 'lineitem_orderkey_fk' AS "constraint",
-                   CAST((SELECT COUNT(*) FROM lineitem l
-                         WHERE l.l_orderkey IS NULL OR NOT EXISTS
-                             (SELECT 1 FROM orders o
-                              WHERE o.o_orderkey = l.l_orderkey))
-                        AS BIGINT) AS n_violations
-            UNION ALL
-            SELECT 'orders_custkey_fk',
-                   CAST((SELECT COUNT(*) FROM orders o
-                         WHERE o.o_custkey IS NULL OR NOT EXISTS
-                             (SELECT 1 FROM customer c
-                              WHERE c.c_custkey = o.o_custkey))
-                        AS BIGINT)
-            UNION ALL
-            SELECT 'lineitem_orderpart_unique',
-                   CAST((SELECT COALESCE(SUM(c), 0) FROM
-                             (SELECT COUNT(*) AS c FROM lineitem
-                              GROUP BY l_orderkey, l_partkey
-                              HAVING COUNT(*) > 1))
-                        AS BIGINT)""",
-        "ev_moving_avg": """
-            SELECT user_id, event_id, ts,
-                   ROUND(AVG(value) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6)
-                       AS mavg
-            FROM events""",
-        "ev_hopping": """
-            WITH ev AS (SELECT value,
-                               -- floor, not CAST: DuckDB's cast ROUNDS,
-                               -- pushing a .5+ fractional-second event
-                               -- across a slide boundary Spark keeps
-                               CAST(floor(epoch(ts)) AS BIGINT) AS e
-                        FROM events),
-            x AS (SELECT value,
-                         unnest([make_timestamp((e - e % 300 - 300)
-                                                * 1000000),
-                                 make_timestamp((e - e % 300)
-                                                * 1000000)]) AS ws
-                  FROM ev)
-            SELECT ws AS window_start,
-                   CAST(COUNT(*) AS BIGINT) AS n_events,
-                   ROUND(SUM(value), 4) AS total
-            FROM x GROUP BY ws""",
-        "kg_upsert": f"""
-            WITH ex AS ({EDGES_SQL}),
-            upd AS (SELECT '<o' || CAST(l_orderkey AS VARCHAR) || '>'
-                               AS subject,
-                           '<contains>' AS predicate,
-                           CASE WHEN l_partkey % 7 = 0
-                                THEN '_:p' || CAST(l_partkey AS VARCHAR)
-                                ELSE '<p' || CAST(l_partkey AS VARCHAR)
-                                     || '>' END AS object,
-                           '<upd>' AS context
-                    FROM lineitem WHERE l_orderkey % 5 = 0),
-            nw AS (SELECT '<p' || CAST(p_partkey AS VARCHAR) || '>'
-                              AS subject,
-                          '<exists>' AS predicate,
-                          'true' AS object,
-                          '' AS context
-                   FROM part WHERE p_partkey % 100 = 0),
-            tagged AS (SELECT *, 0 AS pri FROM upd
-                       UNION ALL SELECT *, 0 FROM nw
-                       UNION ALL SELECT *, 1 FROM ex),
-            r AS (SELECT *, ROW_NUMBER() OVER (
-                      PARTITION BY subject, predicate, object
-                      ORDER BY pri, context) AS rk
-                  FROM tagged)
-            SELECT subject, predicate, object, context
-            FROM r WHERE rk = 1""",
-        "kg_adamic_adar": """
-            WITH e AS (SELECT DISTINCT l_partkey AS b, l_orderkey AS i
-                       FROM lineitem),
-            kept AS (SELECT b, i FROM
-                         (SELECT b, i, COUNT(*) OVER (PARTITION BY b) AS sz
-                          FROM e)
-                     WHERE sz <= 40),
-            deg AS (SELECT b, COUNT(*) AS d FROM kept GROUP BY b),
-            wt AS (SELECT k.b, k.i, 1.0 / ln(d.d) AS w
-                   FROM kept k JOIN deg d USING (b))
-            SELECT a.i AS node_a, c.i AS node_b,
-                   ROUND(SUM(a.w), 6) AS aa_score
-            FROM wt a JOIN wt c ON a.b = c.b AND a.i < c.i
-            GROUP BY a.i, c.i
-            HAVING ROUND(SUM(a.w), 6) >= 0.5""",
-        "doc_postings": """
-            WITH tok AS (SELECT doc_id,
-                                unnest(string_split(text, ' ')) AS term,
-                                generate_subscripts(
-                                    string_split(text, ' '), 1) - 1 AS pos
-                         FROM documents),
-            pl AS (SELECT term, doc_id,
-                          CAST(COUNT(*) AS BIGINT) AS tf,
-                          string_agg(CAST(pos AS VARCHAR), ','
-                                     ORDER BY pos) AS positions
-                   FROM tok GROUP BY term, doc_id)
-            SELECT term, doc_id, tf, positions FROM
-                (SELECT *, COUNT(*) OVER (PARTITION BY term) AS df FROM pl)
-            WHERE df >= 5""",
-        "kg_eval_pr": f"""{tx},
-            gold AS (SELECT DISTINCT
-                   split_part(text, ' ', 1) AS subj,
-                   CASE WHEN text LIKE '% uses %' THEN 'uses'
-                        ELSE 'met_with' END AS pred,
-                   CASE WHEN text LIKE '% uses %'
-                        THEN substr(text, strpos(text, ' uses ') + 6,
-                                    length(text) - strpos(text, ' uses ') - 6)
-                        ELSE substr(text, strpos(text, ' met with ') + 10,
-                                    length(text) - strpos(text, ' met with ') - 10)
-                   END AS obj,
-                   conv_id, turn_idx
-            FROM tx),
-            gote AS (SELECT DISTINCT
-                   split_part(text, ' ', 1) AS subj,
-                   CASE WHEN text LIKE '% uses %' THEN 'uses'
-                        ELSE 'met_with' END AS pred,
-                   CASE WHEN text LIKE '% uses %'
-                        THEN substr(text, strpos(text, ' uses ') + 6,
-                                    length(text) - strpos(text, ' uses ') - 6)
-                        ELSE substr(text, strpos(text, ' met with ') + 10,
-                                    length(text) - strpos(text, ' met with ') - 10)
-                   END AS obj,
-                   conv_id, turn_idx
-            FROM tx WHERE turn_idx % 2 = 0),
-            synth AS (SELECT DISTINCT conv_id AS subj, '_synthetic' AS pred,
-                             'x' AS obj, conv_id, CAST(-1 AS INTEGER) AS turn_idx
-                      FROM tx),
-            got AS (SELECT * FROM gote UNION SELECT * FROM synth),
-            counts AS (SELECT
-                (SELECT COUNT(*) FROM (SELECT * FROM got INTERSECT
-                                       SELECT * FROM gold)) AS tp,
-                (SELECT COUNT(*) FROM (SELECT * FROM got EXCEPT
-                                       SELECT * FROM gold)) AS fp,
-                (SELECT COUNT(*) FROM (SELECT * FROM gold EXCEPT
-                                       SELECT * FROM got)) AS fn)
-            SELECT CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-                   CAST(fn AS BIGINT) AS fn,
-                   ROUND(tp / (tp + fp), 6) AS precision,
-                   ROUND(tp / (tp + fn), 6) AS recall,
-                   ROUND(2.0 * (tp / (tp + fp)) * (tp / (tp + fn))
-                         / (tp / (tp + fp) + tp / (tp + fn)), 6) AS f1
-            FROM counts""",
-        "stream_anomaly": """
-            WITH pr AS (SELECT event_id, user_id, value,
-                               COUNT(value) OVER w AS n_prior,
-                               AVG(value) OVER w AS m,
-                               STDDEV_SAMP(value) OVER w AS s
-                        FROM events
-                        WINDOW w AS (PARTITION BY user_id
-                                     ORDER BY ts, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                              AND 1 PRECEDING))
-            SELECT event_id, user_id, value,
-                   ROUND((value - m) / s, 6) AS z,
-                   CAST(n_prior AS BIGINT) AS n_prior
-            FROM pr
-            WHERE n_prior >= 2 AND s > 0 AND ABS((value - m) / s) > 2""",
-        "doc_dsir": """
+            FROM events"""),
+
+        # 3-11: the nine stale-signal queries the r4 verdict flagged (8
+        # never-graded late-r4 ops + stream_sessionize, whose green
+        # predated its NULL-safe state fix)
+        ("emb_pq_topk", D._q_emb_pq_topk,
+         D._pq_topk_sql(m=8, n_codes=64, n_clusters=auto_nlist(n), nprobe=4)),
+        ("emb_recall_at_k", D._q_emb_recall, D._recall_sql(lsh_topk, brute_topk, 3)),
+        ("doc_dsir", _q_doc_dsir, """
             WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS tk
                        FROM documents),
             bg AS (SELECT doc_id, source,
@@ -2010,47 +1363,8 @@ def oracle_sql() -> dict[str, str]:
                    CROSS JOIN tvocab tv)
             SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
                    ROUND(AVG(lr), 6) AS dsir_weight
-            FROM sc GROUP BY doc_id""",
-        "kg_ontology_stats": f"""{trips}
-            SELECT pred,
-                   COUNT(*) AS n_triples,
-                   COUNT(DISTINCT subj) AS n_subjects,
-                   COUNT(DISTINCT obj) AS n_objects,
-                   ROUND(COUNT(*) * 1.0 / COUNT(DISTINCT subj), 6)
-                       AS avg_fanout
-            FROM triples GROUP BY pred ORDER BY pred""",
-        "kg_type_infer": f"""{trips},
-            counted AS (SELECT subj, pred, COUNT(*) AS n_evidence
-                        FROM triples GROUP BY subj, pred),
-            ranked AS (SELECT subj, pred, n_evidence,
-                              ROW_NUMBER() OVER (PARTITION BY subj
-                                  ORDER BY n_evidence DESC, pred ASC) AS rk
-                       FROM counted)
-            SELECT subj AS entity, pred AS inferred_type, n_evidence
-            FROM ranked WHERE rk = 1""",
-        "kg_conflict_resolve": f"""{trips},
-            ranked AS (SELECT subj, pred, obj,
-                              ROW_NUMBER() OVER (PARTITION BY subj, pred
-                                  ORDER BY turn_idx DESC, conv_id DESC,
-                                           obj ASC) AS rk,
-                              CAST(COUNT(DISTINCT obj) OVER (
-                                  PARTITION BY subj, pred) AS INTEGER)
-                                  AS n_conflicting
-                       FROM triples)
-            SELECT subj, pred, obj AS obj_resolved, n_conflicting
-            FROM ranked WHERE rk = 1""",
-        "kg_entity_cooccur": f"""{trips},
-            ents AS (SELECT conv_id, subj AS entity FROM triples
-                     UNION ALL
-                     SELECT conv_id, obj AS entity FROM triples),
-            items AS (SELECT DISTINCT conv_id, entity FROM ents)
-            SELECT a.entity AS item_a, b.entity AS item_b,
-                   CAST(COUNT(*) AS BIGINT) AS n_baskets
-            FROM items a JOIN items b
-              ON a.conv_id = b.conv_id AND a.entity < b.entity
-            GROUP BY a.entity, b.entity
-            HAVING COUNT(*) >= 2""",
-        "doc_winnow_fingerprints": """
+            FROM sc GROUP BY doc_id"""),
+        ("doc_winnow_fingerprints", _q_doc_winnow, """
             WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk
                        FROM documents),
             pos AS (SELECT doc_id, tk,
@@ -2064,8 +1378,9 @@ def oracle_sql() -> dict[str, str]:
                                          ROWS BETWEEN 3 PRECEDING
                                                   AND CURRENT ROW) AS fp
                      FROM grams)
-            SELECT DISTINCT doc_id, fp FROM wins WHERE i >= 4""",
-        "kg_temporal_triples": f"""{trips},
+            SELECT DISTINCT doc_id, fp FROM wins WHERE i >= 4"""),
+        ("doc_winnow_near_dup", D._q_winnow_near_dup, D.WINNOW_NEAR_DUP_SQL),
+        ("kg_temporal_triples", _q_kg_temporal_triples, f"""{_TRIPLES_CTE},
             marked AS (SELECT subj, pred, obj, turn_idx, conv_id,
                               lag(obj) OVER w AS prev_obj
                        FROM triples
@@ -2080,142 +1395,34 @@ def oracle_sql() -> dict[str, str]:
                    lead(turn_idx) OVER w2 AS valid_to
             FROM changes
             WINDOW w2 AS (PARTITION BY subj, pred
-                          ORDER BY turn_idx ASC, conv_id ASC, obj ASC)""",
-        "kg_two_hop_reach": f"""{e}
-            SELECT l.subject AS src,
-                   COUNT(DISTINCT r.object) AS n_two_hop
-            FROM edges l JOIN edges r ON l.object = r.subject
-            GROUP BY l.subject""",
-        "doc_heavy_hitters": """
-            WITH tok AS (SELECT DISTINCT doc_id, term FROM (
-                     SELECT doc_id,
-                            unnest(string_split(text, ' ')) AS term
-                     FROM documents)),
-            dfreq AS (SELECT term, COUNT(*) AS df FROM tok GROUP BY term),
-            ranked AS (SELECT term, df,
-                              ROW_NUMBER() OVER (ORDER BY df DESC,
-                                                 term ASC) AS rk
-                       FROM dfreq)
-            SELECT term, df FROM ranked WHERE rk <= 20""",
-        "ev_anomaly": """
-            SELECT event_id, user_id, value, z FROM (
-              SELECT event_id, user_id, value,
-                     ROUND((value - AVG(value) OVER w)
-                           / STDDEV_SAMP(value) OVER w, 6) AS z
-              FROM events WINDOW w AS (PARTITION BY user_id))
-            WHERE ABS(z) > 2""",
-        "kg_khop": f"""WITH RECURSIVE edges AS ({EDGES_SQL}),
-            eg AS (SELECT DISTINCT subject AS s, object AS n FROM edges),
-            reach(root, node, hops) AS (
-                SELECT eg.s, eg.n, 1 FROM eg
-                WHERE starts_with(eg.s, '_:c')
-                UNION
-                SELECT r.root, eg.n, r.hops + 1
-                FROM reach r JOIN eg ON eg.s = r.node
-                WHERE r.hops < 3)
-            SELECT root, node, CAST(MIN(hops) AS INTEGER) AS hops
-            FROM reach
-            WHERE root <> node
-            GROUP BY root, node""",
-        "ref_distinct_subjects": f"""{e}
-            SELECT CAST(COUNT(DISTINCT subject) AS BIGINT) AS n_distinct_subjects
-            FROM edges""",
-        "ref_outdegree_histogram": f"""{e},
-            deg AS (SELECT subject, CAST(COUNT(*) AS BIGINT) AS degree
-                    FROM edges GROUP BY subject)
-            SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
-            FROM deg GROUP BY degree""",
-        "ref_indegree_histogram": f"""{e},
-            deg AS (SELECT object, CAST(COUNT(*) AS BIGINT) AS degree
-                    FROM edges GROUP BY object)
-            SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
-            FROM deg GROUP BY degree""",
-        "ref_topk_outdegree": f"""{e}
-            SELECT subject AS node, CAST(COUNT(*) AS BIGINT) AS degree
-            FROM edges GROUP BY subject
-            ORDER BY degree DESC, node DESC LIMIT 10""",
-        "ref_percentages": f"""{e}
-            SELECT CAST(SUM(CASE WHEN substr(subject, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_subject,
-                   CAST(SUM(CASE WHEN substr(object, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_object,
-                   CAST(SUM(CASE WHEN context = '' THEN 1 ELSE 0 END) AS BIGINT) AS no_context,
-                   CAST(COUNT(*) AS BIGINT) AS total
-            FROM edges""",
-        "ref_distinct_contexts": f"""{e}
-            SELECT subject, predicate, object,
-                   CAST(COUNT(DISTINCT context) AS BIGINT) AS n_contexts
-            FROM edges GROUP BY subject, predicate, object""",
-        "ref_distinct_spo_counts": f"""{e}
-            SELECT CAST(COUNT(DISTINCT subject) AS BIGINT)
-                       AS n_distinct_subjects,
-                   CAST(COUNT(DISTINCT predicate) AS BIGINT)
-                       AS n_distinct_predicates,
-                   CAST(COUNT(DISTINCT object) AS BIGINT)
-                       AS n_distinct_objects
-            FROM edges""",
-        "ref_distinct_contexts_salted": f"""{e}
-            SELECT subject, predicate, object,
-                   CAST(COUNT(DISTINCT context) AS BIGINT) AS n_contexts
-            FROM edges GROUP BY subject, predicate, object""",
-        # HLL++ is deterministic-exact at the gate's tiny per-triple
-        # cardinalities, so the exact-count SQL is its oracle too
-        "ref_distinct_contexts_hll": f"""{e}
-            SELECT subject, predicate, object,
-                   CAST(COUNT(DISTINCT context) AS BIGINT) AS n_contexts
-            FROM edges GROUP BY subject, predicate, object""",
-        "ref_outdegree_histogram_salted": f"""{e},
-            deg AS (SELECT subject, CAST(COUNT(*) AS BIGINT) AS degree
-                    FROM edges GROUP BY subject)
-            SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
-            FROM deg GROUP BY degree""",
-        "ref_top_contexts": f"""{e}
-            SELECT subject, predicate, object,
-                   CAST(COUNT(DISTINCT context) AS BIGINT) AS n_contexts
-            FROM edges GROUP BY subject, predicate, object
-            ORDER BY n_contexts DESC, subject DESC, predicate DESC, object DESC
-            LIMIT 10""",
-        "ref_dedup": f"""{e}
-            SELECT DISTINCT subject, predicate, object FROM edges""",
-        "ref_percentages_compat": f"""{e}
-            SELECT CAST(SUM(CASE WHEN substr(subject, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_subject,
-                   CAST(SUM(CASE WHEN substr(subject, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_object,
-                   CAST(SUM(CASE WHEN context = '' THEN 1 ELSE 0 END) AS BIGINT) AS no_context,
-                   CAST(COUNT(*) AS BIGINT) AS total
-            FROM edges""",
-        # valid quads survive serialize→sink→scan→regex-parse unchanged,
-        # so the sink roundtrips share the plain-percentages oracle
-        "ref_text_sink_roundtrip": f"""{e}
-            SELECT CAST(SUM(CASE WHEN substr(subject, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_subject,
-                   CAST(SUM(CASE WHEN substr(object, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_object,
-                   CAST(SUM(CASE WHEN context = '' THEN 1 ELSE 0 END) AS BIGINT) AS no_context,
-                   CAST(COUNT(*) AS BIGINT) AS total
-            FROM edges""",
-        "ref_gzip_sink_roundtrip": f"""{e}
-            SELECT CAST(SUM(CASE WHEN substr(subject, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_subject,
-                   CAST(SUM(CASE WHEN substr(object, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_object,
-                   CAST(SUM(CASE WHEN context = '' THEN 1 ELSE 0 END) AS BIGINT) AS no_context,
-                   CAST(COUNT(*) AS BIGINT) AS total
-            FROM edges""",
-        # valid quads survive serialize→regex-parse unchanged, so the
-        # oracle is the plain percentages over the un-roundtripped edges
-        "ref_parse_roundtrip": f"""{e}
-            SELECT CAST(SUM(CASE WHEN substr(subject, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_subject,
-                   CAST(SUM(CASE WHEN substr(object, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_object,
-                   CAST(SUM(CASE WHEN context = '' THEN 1 ELSE 0 END) AS BIGINT) AS no_context,
-                   CAST(COUNT(*) AS BIGINT) AS total
-            FROM edges""",
-        "stream_extract_triples": f"""{tx}
-            SELECT split_part(text, ' ', 1) AS subj,
-                   CASE WHEN text LIKE '% uses %' THEN 'uses'
-                        ELSE 'met_with' END AS pred,
-                   CASE WHEN text LIKE '% uses %'
-                        THEN substr(text, strpos(text, ' uses ') + 6,
-                                    length(text) - strpos(text, ' uses ') - 6)
-                        ELSE substr(text, strpos(text, ' met with ') + 10,
-                                    length(text) - strpos(text, ' met with ') - 10)
-                   END AS obj,
-                   conv_id, turn_idx
-            FROM tx""",
-        "stream_sessionize": f"""{tx},
+                          ORDER BY turn_idx ASC, conv_id ASC, obj ASC)"""),
+        ("kg_entity_cooccur", _q_kg_entity_cooccur, f"""{_TRIPLES_CTE},
+            ents AS (SELECT conv_id, subj AS entity FROM triples
+                     UNION ALL
+                     SELECT conv_id, obj AS entity FROM triples),
+            items AS (SELECT DISTINCT conv_id, entity FROM ents)
+            SELECT a.entity AS item_a, b.entity AS item_b,
+                   CAST(COUNT(*) AS BIGINT) AS n_baskets
+            FROM items a JOIN items b
+              ON a.conv_id = b.conv_id AND a.entity < b.entity
+            GROUP BY a.entity, b.entity
+            HAVING COUNT(*) >= 2"""),
+        ("stream_anomaly", _q_stream_anomaly, """
+            WITH pr AS (SELECT event_id, user_id, value,
+                               COUNT(value) OVER w AS n_prior,
+                               AVG(value) OVER w AS m,
+                               STDDEV_SAMP(value) OVER w AS s
+                        FROM events
+                        WINDOW w AS (PARTITION BY user_id
+                                     ORDER BY ts, event_id
+                                     ROWS BETWEEN UNBOUNDED PRECEDING
+                                              AND 1 PRECEDING))
+            SELECT event_id, user_id, value,
+                   ROUND((value - m) / s, 6) AS z,
+                   CAST(n_prior AS BIGINT) AS n_prior
+            FROM pr
+            WHERE n_prior >= 2 AND s > 0 AND ABS((value - m) / s) > 2"""),
+        ("stream_sessionize", _q_stream_sessionize, f"""{_TX_CTE},
             g AS (
               SELECT conv_id, ts,
                      CASE WHEN lag(ts) OVER w IS NULL
@@ -2234,37 +1441,71 @@ def oracle_sql() -> dict[str, str]:
                    CAST(COUNT(*) AS BIGINT) AS n_turns,
                    MIN(ts) AS start_ts,
                    MAX(ts) AS end_ts
-            FROM s GROUP BY conv_id, session_idx""",
-        "stream_dedup": f"""{tx}
-            SELECT conv_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_turns,
-                   CAST(COUNT(DISTINCT turn_idx) AS BIGINT)
-                       AS n_distinct_turns
-            FROM tx GROUP BY conv_id""",
-        "stream_join": f"""{tx}
-            SELECT u.conv_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                   CAST(COUNT(DISTINCT u.turn_idx) AS BIGINT)
-                       AS n_user_turns,
-                   CAST(COUNT(DISTINCT a.turn_idx) AS BIGINT)
-                       AS n_asst_turns
-            FROM tx u
-            JOIN tx a ON a.conv_id = u.conv_id
-                     AND u.role = 'user' AND a.role = 'assistant'
-                     AND a.ts >= u.ts
-                     AND a.ts <= u.ts + INTERVAL 1800 SECOND
-            GROUP BY u.conv_id""",
-        "stream_enrich": f"""{tx},
-            dim AS (SELECT DISTINCT event_type AS tool,
-                           CASE WHEN length(event_type) > 5
-                                THEN 'long' ELSE 'short' END AS tool_category
-                    FROM events)
-            SELECT d.tool_category,
-                   CAST(COUNT(*) AS BIGINT) AS n_turns,
-                   CAST(COUNT(DISTINCT t.tool) AS BIGINT) AS n_tools
-            FROM tx t LEFT JOIN dim d USING (tool)
-            GROUP BY d.tool_category""",
-        "stream_windowed_counts": f"""{tx}
+            FROM s GROUP BY conv_id, session_idx"""),
+
+        # 12-29: every query through a module touched in r5 (quality,
+        # materialize, graph, similarity, streaming) re-grades
+        ("kg_upsert", _q_kg_upsert, f"""
+            WITH ex AS ({EDGES_SQL}),
+            upd AS (SELECT '<o' || CAST(l_orderkey AS VARCHAR) || '>'
+                               AS subject,
+                           '<contains>' AS predicate,
+                           CASE WHEN l_partkey % 7 = 0
+                                THEN '_:p' || CAST(l_partkey AS VARCHAR)
+                                ELSE '<p' || CAST(l_partkey AS VARCHAR)
+                                     || '>' END AS object,
+                           '<upd>' AS context
+                    FROM lineitem WHERE l_orderkey % 5 = 0),
+            nw AS (SELECT '<p' || CAST(p_partkey AS VARCHAR) || '>'
+                              AS subject,
+                          '<exists>' AS predicate,
+                          'true' AS object,
+                          '' AS context
+                   FROM part WHERE p_partkey % 100 = 0),
+            tagged AS (SELECT *, 0 AS pri FROM upd
+                       UNION ALL SELECT *, 0 FROM nw
+                       UNION ALL SELECT *, 1 FROM ex),
+            r AS (SELECT *, ROW_NUMBER() OVER (
+                      PARTITION BY subject, predicate, object
+                      ORDER BY pri, context) AS rk
+                  FROM tagged)
+            SELECT subject, predicate, object, context
+            FROM r WHERE rk = 1"""),
+        ("kg_pagerank", D._q_kg_pagerank, D._pagerank_sql()),
+        ("kg_fk_check", _q_kg_fk_check, """
+            SELECT 'lineitem_orderkey_fk' AS "constraint",
+                   CAST((SELECT COUNT(*) FROM lineitem l
+                         WHERE l.l_orderkey IS NULL OR NOT EXISTS
+                             (SELECT 1 FROM orders o
+                              WHERE o.o_orderkey = l.l_orderkey))
+                        AS BIGINT) AS n_violations
+            UNION ALL
+            SELECT 'orders_custkey_fk',
+                   CAST((SELECT COUNT(*) FROM orders o
+                         WHERE o.o_custkey IS NULL OR NOT EXISTS
+                             (SELECT 1 FROM customer c
+                              WHERE c.c_custkey = o.o_custkey))
+                        AS BIGINT)
+            UNION ALL
+            SELECT 'lineitem_orderpart_unique',
+                   CAST((SELECT COALESCE(SUM(c), 0) FROM
+                             (SELECT COUNT(*) AS c FROM lineitem
+                              GROUP BY l_orderkey, l_partkey
+                              HAVING COUNT(*) > 1))
+                        AS BIGINT)"""),
+        ("emb_lsh_topk", D._q_emb_lsh_topk, lsh_topk),
+        ("emb_ivf_topk", D._q_emb_ivf_topk, D._ivf_topk_sql(n_clusters=auto_nlist(n))),
+        ("emb_cosine_near_dup", D._q_emb_near_dup,
+         D._lsh_near_dup_sql(bits=auto_lsh_bits(n))),
+        ("emb_semantic_dedup", D._q_emb_semdedup,
+         D._ivf_semdedup_sql(n_clusters=auto_semdedup_nlist(n))),
+        ("emb_cluster_sample", D._q_emb_cluster_sample,
+         D._ivf_cluster_sample_sql(n_clusters=auto_nlist(n))),
+        ("emb_cosine_near_dup_exact", D._q_emb_near_dup_exact,
+         D.EMB_NEAR_DUP_EXACT_SQL),
+        ("emb_brute_force_topk", D._q_emb_brute_topk, brute_topk),
+        ("stream_extract_triples", _q_stream_extract, _EXTRACT_TRIPLES_SQL),
+        ("stream_windowed_counts", _q_stream_windowed_counts, f"""{_TX_CTE}
             SELECT make_timestamp(CAST(floor(epoch(ts) / 600) * 600
                                        AS BIGINT) * 1000000)
                        AS window_start,
@@ -2275,8 +1516,8 @@ def oracle_sql() -> dict[str, str]:
                    CAST(COUNT(*) AS BIGINT) AS n_turns,
                    CAST(COUNT(DISTINCT role) AS BIGINT) AS n_roles
             FROM tx
-            GROUP BY 1, 2, 3""",
-        "stream_hopping": f"""{tx},
+            GROUP BY 1, 2, 3"""),
+        ("stream_hopping", _q_stream_hopping, f"""{_TX_CTE},
             hop AS (SELECT conv_id, role,
                            unnest([CAST(floor(epoch(ts)) AS BIGINT)
                                    - CAST(floor(epoch(ts)) AS BIGINT) % 300
@@ -2290,13 +1531,586 @@ def oracle_sql() -> dict[str, str]:
                    conv_id,
                    CAST(COUNT(*) AS BIGINT) AS n_turns,
                    CAST(COUNT(DISTINCT role) AS BIGINT) AS n_roles
-            FROM hop GROUP BY 1, 2, 3""",
-        "kg_turn_integrity": f"""{tx}
+            FROM hop GROUP BY 1, 2, 3"""),
+        ("stream_dedup", _q_stream_dedup, f"""{_TX_CTE}
+            SELECT conv_id,
+                   CAST(COUNT(*) AS BIGINT) AS n_turns,
+                   CAST(COUNT(DISTINCT turn_idx) AS BIGINT)
+                       AS n_distinct_turns
+            FROM tx GROUP BY conv_id"""),
+        ("stream_enrich", _q_stream_enrich, f"""{_TX_CTE},
+            dim AS (SELECT DISTINCT event_type AS tool,
+                           CASE WHEN length(event_type) > 5
+                                THEN 'long' ELSE 'short' END AS tool_category
+                    FROM events)
+            SELECT d.tool_category,
+                   CAST(COUNT(*) AS BIGINT) AS n_turns,
+                   CAST(COUNT(DISTINCT t.tool) AS BIGINT) AS n_tools
+            FROM tx t LEFT JOIN dim d USING (tool)
+            GROUP BY d.tool_category"""),
+        ("stream_join", _q_stream_join, f"""{_TX_CTE}
+            SELECT u.conv_id,
+                   CAST(COUNT(*) AS BIGINT) AS n_pairs,
+                   CAST(COUNT(DISTINCT u.turn_idx) AS BIGINT)
+                       AS n_user_turns,
+                   CAST(COUNT(DISTINCT a.turn_idx) AS BIGINT)
+                       AS n_asst_turns
+            FROM tx u
+            JOIN tx a ON a.conv_id = u.conv_id
+                     AND u.role = 'user' AND a.role = 'assistant'
+                     AND a.ts >= u.ts
+                     AND a.ts <= u.ts + INTERVAL 1800 SECOND
+            GROUP BY u.conv_id"""),
+        ("kg_khop", _q_kg_khop, f"""WITH RECURSIVE edges AS ({EDGES_SQL}),
+            eg AS (SELECT DISTINCT subject AS s, object AS n FROM edges),
+            reach(root, node, hops) AS (
+                SELECT eg.s, eg.n, 1 FROM eg
+                WHERE starts_with(eg.s, '_:c')
+                UNION
+                SELECT r.root, eg.n, r.hops + 1
+                FROM reach r JOIN eg ON eg.s = r.node
+                WHERE r.hops < 3)
+            SELECT root, node, CAST(MIN(hops) AS INTEGER) AS hops
+            FROM reach
+            WHERE root <> node
+            GROUP BY root, node"""),
+        ("kg_triangles", _q_kg_triangles, """
+            WITH items AS (SELECT DISTINCT l_orderkey AS b,
+                                           l_partkey AS i
+                           FROM lineitem),
+            pairs AS (SELECT a.i AS u, c.i AS v
+                      FROM items a JOIN items c ON a.b = c.b AND a.i < c.i
+                      GROUP BY a.i, c.i HAVING COUNT(*) >= 2),
+            tri AS (SELECT e1.u AS u, e1.v AS v, e2.v AS w
+                    FROM pairs e1
+                    JOIN pairs e2 ON e2.u = e1.u AND e2.v > e1.v
+                    JOIN pairs e3 ON e3.u = e1.v AND e3.v = e2.v),
+            nodes AS (SELECT u AS node FROM tri
+                      UNION ALL SELECT v FROM tri
+                      UNION ALL SELECT w FROM tri)
+            SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
+            FROM nodes GROUP BY node"""),
+
+        # 30-37: never graded, new in r5: BGP pattern queries incl. the
+        # quad/GRAPH form (btd/bgp.py), CONSTRUCT + fixpoint inference
+        # (btd/infer.py)
+        ("kg_bgp", _q_kg_bgp, f"""{_TRIPLES_CTE}
+            SELECT DISTINCT a.subj AS u, b.obj AS tool, c.obj AS crew
+            FROM triples a
+            JOIN triples b ON b.subj = a.subj
+            JOIN triples c ON c.subj = a.subj
+            WHERE a.pred = 'uses' AND a.obj = 'click'
+              AND b.pred = 'uses' AND c.pred = 'met_with'"""),
+        ("kg_bgp_optional", _q_kg_bgp_optional, f"""{_TRIPLES_CTE}
+            SELECT DISTINCT a.subj AS u, a.obj AS crew,
+                   b.obj AS tool, c.obj AS loc
+            FROM triples a
+            LEFT JOIN triples b ON b.subj = a.subj AND b.pred = 'uses'
+            LEFT JOIN triples c ON c.subj = a.obj AND c.pred = 'located_in'
+            WHERE a.pred = 'met_with'"""),
+        ("ref_bgp_chain", _q_ref_bgp_chain, f"""{_EDGES_CTE}
+            SELECT DISTINCT a.subject AS c, a.object AS o, b.object AS p
+            FROM edges a
+            JOIN edges b ON b.subject = a.object
+            WHERE a.predicate = '<ordered>'
+              AND b.predicate = '<contains>'"""),
+        ("ref_bgp_minus", _q_ref_bgp_minus, f"""{_EDGES_CTE}
+            SELECT DISTINCT a.subject AS c, a.object AS o
+            FROM edges a
+            WHERE a.predicate = '<ordered>'
+              AND NOT EXISTS (SELECT 1 FROM edges b
+                              WHERE b.predicate = '<contains>'
+                                AND b.subject = a.object)"""),
+        ("ref_bgp_path", _q_ref_bgp_path, f"""WITH RECURSIVE edges AS ({EDGES_SQL}),
+            reach AS (
+                SELECT subject AS s, object AS t, 1 AS hops FROM edges
+                UNION
+                SELECT r.s, x.object, r.hops + 1
+                FROM reach r JOIN edges x ON x.subject = r.t
+                WHERE r.hops < 2
+            )
+            SELECT DISTINCT s, t FROM reach"""),
+        ("ref_construct", _q_ref_construct, f"""{_EDGES_CTE}
+            SELECT DISTINCT a.subject AS subject,
+                   '<bought>' AS predicate, b.object AS object
+            FROM edges a
+            JOIN edges b ON b.subject = a.object
+            WHERE a.predicate = '<ordered>'
+              AND b.predicate = '<contains>'"""),
+        ("kg_infer", _q_kg_infer, f"""{_TRIPLES_CTE},
+            base AS (SELECT DISTINCT subj, pred, obj FROM triples),
+            inter AS (SELECT DISTINCT subj,
+                             'interacts_with' AS pred, obj
+                      FROM base WHERE pred IN ('uses', 'met_with')),
+            touched AS (SELECT DISTINCT obj AS subj,
+                               'touched_by' AS pred, subj AS obj
+                        FROM inter)
+            SELECT subj, pred, obj FROM base
+            UNION SELECT subj, pred, obj FROM inter
+            UNION SELECT subj, pred, obj FROM touched"""),
+        ("ref_bgp_graph", _q_ref_bgp_graph, f"""{_EDGES_CTE}
+            SELECT DISTINCT a.subject AS c, a.object AS o,
+                   b.object AS p, b.context AS sup
+            FROM edges a
+            JOIN edges b ON b.subject = a.object
+            WHERE a.predicate = '<ordered>' AND a.context = ''
+              AND b.predicate = '<contains>'"""),
+
+        # 38-58: the oldest r03 greens (code untouched since), refreshed to
+        # current-code rows; the eight from ref_indegree_histogram on sit
+        # just past slot 50 and keep their old rows
+        ("kg_copurchase", _q_kg_copurchase, """
+            WITH items AS (SELECT DISTINCT l_orderkey AS b,
+                                           l_partkey AS i
+                           FROM lineitem)
+            SELECT a.i AS item_a, c.i AS item_b,
+                   CAST(COUNT(*) AS BIGINT) AS n_baskets
+            FROM items a JOIN items c ON a.b = c.b AND a.i < c.i
+            GROUP BY a.i, c.i
+            HAVING COUNT(*) >= 2"""),
+        ("kg_neighbor_jaccard", _q_kg_neighbor_jaccard, """
+            WITH e AS (SELECT DISTINCT l_partkey AS b, l_orderkey AS i
+                       FROM lineitem),
+            kept AS (SELECT b, i FROM
+                         (SELECT b, i, COUNT(*) OVER (PARTITION BY b) AS sz
+                          FROM e)
+                     WHERE sz <= 40),
+            deg AS (SELECT i, COUNT(*) AS d FROM kept GROUP BY i),
+            common AS (SELECT a.i AS na, c.i AS nb, COUNT(*) AS n_common
+                       FROM kept a JOIN kept c ON a.b = c.b AND a.i < c.i
+                       GROUP BY a.i, c.i)
+            SELECT na AS node_a, nb AS node_b,
+                   CAST(n_common AS BIGINT) AS n_common,
+                   ROUND(n_common / (da.d + db.d - n_common), 6) AS jaccard
+            FROM common
+            JOIN deg da ON da.i = na
+            JOIN deg db ON db.i = nb
+            WHERE ROUND(n_common / (da.d + db.d - n_common), 6) >= 0.5"""),
+        ("kg_adamic_adar", _q_kg_adamic_adar, """
+            WITH e AS (SELECT DISTINCT l_partkey AS b, l_orderkey AS i
+                       FROM lineitem),
+            kept AS (SELECT b, i FROM
+                         (SELECT b, i, COUNT(*) OVER (PARTITION BY b) AS sz
+                          FROM e)
+                     WHERE sz <= 40),
+            deg AS (SELECT b, COUNT(*) AS d FROM kept GROUP BY b),
+            wt AS (SELECT k.b, k.i, 1.0 / ln(d.d) AS w
+                   FROM kept k JOIN deg d USING (b))
+            SELECT a.i AS node_a, c.i AS node_b,
+                   ROUND(SUM(a.w), 6) AS aa_score
+            FROM wt a JOIN wt c ON a.b = c.b AND a.i < c.i
+            GROUP BY a.i, c.i
+            HAVING ROUND(SUM(a.w), 6) >= 0.5"""),
+        ("kg_eval_pr", _q_kg_eval_pr, f"""{_TX_CTE},
+            gold AS (SELECT DISTINCT {_TRIPLE_COLS}
+            FROM tx),
+            gote AS (SELECT DISTINCT {_TRIPLE_COLS}
+            FROM tx WHERE turn_idx % 2 = 0),
+            synth AS (SELECT DISTINCT conv_id AS subj, '_synthetic' AS pred,
+                             'x' AS obj, conv_id, CAST(-1 AS INTEGER) AS turn_idx
+                      FROM tx),
+            got AS (SELECT * FROM gote UNION SELECT * FROM synth),
+            counts AS (SELECT
+                (SELECT COUNT(*) FROM (SELECT * FROM got INTERSECT
+                                       SELECT * FROM gold)) AS tp,
+                (SELECT COUNT(*) FROM (SELECT * FROM got EXCEPT
+                                       SELECT * FROM gold)) AS fp,
+                (SELECT COUNT(*) FROM (SELECT * FROM gold EXCEPT
+                                       SELECT * FROM got)) AS fn)
+            SELECT CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
+                   CAST(fn AS BIGINT) AS fn,
+                   ROUND(tp / (tp + fp), 6) AS precision,
+                   ROUND(tp / (tp + fn), 6) AS recall,
+                   ROUND(2.0 * (tp / (tp + fp)) * (tp / (tp + fn))
+                         / (tp / (tp + fp) + tp / (tp + fn)), 6) AS f1
+            FROM counts"""),
+        ("kg_turn_order", _q_kg_turn_order, f"""{_TX_CTE}
+            SELECT conv_id, turn_idx,
+                   CAST(ROW_NUMBER() OVER (PARTITION BY conv_id
+                        ORDER BY turn_idx) AS INTEGER) AS turn_rank,
+                   role, tool, text
+            FROM tx"""),
+        ("kg_extract_triples", _q_kg_extract, _EXTRACT_TRIPLES_SQL),
+        ("kg_extract_windowed", _q_kg_extract_windowed, f"""{_TX_CTE},
+            planted AS (
+              SELECT conv_id, 1000000 AS turn_idx, 'user' AS role,
+                     'It uses beacon.' AS text, 'beacon' AS tool,
+                     MAX(ts) AS ts
+              FROM tx GROUP BY conv_id),
+            allt AS (SELECT * FROM tx UNION ALL SELECT * FROM planted),
+            wt AS (SELECT conv_id, turn_idx, text,
+                          lag(text) OVER (PARTITION BY conv_id
+                                          ORDER BY turn_idx, ts) AS prev
+                   FROM allt)
+            SELECT CASE WHEN text = 'It uses beacon.'
+                        THEN split_part(prev, ' ', 1)
+                        ELSE split_part(text, ' ', 1) END AS subj,
+                   CASE WHEN text LIKE '% uses %' THEN 'uses'
+                        ELSE 'met_with' END AS pred,
+                   CASE WHEN text LIKE '% uses %'
+                        THEN substr(text, strpos(text, ' uses ') + 6,
+                                    length(text) - strpos(text, ' uses ') - 6)
+                        ELSE substr(text, strpos(text, ' met with ') + 10,
+                                    length(text) - strpos(text, ' met with ') - 10)
+                   END AS obj,
+                   conv_id, turn_idx
+            FROM wt"""),
+        ("kg_mentions", _q_kg_mentions, f"""{_TX_CTE}
+            SELECT conv_id, turn_idx, tool AS surface,
+                   CAST(strpos(text, tool) - 1 AS INTEGER) AS start,
+                   CAST(strpos(text, tool) - 1 + length(tool) AS INTEGER) AS "end"
+            FROM tx WHERE text LIKE '% uses %'"""),
+        ("kg_outdegree_histogram", _q_kg_outdegree_hist, """
+            WITH deg AS (SELECT CAST(COUNT(*) AS BIGINT) AS degree
+                         FROM events GROUP BY user_id)
+            SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
+            FROM deg GROUP BY degree"""),
+        ("kg_turn_integrity", _q_kg_turn_integrity, f"""{_TX_CTE}
             SELECT conv_id,
                    CAST(COUNT(*) AS BIGINT) AS n_turns,
                    CAST(COUNT(*) - COUNT(DISTINCT turn_idx) AS BIGINT) AS n_dup_turns,
                    CAST(MIN(turn_idx) AS INTEGER) AS min_turn_idx,
                    CAST(MAX(turn_idx) AS INTEGER) AS max_turn_idx
-            FROM tx GROUP BY conv_id""",
-        **oracle_sql_dataops(),
-    }
+            FROM tx GROUP BY conv_id"""),
+        ("ref_distinct_subjects", _q_distinct, f"""{_EDGES_CTE}
+            SELECT CAST(COUNT(DISTINCT subject) AS BIGINT) AS n_distinct_subjects
+            FROM edges"""),
+        ("ref_distinct_spo_counts", _q_distinct_spo, f"""{_EDGES_CTE}
+            SELECT CAST(COUNT(DISTINCT subject) AS BIGINT)
+                       AS n_distinct_subjects,
+                   CAST(COUNT(DISTINCT predicate) AS BIGINT)
+                       AS n_distinct_predicates,
+                   CAST(COUNT(DISTINCT object) AS BIGINT)
+                       AS n_distinct_objects
+            FROM edges"""),
+        ("ref_outdegree_histogram", _q_outdegree_hist, _OUTDEGREE_HIST_SQL),
+        ("ref_indegree_histogram", _q_indegree_hist, f"""{_EDGES_CTE},
+            deg AS (SELECT object, CAST(COUNT(*) AS BIGINT) AS degree
+                    FROM edges GROUP BY object)
+            SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
+            FROM deg GROUP BY degree"""),
+        ("ref_topk_outdegree", _q_topk_outdegree, f"""{_EDGES_CTE}
+            SELECT subject AS node, CAST(COUNT(*) AS BIGINT) AS degree
+            FROM edges GROUP BY subject
+            ORDER BY degree DESC, node DESC LIMIT 10"""),
+        ("ref_percentages", _q_percentages, _PERCENTAGES_SQL),
+        ("ref_distinct_contexts", _q_distinct_contexts, _DISTINCT_CONTEXTS_SQL),
+        ("ref_distinct_contexts_salted", _q_distinct_contexts_salted,
+         _DISTINCT_CONTEXTS_SQL),
+        # HLL++ is deterministic-exact at the gate's tiny per-triple
+        # cardinalities, so the exact-count SQL is its oracle too
+        ("ref_distinct_contexts_hll", _q_distinct_contexts_hll, _DISTINCT_CONTEXTS_SQL),
+        ("ref_outdegree_histogram_salted", _q_outdegree_hist_salted,
+         _OUTDEGREE_HIST_SQL),
+        ("ref_top_contexts", _q_top_contexts, f"""{_DISTINCT_CONTEXTS_SQL}
+            ORDER BY n_contexts DESC, subject DESC, predicate DESC, object DESC
+            LIMIT 10"""),
+
+        # past the window: the r04-green training-data ops
+        # (btd/dataops/contract.py)
+        ("doc_curation", D._q_curation, D.CURATION_SQL),
+        ("doc_sample", D._q_doc_sample, D.DOC_SAMPLE_SQL),
+        ("doc_exact_dedup", D._q_exact_dedup, D.EXACT_DEDUP_SQL),
+        ("doc_ngram_jaccard", D._q_ngram_jaccard, D.NGRAM_JACCARD_SQL),
+        ("doc_minhash_near_dup", D._q_minhash_near_dup, D.MINHASH_NEAR_DUP_SQL),
+        ("doc_simhash_near_dup", D._q_simhash_near_dup, D._simhash_sql()),
+        ("doc_dedup_groups", D._q_dedup_groups, D.DEDUP_GROUPS_SQL),
+        ("doc_token_stats", D._q_token_stats, D.TOKEN_STATS_SQL),
+        ("doc_quality_scores", D._q_quality, D.QUALITY_SQL),
+        ("doc_language_id", D._q_lang_id, D.LANG_ID_SQL),
+        ("doc_fingerprints", D._q_fingerprints, D.FINGERPRINTS_SQL),
+        ("doc_repetition", D._q_repetition, D.REPETITION_SQL),
+        ("doc_tfidf", D._q_doc_tfidf, D.TFIDF_SQL),
+        ("doc_lm_score", D._q_doc_lm, D.LM_SCORE_SQL),
+        ("doc_media_features", D._q_media_features, D.MEDIA_FEATURES_SQL),
+        ("doc_frame_sample", D._q_frame_sample, D.FRAME_SAMPLE_SQL),
+        ("doc_resize", D._q_resize, D.RESIZE_SQL),
+        ("doc_decontaminate", D._q_decontaminate, D._decontaminate_sql()),
+        ("doc_stratified_sample", D._q_stratified_sample, D.STRATIFIED_SAMPLE_SQL),
+        ("doc_mix", D._q_mix, D._mix_sql()),
+        ("doc_chunk", D._q_chunk, D.CHUNK_SQL),
+        ("doc_scrub_pii", D._q_scrub, D.SCRUB_SQL),
+
+        # r03/r04-green, code untouched: reference extras, KG linking and
+        # schema mining, the ev_* batch suite
+        ("ref_dedup", _q_dedup, f"""{_EDGES_CTE}
+            SELECT DISTINCT subject, predicate, object FROM edges"""),
+        ("ref_percentages_compat", _q_percentages_compat, f"""{_EDGES_CTE}
+            SELECT CAST(SUM(CASE WHEN substr(subject, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_subject,
+                   CAST(SUM(CASE WHEN substr(subject, 1, 1) = '_' THEN 1 ELSE 0 END) AS BIGINT) AS blank_object,
+                   CAST(SUM(CASE WHEN context = '' THEN 1 ELSE 0 END) AS BIGINT) AS no_context,
+                   CAST(COUNT(*) AS BIGINT) AS total
+            FROM edges"""),
+        ("ref_parse_metrics", _q_parse_metrics, f"""{_EDGES_CTE},
+            lines AS (
+              SELECT CASE WHEN context = ''
+                          THEN subject || ' ' || predicate || ' '
+                               || object || ' .'
+                          ELSE subject || ' ' || predicate || ' '
+                               || object || ' ' || context || ' .'
+                     END AS value
+              FROM edges
+              UNION ALL
+              SELECT 'malformed line ' || CAST(r AS VARCHAR)
+              FROM range(50) t(r)
+              UNION ALL
+              SELECT '<s> <p> "v"^^<t> .'
+              UNION ALL
+              SELECT 'garbage <s> <p> <o> . trailing')
+            SELECT CAST(SUM(CASE WHEN regexp_full_match(value, '(<[^>]+>|[a-zA-Z0-9_:]+) (<[^ ]+>) (<[^>]+>|".*"|[a-zA-Z0-9_:]+|"[^>]*>) (?:(<[^>]+>) )?\\.')
+                                 THEN 1 ELSE 0 END) AS BIGINT) AS parsed,
+                   CAST(SUM(CASE WHEN regexp_full_match(value, '(<[^>]+>|[a-zA-Z0-9_:]+) (<[^ ]+>) (<[^>]+>|".*"|[a-zA-Z0-9_:]+|"[^>]*>) (?:(<[^>]+>) )?\\.')
+                                 THEN 0 ELSE 1 END) AS BIGINT) AS dropped
+            FROM lines"""),
+        # valid quads survive serialize→regex-parse unchanged, so the
+        # oracle is the plain percentages over the un-roundtripped edges
+        ("ref_parse_roundtrip", _q_parse_roundtrip, _PERCENTAGES_SQL),
+        # valid quads survive serialize→sink→scan→regex-parse unchanged,
+        # so the sink roundtrips share the plain-percentages oracle
+        ("ref_text_sink_roundtrip", _q_text_sink_roundtrip, _PERCENTAGES_SQL),
+        ("ref_gzip_sink_roundtrip", _q_gzip_sink_roundtrip, _PERCENTAGES_SQL),
+        ("kg_entities", _q_kg_entities, """
+            WITH surf AS (
+                SELECT DISTINCT 'u' || CAST(user_id AS VARCHAR) AS s FROM events
+                UNION
+                SELECT DISTINCT event_type AS s FROM events WHERE event_id % 2 = 0
+                UNION
+                SELECT DISTINCT 'crew ' || event_type AS s FROM events
+                WHERE event_id % 2 = 1)
+            SELECT s AS entity_id,
+                   CASE WHEN s LIKE 'crew %'
+                             AND substr(s, 6) IN (SELECT DISTINCT event_type
+                                                  FROM events WHERE event_id % 2 = 0)
+                        THEN LEAST(s, substr(s, 6))
+                        WHEN s IN (SELECT DISTINCT event_type FROM events
+                                   WHERE event_id % 2 = 1)
+                             AND s IN (SELECT DISTINCT event_type FROM events
+                                       WHERE event_id % 2 = 0)
+                        THEN LEAST(s, 'crew ' || s)
+                        ELSE s END AS canonical_id,
+                   s AS surface
+            FROM surf"""),
+        ("kg_same_as", _q_kg_same_as, """
+            WITH t_even AS (SELECT DISTINCT event_type FROM events
+                            WHERE event_id % 2 = 0),
+                 t_odd AS (SELECT DISTINCT event_type FROM events
+                           WHERE event_id % 2 = 1)
+            SELECT LEAST(e.event_type, 'crew ' || e.event_type) AS id_a,
+                   GREATEST(e.event_type, 'crew ' || e.event_type) AS id_b,
+                   CAST(0.9 AS DOUBLE) AS score
+            FROM t_even e JOIN t_odd o ON e.event_type = o.event_type"""),
+        ("kg_components", _q_kg_components, _COMPONENTS_SQL),
+        ("kg_components_star", _q_kg_components_star, _COMPONENTS_SQL),
+        ("kg_ontology_stats", _q_kg_ontology_stats, f"""{_TRIPLES_CTE}
+            SELECT pred,
+                   COUNT(*) AS n_triples,
+                   COUNT(DISTINCT subj) AS n_subjects,
+                   COUNT(DISTINCT obj) AS n_objects,
+                   ROUND(COUNT(*) * 1.0 / COUNT(DISTINCT subj), 6)
+                       AS avg_fanout
+            FROM triples GROUP BY pred ORDER BY pred"""),
+        ("kg_type_infer", _q_kg_type_infer, f"""{_TRIPLES_CTE},
+            counted AS (SELECT subj, pred, COUNT(*) AS n_evidence
+                        FROM triples GROUP BY subj, pred),
+            ranked AS (SELECT subj, pred, n_evidence,
+                              ROW_NUMBER() OVER (PARTITION BY subj
+                                  ORDER BY n_evidence DESC, pred ASC) AS rk
+                       FROM counted)
+            SELECT subj AS entity, pred AS inferred_type, n_evidence
+            FROM ranked WHERE rk = 1"""),
+        ("kg_conflict_resolve", _q_kg_conflict_resolve, f"""{_TRIPLES_CTE},
+            ranked AS (SELECT subj, pred, obj,
+                              ROW_NUMBER() OVER (PARTITION BY subj, pred
+                                  ORDER BY turn_idx DESC, conv_id DESC,
+                                           obj ASC) AS rk,
+                              CAST(COUNT(DISTINCT obj) OVER (
+                                  PARTITION BY subj, pred) AS INTEGER)
+                                  AS n_conflicting
+                       FROM triples)
+            SELECT subj, pred, obj AS obj_resolved, n_conflicting
+            FROM ranked WHERE rk = 1"""),
+        ("kg_two_hop_reach", _q_kg_two_hop_reach, f"""{_EDGES_CTE}
+            SELECT l.subject AS src,
+                   COUNT(DISTINCT r.object) AS n_two_hop
+            FROM edges l JOIN edges r ON l.object = r.subject
+            GROUP BY l.subject"""),
+        ("doc_heavy_hitters", _q_doc_heavy_hitters, """
+            WITH tok AS (SELECT DISTINCT doc_id, term FROM (
+                     SELECT doc_id,
+                            unnest(string_split(text, ' ')) AS term
+                     FROM documents)),
+            dfreq AS (SELECT term, COUNT(*) AS df FROM tok GROUP BY term),
+            ranked AS (SELECT term, df,
+                              ROW_NUMBER() OVER (ORDER BY df DESC,
+                                                 term ASC) AS rk
+                       FROM dfreq)
+            SELECT term, df FROM ranked WHERE rk <= 20"""),
+        ("doc_postings", _q_doc_postings, """
+            WITH tok AS (SELECT doc_id,
+                                unnest(string_split(text, ' ')) AS term,
+                                generate_subscripts(
+                                    string_split(text, ' '), 1) - 1 AS pos
+                         FROM documents),
+            pl AS (SELECT term, doc_id,
+                          CAST(COUNT(*) AS BIGINT) AS tf,
+                          string_agg(CAST(pos AS VARCHAR), ','
+                                     ORDER BY pos) AS positions
+                   FROM tok GROUP BY term, doc_id)
+            SELECT term, doc_id, tf, positions FROM
+                (SELECT *, COUNT(*) OVER (PARTITION BY term) AS df FROM pl)
+            WHERE df >= 5"""),
+        ("ev_anomaly", _q_ev_anomaly, """
+            SELECT event_id, user_id, value, z FROM (
+              SELECT event_id, user_id, value,
+                     ROUND((value - AVG(value) OVER w)
+                           / STDDEV_SAMP(value) OVER w, 6) AS z
+              FROM events WINDOW w AS (PARTITION BY user_id))
+            WHERE ABS(z) > 2"""),
+        ("ev_funnel", _q_ev_funnel, """
+            WITH a0 AS (SELECT user_id, MIN(ts) AS t0 FROM events
+                        WHERE event_type = 'view' GROUP BY user_id),
+            a1 AS (SELECT e.user_id, MIN(e.ts) AS t1
+                   FROM events e JOIN a0 USING (user_id)
+                   WHERE e.event_type = 'click' AND e.ts >= a0.t0
+                   GROUP BY e.user_id),
+            a2 AS (SELECT e.user_id, MIN(e.ts) AS t2
+                   FROM events e JOIN a1 USING (user_id)
+                   WHERE e.event_type = 'purchase' AND e.ts >= a1.t1
+                   GROUP BY e.user_id)
+            SELECT 'view' AS step, 0 AS step_idx,
+                   (SELECT CAST(COUNT(*) AS BIGINT) FROM a0) AS n_users
+            UNION ALL
+            SELECT 'click', 1, (SELECT CAST(COUNT(*) AS BIGINT) FROM a1)
+            UNION ALL
+            SELECT 'purchase', 2,
+                   (SELECT CAST(COUNT(*) AS BIGINT) FROM a2)"""),
+        ("ev_asof_join", _q_ev_asof_join, """
+            SELECT l.event_id, l.ts, l.user_id, l.value,
+                   r.value AS value_asof, r.ts AS ts_asof
+            FROM (SELECT * FROM events WHERE event_type = 'error') l
+            ASOF LEFT JOIN
+                 (SELECT * FROM events WHERE event_type = 'click') r
+              ON l.user_id = r.user_id AND r.ts <= l.ts"""),
+        ("ev_range_count", _q_ev_range_count, """
+            SELECT l.event_id, l.ts, l.user_id, l.value,
+                   CAST(COUNT(r.user_id) AS BIGINT) AS n_in_range
+            FROM (SELECT * FROM events WHERE event_type = 'error') l
+            LEFT JOIN
+                 (SELECT * FROM events WHERE event_type = 'click') r
+              ON l.user_id = r.user_id AND r.ts <= l.ts
+                 AND r.ts >= l.ts - INTERVAL 86400 SECOND
+            GROUP BY l.event_id, l.ts, l.user_id, l.value"""),
+        ("ev_moving_avg", _q_ev_moving_avg, """
+            SELECT user_id, event_id, ts,
+                   ROUND(AVG(value) OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6)
+                       AS mavg
+            FROM events"""),
+        ("ev_hopping", _q_ev_hopping, """
+            WITH ev AS (SELECT value,
+                               -- floor, not CAST: DuckDB's cast ROUNDS,
+                               -- pushing a .5+ fractional-second event
+                               -- across a slide boundary Spark keeps
+                               CAST(floor(epoch(ts)) AS BIGINT) AS e
+                        FROM events),
+            x AS (SELECT value,
+                         unnest([make_timestamp((e - e % 300 - 300)
+                                                * 1000000),
+                                 make_timestamp((e - e % 300)
+                                                * 1000000)]) AS ws
+                  FROM ev)
+            SELECT ws AS window_start,
+                   CAST(COUNT(*) AS BIGINT) AS n_events,
+                   ROUND(SUM(value), 4) AS total
+            FROM x GROUP BY ws"""),
+        ("ev_sessionize", _q_ev_sessionize, """
+            WITH g AS (
+              SELECT user_id, ts,
+                     CASE WHEN lag(ts) OVER w IS NULL
+                               OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w))
+                                  > 1800
+                          THEN 1 ELSE 0 END AS ns
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+            s AS (SELECT user_id, ts,
+                         SUM(ns) OVER (PARTITION BY user_id ORDER BY ts
+                                       ROWS UNBOUNDED PRECEDING) AS session_id
+                  FROM g)
+            SELECT user_id,
+                   CAST(session_id AS BIGINT) AS session_id,
+                   CAST(COUNT(*) AS BIGINT) AS n_events,
+                   MIN(ts) AS session_start,
+                   MAX(ts) AS session_end
+            FROM s GROUP BY user_id, session_id"""),
+        ("ev_rollup", _q_ev_rollup, """
+            SELECT event_type,
+                   date_trunc('hour', ts) AS hour,
+                   CAST(GROUPING(event_type) AS INTEGER) AS g_event_type,
+                   CAST(GROUPING(date_trunc('hour', ts)) AS INTEGER)
+                       AS g_hour,
+                   CAST(COUNT(*) AS BIGINT) AS n_events,
+                   ROUND(SUM(value), 4) AS sum_value
+            FROM events
+            GROUP BY ROLLUP (event_type, date_trunc('hour', ts))"""),
+        ("ev_quantiles", _q_ev_quantiles, """
+            SELECT event_type,
+                   ROUND(quantile_cont(value, 0.25), 6) AS q25,
+                   ROUND(quantile_cont(value, 0.5), 6) AS q50,
+                   ROUND(quantile_cont(value, 0.75), 6) AS q75,
+                   ROUND(quantile_cont(value, 0.99), 6) AS q99
+            FROM events GROUP BY event_type"""),
+        ("ev_quantiles_approx", _q_ev_quantiles_approx, """
+            SELECT event_type,
+                   ROUND(quantile_disc(value, 0.25), 6) AS q25,
+                   ROUND(quantile_disc(value, 0.5), 6) AS q50,
+                   ROUND(quantile_disc(value, 0.75), 6) AS q75,
+                   ROUND(quantile_disc(value, 0.99), 6) AS q99
+            FROM events GROUP BY event_type"""),
+        ("ev_pivot", _q_ev_pivot, """
+            SELECT user_id,
+                   CAST(COUNT(*) FILTER (event_type = 'click') AS BIGINT)
+                       AS click,
+                   CAST(COUNT(*) FILTER (event_type = 'error') AS BIGINT)
+                       AS error,
+                   CAST(COUNT(*) FILTER (event_type = 'purchase') AS BIGINT)
+                       AS purchase,
+                   CAST(COUNT(*) FILTER (event_type = 'signup') AS BIGINT)
+                       AS signup,
+                   CAST(COUNT(*) FILTER (event_type = 'view') AS BIGINT)
+                       AS view
+            FROM events GROUP BY user_id"""),
+        ("ev_json_extract", _q_ev_json_extract, """
+            SELECT event_type,
+                   CAST(SUM(TRY_CAST(json_extract_string(props, '$.k')
+                                     AS BIGINT)) AS BIGINT) AS sum_k,
+                   CAST(COUNT(TRY_CAST(json_extract_string(props, '$.k')
+                                       AS BIGINT)) AS BIGINT) AS n_with_k,
+                   CAST(MAX(TRY_CAST(json_extract_string(props, '$.k')
+                                     AS BIGINT)) AS BIGINT) AS max_k
+            FROM events GROUP BY event_type"""),
+        ("ev_retention", _q_ev_retention, """
+            WITH first AS (SELECT user_id,
+                                  CAST(date_trunc('week', MIN(ts)) AS DATE)
+                                      AS cohort_week
+                           FROM events GROUP BY user_id),
+            act AS (SELECT user_id,
+                           CAST(date_trunc('week', ts) AS DATE) AS week
+                    FROM events)
+            SELECT f.cohort_week,
+                   CAST(date_diff('day', f.cohort_week, a.week) // 7
+                        AS BIGINT) AS offset_weeks,
+                   CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_users
+            FROM act a JOIN first f USING (user_id)
+            GROUP BY f.cohort_week, offset_weeks"""),
+    )
+
+
+def queries() -> dict[str, QueryFn]:
+    """Gate name → query function, in grading order."""
+    return {name: fn for name, fn, _ in gates()}
+
+
+def oracle_sql() -> dict[str, str]:
+    """Gate name → DuckDB oracle SQL, in grading order."""
+    return {name: sql for name, _, sql in gates()}

@@ -1,5 +1,6 @@
-"""Driver-contract wiring for the training-data ops: queries() entries
-plus DuckDB oracle twins (merged into __spark_entry__).
+"""Driver-contract wiring for the training-data ops: gate query
+functions plus their DuckDB oracle twins, listed as rows of the gate
+table in __spark_entry__.
 
 Near-dup queries plant duplicates IN-QUERY (union of documents with
 perturbed/exact copies) because the raw testdata documents are all
@@ -19,9 +20,6 @@ from btd.dataops.dedup import (
     simhash_near_dup,
 )
 from btd.dataops.similarity import (
-    auto_lsh_bits,
-    auto_nlist,
-    auto_semdedup_nlist,
     blas_near_dup,
     blas_topk,
     lsh_near_dup,
@@ -63,6 +61,7 @@ FROM documents WHERE doc_id % 10 = 0
 UNION ALL
 SELECT doc_id + 200000 AS doc_id, text FROM documents WHERE doc_id % 20 = 0
 """
+_DOCS_PLUS_CTE = f"WITH docs_plus AS ({DOCS_PLUS_SQL})"
 
 #: shared SQL fragments for the shingle/minhash oracle
 _SHINGLES_SQL = """
@@ -81,12 +80,55 @@ def _q_exact_dedup(spark, sf):
     return exact_dedup(docs_with_dups(spark, sf))
 
 
+EXACT_DEDUP_SQL = f"""{_DOCS_PLUS_CTE}
+            SELECT md5(text) AS text_hash,
+                   CAST(MIN(doc_id) AS BIGINT) AS keep_doc_id,
+                   CAST(COUNT(*) AS BIGINT) AS n_copies
+            FROM docs_plus GROUP BY md5(text)"""
+
+
 def _q_ngram_jaccard(spark, sf):
     return ngram_jaccard_pairs(docs_with_dups(spark, sf), 0.5)
 
 
+NGRAM_JACCARD_SQL = f"""{_DOCS_PLUS_CTE}, {_SHINGLES_SQL}
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   ROUND(len(list_intersect(a.s, b.s)) * 1.0 /
+                         len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
+            FROM sh a, sh b
+            WHERE a.doc_id < b.doc_id
+              AND ROUND(len(list_intersect(a.s, b.s)) * 1.0 /
+                        len(list_distinct(list_concat(a.s, b.s))), 6) >= 0.5"""
+
+
 def _q_minhash_near_dup(spark, sf):
     return minhash_near_dup(docs_with_dups(spark, sf), 0.5)
+
+
+#: MinHash signatures, band keys and the band self-join (btd.lsh) over
+#: the shingle sets, shared by the near-dup and dedup-groups oracles
+_SIG_COLS = ", ".join(f"min(md5('{i}:' || shingle)) AS sig_{i}" for i in range(8))
+_BAND_LIST = ", ".join(
+    f"md5('{b}' || '|' || sig_{2 * b} || '|' || sig_{2 * b + 1})"
+    for b in range(4)
+)
+_MINHASH_CANDS_SQL = f"""
+            ex AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
+            sigs AS (SELECT doc_id, {_SIG_COLS} FROM ex GROUP BY doc_id),
+            bands AS (SELECT doc_id, unnest([{_BAND_LIST}]) AS band FROM sigs),
+            cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+                      FROM bands a JOIN bands b USING (band)
+                      WHERE a.doc_id < b.doc_id)"""
+#: the verified Jaccard of a candidate pair's shingle sets sa.s / sb.s
+_PAIR_JACCARD_SQL = """ROUND(len(list_intersect(sa.s, sb.s)) * 1.0 /
+                         len(list_distinct(list_concat(sa.s, sb.s))), 6)"""
+
+MINHASH_NEAR_DUP_SQL = f"""{_DOCS_PLUS_CTE}, {_SHINGLES_SQL}, {_MINHASH_CANDS_SQL}
+            SELECT c.id_a, c.id_b, {_PAIR_JACCARD_SQL} AS jaccard
+            FROM cands c
+            JOIN sh sa ON sa.doc_id = c.id_a
+            JOIN sh sb ON sb.doc_id = c.id_b
+            WHERE {_PAIR_JACCARD_SQL} >= 0.5"""
 
 
 def _q_simhash_near_dup(spark, sf):
@@ -104,6 +146,27 @@ def _q_dedup_groups(spark, sf):
     return near_dup_groups(docs_with_dups(spark, sf), 0.5)
 
 
+# transitive closure of the verified near-dup pairs via a recursive CTE
+# — exact CC for ANY component shape (the corpus has natural near-dup
+# pairs, so components are not cliques and a fixed-hop closure would be
+# wrong); component sizes are tiny so the recursion is cheap in DuckDB
+DEDUP_GROUPS_SQL = f"""WITH RECURSIVE docs_plus AS ({DOCS_PLUS_SQL}),
+            {_SHINGLES_SQL}, {_MINHASH_CANDS_SQL},
+            p AS (SELECT c.id_a, c.id_b
+                  FROM cands c
+                  JOIN sh sa ON sa.doc_id = c.id_a
+                  JOIN sh sb ON sb.doc_id = c.id_b
+                  WHERE {_PAIR_JACCARD_SQL} >= 0.5),
+            und AS (SELECT id_a AS a, id_b AS b FROM p
+                    UNION ALL SELECT id_b AS a, id_a AS b FROM p),
+            reach AS (SELECT doc_id, doc_id AS nb FROM docs_plus
+                      UNION
+                      SELECT r.doc_id, u.b AS nb
+                      FROM reach r JOIN und u ON u.a = r.nb)
+            SELECT doc_id, CAST(MIN(nb) AS BIGINT) AS keep_doc_id
+            FROM reach GROUP BY doc_id"""
+
+
 def _q_winnow_near_dup(spark, sf):
     """MOSS-style partial-overlap pairs over the planted corpus: the
     near-copies (first word dropped) share long token runs with their
@@ -116,20 +179,102 @@ def _q_winnow_near_dup(spark, sf):
     )
 
 
+WINNOW_NEAR_DUP_SQL = f"""{_DOCS_PLUS_CTE},
+            t AS (SELECT doc_id, string_split(text, ' ') AS tk
+                  FROM docs_plus),
+            pos AS (SELECT doc_id, tk,
+                           unnest(range(1, len(tk) - 1)) AS i
+                    FROM t),
+            grams AS (SELECT doc_id, i,
+                             md5(array_to_string(tk[i:i+2], ' ')) AS h
+                      FROM pos),
+            wins AS (SELECT doc_id, i,
+                            MIN(h) OVER (PARTITION BY doc_id ORDER BY i
+                                         ROWS BETWEEN 3 PRECEDING
+                                                  AND CURRENT ROW) AS fp
+                     FROM grams),
+            wf AS (SELECT DISTINCT doc_id, fp FROM wins WHERE i >= 4)
+            SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
+                   CAST(COUNT(*) AS BIGINT) AS n_shared
+            FROM wf a JOIN wf b
+              ON a.fp = b.fp AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id
+            HAVING COUNT(*) >= 2"""
+
+
 def _q_token_stats(spark, sf):
     return token_stats(_docs(spark, sf))
+
+
+TOKEN_STATS_SQL = r"""
+            SELECT doc_id,
+                   CAST(len(string_split(text, ' ')) AS INTEGER) AS n_ws_tokens,
+                   CAST(len(regexp_extract_all(text,
+                        '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]', 0)) AS INTEGER)
+                       AS n_bpe_tokens,
+                   CAST(length(text) AS INTEGER) AS n_chars_measured
+            FROM documents"""
 
 
 def _q_quality(spark, sf):
     return quality_scores(_docs(spark, sf))
 
 
+QUALITY_SQL = r"""
+            WITH q AS (SELECT doc_id, text,
+                              len(string_split(text, ' ')) AS n_toks,
+                              len(list_filter(string_split(text, ' '),
+                                  x -> x IN ('a','and','das','de','der','die',
+                                             'el','est','et','is','ist','la',
+                                             'le','of','the','und','y','es')))
+                                  AS n_stop,
+                              length(text) -
+                              length(regexp_replace(text, '[^\w\s]', '', 'g'))
+                                  AS n_punct
+                       FROM documents)
+            SELECT doc_id,
+                   CAST(length(text) AS INTEGER) AS n_chars_measured,
+                   CAST(n_toks AS INTEGER) AS n_tokens,
+                   ROUND(n_stop * 1.0 / n_toks, 6) AS stopword_ratio,
+                   ROUND(n_punct * 1.0 / length(text), 6) AS punct_ratio,
+                   ROUND((length(text) - n_toks + 1) * 1.0 / n_toks, 6)
+                       AS mean_word_len
+            FROM q"""
+
+
 def _q_lang_id(spark, sf):
     return language_id(_docs(spark, sf))
 
 
+LANG_ID_SQL = """
+            WITH h AS (SELECT doc_id,
+                len(list_filter(string_split(text,' '),
+                    x -> x IN ('the','a','of','and','is'))) AS h_en,
+                len(list_filter(string_split(text,' '),
+                    x -> x IN ('el','la','de','y','es'))) AS h_es,
+                len(list_filter(string_split(text,' '),
+                    x -> x IN ('le','la','de','et','est'))) AS h_fr,
+                len(list_filter(string_split(text,' '),
+                    x -> x IN ('der','die','das','und','ist'))) AS h_de
+                FROM documents)
+            SELECT doc_id,
+                   CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
+                        WHEN h_de = greatest(h_de, h_en, h_es, h_fr) THEN 'de'
+                        WHEN h_en = greatest(h_de, h_en, h_es, h_fr) THEN 'en'
+                        WHEN h_es = greatest(h_de, h_en, h_es, h_fr) THEN 'es'
+                        ELSE 'fr' END AS lang_pred
+            FROM h"""
+
+
 def _q_fingerprints(spark, sf):
     return fingerprints(_docs(spark, sf))
+
+
+FINGERPRINTS_SQL = """
+            SELECT doc_id,
+                   md5(array_to_string(list_sort(list_distinct(
+                       string_split(text, ' '))), ' ')) AS fingerprint
+            FROM documents"""
 
 
 def _q_repetition(spark, sf):
@@ -183,6 +328,22 @@ def _emb(spark, sf):
     )
 
 
+#: normalize-then-dot over every ordered pair: the exact cosine every
+#: embedding kernel in btd.dataops.similarity rounds to 6 places
+#: (ROUND(.,6) absorbs summation-order differences vs numpy's matmul).
+_COSINE_SQL = """
+v AS (SELECT vec_id,
+             list_transform(CAST(embedding AS DOUBLE[]),
+                 x -> x / sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
+                                                CAST(embedding AS DOUBLE[]))))
+                 AS e
+      FROM embeddings),
+pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                 ROUND(list_dot_product(a.e, b.e), 6) AS cosine
+          FROM v a, v b)
+"""
+
+
 GATE_SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -227,6 +388,11 @@ def _q_emb_near_dup_exact(spark, sf):
     # reference in tests); emb_cosine_near_dup above is the bucketed
     # 100 TB path
     return blas_near_dup(_emb(spark, sf), 0.45)
+
+
+EMB_NEAR_DUP_EXACT_SQL = f"""WITH {_COSINE_SQL}
+            SELECT id_a, id_b, cosine FROM pairs
+            WHERE id_a < id_b AND cosine >= 0.45"""
 
 
 def _q_emb_brute_topk(spark, sf):
@@ -306,6 +472,27 @@ def _q_doc_tfidf(spark, sf):
     return tfidf_top_terms(_docs(spark, sf), k=3)
 
 
+TFIDF_SQL = """
+            WITH toks AS (SELECT doc_id,
+                                 unnest(string_split(text, ' ')) AS term
+                          FROM documents),
+            tf AS (SELECT doc_id, term, COUNT(*) AS tf
+                   FROM toks GROUP BY doc_id, term),
+            df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+            nd AS (SELECT COUNT(*) AS n_docs FROM documents),
+            scored AS (SELECT t.doc_id, t.term, t.tf,
+                              ROUND(t.tf * ln((nd.n_docs + 1)
+                                              / (d.df + 1)), 6) AS score
+                       FROM tf t JOIN df d USING (term) CROSS JOIN nd),
+            r AS (SELECT doc_id, term, tf, score,
+                         ROW_NUMBER() OVER (PARTITION BY doc_id
+                             ORDER BY score DESC, term ASC) AS rank
+                  FROM scored)
+            SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, score,
+                   CAST(rank AS INTEGER) AS rank
+            FROM r WHERE rank <= 3"""
+
+
 def _q_emb_semdedup(spark, sf):
     """SemDeDup in the gate: IVF clustering confines the quadratic
     pair scoring inside bounded clusters (n/cluster_target rule),
@@ -326,6 +513,30 @@ def _q_doc_lm(spark, sf):
     from btd.dataops.textstats import bigram_lm_scores
 
     return bigram_lm_scores(_docs(spark, sf))
+
+
+LM_SCORE_SQL = """
+            WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk
+                       FROM documents),
+            bg AS (SELECT doc_id,
+                          unnest(tk[1:len(tk) - 1]) AS w1,
+                          unnest(tk[2:len(tk)]) AS w2
+                   FROM t WHERE len(tk) >= 2),
+            model AS (SELECT w1, w2, COUNT(*) AS c12
+                      FROM bg GROUP BY w1, w2),
+            starts AS (SELECT w1, SUM(c12) AS c1 FROM model GROUP BY w1),
+            vocab AS (SELECT COUNT(DISTINCT w) AS v FROM
+                          (SELECT unnest(string_split(text, ' ')) AS w
+                           FROM documents)),
+            sc AS (SELECT g.doc_id,
+                          ln((m.c12 + 1) / (s.c1 + v.v)) AS lp
+                   FROM bg g
+                   JOIN model m USING (w1, w2)
+                   JOIN starts s USING (w1)
+                   CROSS JOIN vocab v)
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+                   ROUND(AVG(lp), 6) AS avg_logp
+            FROM sc GROUP BY doc_id"""
 
 
 def _q_media_features(spark, sf):
@@ -421,12 +632,36 @@ def _q_curation(spark, sf):
     return curate(_docs(spark, sf))
 
 
+CURATION_SQL = r"""
+            WITH q AS (SELECT doc_id, text,
+                              len(string_split(text, ' ')) AS n_toks,
+                              len(list_filter(string_split(text, ' '),
+                                  x -> x IN ('a','and','das','de','der','die',
+                                             'el','est','et','is','ist','la',
+                                             'le','of','the','und','y','es')))
+                                  * 1.0 / len(string_split(text, ' ')) AS sr
+                       FROM documents),
+                 f AS (SELECT doc_id,
+                              md5(array_to_string(list_sort(list_distinct(
+                                  string_split(text, ' '))), ' ')) AS fingerprint
+                       FROM q
+                       WHERE n_toks BETWEEN 50 AND 5000 AND sr <= 0.35)
+            SELECT CAST(MIN(doc_id) AS BIGINT) AS doc_id, fingerprint
+            FROM f GROUP BY fingerprint"""
+
+
 def _q_doc_sample(spark, sf):
     from btd.dataops.curation import deterministic_sample
 
     return deterministic_sample(
         _docs(spark, sf).select("doc_id"), "doc_id", 25, method="md5"
     )
+
+
+DOC_SAMPLE_SQL = """
+            SELECT doc_id FROM documents
+            WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))
+                       AS INTEGER) < 64"""
 
 
 def _q_decontaminate(spark, sf):
@@ -448,7 +683,7 @@ def _decontaminate_sql(n: int = 13) -> str:
         f"list_distinct(list_transform(range(0, greatest(len(t) - {n}, 0)"
         f" + 1), i -> concat_ws(' ', {idx})))"
     )
-    return f"""WITH docs_plus AS ({DOCS_PLUS_SQL}),
+    return f"""{_DOCS_PLUS_CTE},
 toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM docs_plus),
 sh AS (SELECT doc_id, unnest({sh_of}) AS sh FROM toks),
 btoks AS (SELECT string_split(text, ' ') AS t FROM documents
@@ -598,44 +833,6 @@ def _q_kg_pagerank(spark, sf):
     return pr.select("node", F.round("rank", 4).alias("rank"))
 
 
-def queries_dataops():
-    return {
-        "doc_curation": _q_curation,
-        "doc_sample": _q_doc_sample,
-        "kg_pagerank": _q_kg_pagerank,
-        "doc_exact_dedup": _q_exact_dedup,
-        "doc_ngram_jaccard": _q_ngram_jaccard,
-        "doc_minhash_near_dup": _q_minhash_near_dup,
-        "doc_simhash_near_dup": _q_simhash_near_dup,
-        "doc_dedup_groups": _q_dedup_groups,
-        "doc_winnow_near_dup": _q_winnow_near_dup,
-        "doc_token_stats": _q_token_stats,
-        "doc_quality_scores": _q_quality,
-        "doc_language_id": _q_lang_id,
-        "doc_fingerprints": _q_fingerprints,
-        "doc_repetition": _q_repetition,
-        "emb_cosine_near_dup": _q_emb_near_dup,
-        "emb_cosine_near_dup_exact": _q_emb_near_dup_exact,
-        "emb_brute_force_topk": _q_emb_brute_topk,
-        "emb_recall_at_k": _q_emb_recall,
-        "emb_pq_topk": _q_emb_pq_topk,
-        "emb_lsh_topk": _q_emb_lsh_topk,
-        "emb_ivf_topk": _q_emb_ivf_topk,
-        "emb_cluster_sample": _q_emb_cluster_sample,
-        "doc_tfidf": _q_doc_tfidf,
-        "doc_lm_score": _q_doc_lm,
-        "emb_semantic_dedup": _q_emb_semdedup,
-        "doc_media_features": _q_media_features,
-        "doc_frame_sample": _q_frame_sample,
-        "doc_resize": _q_resize,
-        "doc_decontaminate": _q_decontaminate,
-        "doc_stratified_sample": _q_stratified_sample,
-        "doc_mix": _q_mix,
-        "doc_chunk": _q_chunk,
-        "doc_scrub_pii": _q_scrub,
-    }
-
-
 # ---------------------------------------------------------------- oracles
 
 
@@ -686,7 +883,7 @@ def _simhash_sql() -> str:
     token-bit tally of ``_simhash64`` rebuilt from hex nibbles, band
     values summed directly from majority bits (sidesteps DuckDB's
     arithmetic ``>>`` on signed BIGINT)."""
-    return f"""WITH docs_plus AS ({DOCS_PLUS_SQL}),
+    return f"""{_DOCS_PLUS_CTE},
 toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
          FROM docs_plus),
 doc_n AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id),
@@ -863,12 +1060,10 @@ def _brute_topk_sql(k: int) -> str:
             SELECT id_a, id_b, cosine, rank FROM ranked WHERE rank <= {k}"""
 
 
-def _recall_sql(k: int) -> str:
+def _recall_sql(lsh: str, brute: str, k: int) -> str:
     """recall@k of the LSH path vs exact, composed from the two
     existing twins as subqueries (DuckDB allows WITH inside a derived
     table) — the oracle can only agree with itself."""
-    lsh = _lsh_topk_sql(bits=auto_lsh_bits(_gate_corpus_n()))
-    brute = _brute_topk_sql(k)
     return f"""
             WITH lsh AS (SELECT id_a, id_b FROM ({lsh}) tl),
             brute AS (SELECT id_a, id_b FROM ({brute}) tb),
@@ -1047,254 +1242,3 @@ SELECT vec_id, cluster, rn FROM kept WHERE rn <= {per_cluster}"""
     )
     return "\n".join(parts)
 
-
-#: normalize-then-dot over every ordered pair: the exact cosine every
-#: embedding kernel in btd.dataops.similarity rounds to 6 places
-#: (ROUND(.,6) absorbs summation-order differences vs numpy's matmul).
-_COSINE_SQL = """
-v AS (SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> x / sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                                CAST(embedding AS DOUBLE[]))))
-                 AS e
-      FROM embeddings),
-pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                 ROUND(list_dot_product(a.e, b.e), 6) AS cosine
-          FROM v a, v b)
-"""
-
-
-def oracle_sql_dataops():
-    d = f"WITH docs_plus AS ({DOCS_PLUS_SQL})"
-    sig_cols = ", ".join(
-        f"min(md5('{i}:' || shingle)) AS sig_{i}" for i in range(8)
-    )
-    band_list = ", ".join(
-        f"md5('{b}' || '|' || sig_{2 * b} || '|' || sig_{2 * b + 1})"
-        for b in range(4)
-    )
-    return {
-        "doc_curation": r"""
-            WITH q AS (SELECT doc_id, text,
-                              len(string_split(text, ' ')) AS n_toks,
-                              len(list_filter(string_split(text, ' '),
-                                  x -> x IN ('a','and','das','de','der','die',
-                                             'el','est','et','is','ist','la',
-                                             'le','of','the','und','y','es')))
-                                  * 1.0 / len(string_split(text, ' ')) AS sr
-                       FROM documents),
-                 f AS (SELECT doc_id,
-                              md5(array_to_string(list_sort(list_distinct(
-                                  string_split(text, ' '))), ' ')) AS fingerprint
-                       FROM q
-                       WHERE n_toks BETWEEN 50 AND 5000 AND sr <= 0.35)
-            SELECT CAST(MIN(doc_id) AS BIGINT) AS doc_id, fingerprint
-            FROM f GROUP BY fingerprint""",
-        "doc_sample": """
-            SELECT doc_id FROM documents
-            WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))
-                       AS INTEGER) < 64""",
-        "kg_pagerank": _pagerank_sql(),
-        "doc_simhash_near_dup": _simhash_sql(),
-        # ANN twins: the SAME auto-sizing rules the Spark queries use,
-        # applied to the actual gate-corpus count (ADVICE r2 — no
-        # inlined layout constants to silently desync)
-        "emb_lsh_topk": _lsh_topk_sql(bits=auto_lsh_bits(_gate_corpus_n())),
-        "emb_ivf_topk": _ivf_topk_sql(n_clusters=auto_nlist(_gate_corpus_n())),
-        "emb_cluster_sample": _ivf_cluster_sample_sql(
-            n_clusters=auto_nlist(_gate_corpus_n())
-        ),
-        "emb_semantic_dedup": _ivf_semdedup_sql(
-            n_clusters=auto_semdedup_nlist(_gate_corpus_n())
-        ),
-        "doc_tfidf": """
-            WITH toks AS (SELECT doc_id,
-                                 unnest(string_split(text, ' ')) AS term
-                          FROM documents),
-            tf AS (SELECT doc_id, term, COUNT(*) AS tf
-                   FROM toks GROUP BY doc_id, term),
-            df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-            nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-            scored AS (SELECT t.doc_id, t.term, t.tf,
-                              ROUND(t.tf * ln((nd.n_docs + 1)
-                                              / (d.df + 1)), 6) AS score
-                       FROM tf t JOIN df d USING (term) CROSS JOIN nd),
-            r AS (SELECT doc_id, term, tf, score,
-                         ROW_NUMBER() OVER (PARTITION BY doc_id
-                             ORDER BY score DESC, term ASC) AS rank
-                  FROM scored)
-            SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, score,
-                   CAST(rank AS INTEGER) AS rank
-            FROM r WHERE rank <= 3""",
-        "doc_lm_score": """
-            WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk
-                       FROM documents),
-            bg AS (SELECT doc_id,
-                          unnest(tk[1:len(tk) - 1]) AS w1,
-                          unnest(tk[2:len(tk)]) AS w2
-                   FROM t WHERE len(tk) >= 2),
-            model AS (SELECT w1, w2, COUNT(*) AS c12
-                      FROM bg GROUP BY w1, w2),
-            starts AS (SELECT w1, SUM(c12) AS c1 FROM model GROUP BY w1),
-            vocab AS (SELECT COUNT(DISTINCT w) AS v FROM
-                          (SELECT unnest(string_split(text, ' ')) AS w
-                           FROM documents)),
-            sc AS (SELECT g.doc_id,
-                          ln((m.c12 + 1) / (s.c1 + v.v)) AS lp
-                   FROM bg g
-                   JOIN model m USING (w1, w2)
-                   JOIN starts s USING (w1)
-                   CROSS JOIN vocab v)
-            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-                   ROUND(AVG(lp), 6) AS avg_logp
-            FROM sc GROUP BY doc_id""",
-        "doc_media_features": MEDIA_FEATURES_SQL,
-        "doc_frame_sample": FRAME_SAMPLE_SQL,
-        "doc_resize": RESIZE_SQL,
-        "doc_decontaminate": _decontaminate_sql(),
-        "doc_stratified_sample": STRATIFIED_SAMPLE_SQL,
-        "doc_mix": _mix_sql(),
-        "doc_chunk": CHUNK_SQL,
-        "doc_scrub_pii": SCRUB_SQL,
-        "doc_exact_dedup": f"""{d}
-            SELECT md5(text) AS text_hash,
-                   CAST(MIN(doc_id) AS BIGINT) AS keep_doc_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_copies
-            FROM docs_plus GROUP BY md5(text)""",
-        "doc_ngram_jaccard": f"""{d}, {_SHINGLES_SQL}
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   ROUND(len(list_intersect(a.s, b.s)) * 1.0 /
-                         len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
-            FROM sh a, sh b
-            WHERE a.doc_id < b.doc_id
-              AND ROUND(len(list_intersect(a.s, b.s)) * 1.0 /
-                        len(list_distinct(list_concat(a.s, b.s))), 6) >= 0.5""",
-        "doc_minhash_near_dup": f"""{d}, {_SHINGLES_SQL},
-            ex AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-            sigs AS (SELECT doc_id, {sig_cols} FROM ex GROUP BY doc_id),
-            bands AS (SELECT doc_id, unnest([{band_list}]) AS band FROM sigs),
-            cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                      FROM bands a JOIN bands b USING (band)
-                      WHERE a.doc_id < b.doc_id)
-            SELECT c.id_a, c.id_b,
-                   ROUND(len(list_intersect(sa.s, sb.s)) * 1.0 /
-                         len(list_distinct(list_concat(sa.s, sb.s))), 6) AS jaccard
-            FROM cands c
-            JOIN sh sa ON sa.doc_id = c.id_a
-            JOIN sh sb ON sb.doc_id = c.id_b
-            WHERE ROUND(len(list_intersect(sa.s, sb.s)) * 1.0 /
-                        len(list_distinct(list_concat(sa.s, sb.s))), 6) >= 0.5""",
-        # transitive closure of the verified near-dup pairs via a
-        # recursive CTE — exact CC for ANY component shape (the corpus
-        # has natural near-dup pairs, so components are not cliques and
-        # a fixed-hop closure would be wrong); component sizes are tiny
-        # so the recursion is cheap in DuckDB
-        "doc_dedup_groups": f"""WITH RECURSIVE docs_plus AS ({DOCS_PLUS_SQL}), {_SHINGLES_SQL},
-            ex AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-            sigs AS (SELECT doc_id, {sig_cols} FROM ex GROUP BY doc_id),
-            bands AS (SELECT doc_id, unnest([{band_list}]) AS band FROM sigs),
-            cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                      FROM bands a JOIN bands b USING (band)
-                      WHERE a.doc_id < b.doc_id),
-            p AS (SELECT c.id_a, c.id_b
-                  FROM cands c
-                  JOIN sh sa ON sa.doc_id = c.id_a
-                  JOIN sh sb ON sb.doc_id = c.id_b
-                  WHERE ROUND(len(list_intersect(sa.s, sb.s)) * 1.0 /
-                              len(list_distinct(list_concat(sa.s, sb.s))),
-                              6) >= 0.5),
-            und AS (SELECT id_a AS a, id_b AS b FROM p
-                    UNION ALL SELECT id_b AS a, id_a AS b FROM p),
-            reach AS (SELECT doc_id, doc_id AS nb FROM docs_plus
-                      UNION
-                      SELECT r.doc_id, u.b AS nb
-                      FROM reach r JOIN und u ON u.a = r.nb)
-            SELECT doc_id, CAST(MIN(nb) AS BIGINT) AS keep_doc_id
-            FROM reach GROUP BY doc_id""",
-        "doc_token_stats": r"""
-            SELECT doc_id,
-                   CAST(len(string_split(text, ' ')) AS INTEGER) AS n_ws_tokens,
-                   CAST(len(regexp_extract_all(text,
-                        '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]', 0)) AS INTEGER)
-                       AS n_bpe_tokens,
-                   CAST(length(text) AS INTEGER) AS n_chars_measured
-            FROM documents""",
-        "doc_quality_scores": r"""
-            WITH q AS (SELECT doc_id, text,
-                              len(string_split(text, ' ')) AS n_toks,
-                              len(list_filter(string_split(text, ' '),
-                                  x -> x IN ('a','and','das','de','der','die',
-                                             'el','est','et','is','ist','la',
-                                             'le','of','the','und','y','es')))
-                                  AS n_stop,
-                              length(text) -
-                              length(regexp_replace(text, '[^\w\s]', '', 'g'))
-                                  AS n_punct
-                       FROM documents)
-            SELECT doc_id,
-                   CAST(length(text) AS INTEGER) AS n_chars_measured,
-                   CAST(n_toks AS INTEGER) AS n_tokens,
-                   ROUND(n_stop * 1.0 / n_toks, 6) AS stopword_ratio,
-                   ROUND(n_punct * 1.0 / length(text), 6) AS punct_ratio,
-                   ROUND((length(text) - n_toks + 1) * 1.0 / n_toks, 6)
-                       AS mean_word_len
-            FROM q""",
-        "doc_language_id": """
-            WITH h AS (SELECT doc_id,
-                len(list_filter(string_split(text,' '),
-                    x -> x IN ('the','a','of','and','is'))) AS h_en,
-                len(list_filter(string_split(text,' '),
-                    x -> x IN ('el','la','de','y','es'))) AS h_es,
-                len(list_filter(string_split(text,' '),
-                    x -> x IN ('le','la','de','et','est'))) AS h_fr,
-                len(list_filter(string_split(text,' '),
-                    x -> x IN ('der','die','das','und','ist'))) AS h_de
-                FROM documents)
-            SELECT doc_id,
-                   CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
-                        WHEN h_de = greatest(h_de, h_en, h_es, h_fr) THEN 'de'
-                        WHEN h_en = greatest(h_de, h_en, h_es, h_fr) THEN 'en'
-                        WHEN h_es = greatest(h_de, h_en, h_es, h_fr) THEN 'es'
-                        ELSE 'fr' END AS lang_pred
-            FROM h""",
-        "doc_fingerprints": """
-            SELECT doc_id,
-                   md5(array_to_string(list_sort(list_distinct(
-                       string_split(text, ' '))), ' ')) AS fingerprint
-            FROM documents""",
-        "doc_repetition": REPETITION_SQL,
-        "emb_cosine_near_dup": _lsh_near_dup_sql(
-            bits=auto_lsh_bits(_gate_corpus_n())
-        ),
-        "emb_cosine_near_dup_exact": f"""WITH {_COSINE_SQL}
-            SELECT id_a, id_b, cosine FROM pairs
-            WHERE id_a < id_b AND cosine >= 0.45""",
-        "emb_brute_force_topk": _brute_topk_sql(3),
-        "emb_recall_at_k": _recall_sql(3),
-        "emb_pq_topk": _pq_topk_sql(
-            m=8, n_codes=64, n_clusters=auto_nlist(_gate_corpus_n()),
-            nprobe=4,
-        ),
-        "doc_winnow_near_dup": f"""
-            WITH docs_plus AS ({DOCS_PLUS_SQL}),
-            t AS (SELECT doc_id, string_split(text, ' ') AS tk
-                  FROM docs_plus),
-            pos AS (SELECT doc_id, tk,
-                           unnest(range(1, len(tk) - 1)) AS i
-                    FROM t),
-            grams AS (SELECT doc_id, i,
-                             md5(array_to_string(tk[i:i+2], ' ')) AS h
-                      FROM pos),
-            wins AS (SELECT doc_id, i,
-                            MIN(h) OVER (PARTITION BY doc_id ORDER BY i
-                                         ROWS BETWEEN 3 PRECEDING
-                                                  AND CURRENT ROW) AS fp
-                     FROM grams),
-            wf AS (SELECT DISTINCT doc_id, fp FROM wins WHERE i >= 4)
-            SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
-                   CAST(COUNT(*) AS BIGINT) AS n_shared
-            FROM wf a JOIN wf b
-              ON a.fp = b.fp AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-            HAVING COUNT(*) >= 2""",
-    }

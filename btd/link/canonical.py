@@ -39,7 +39,10 @@ def connected_components(
     algorithm: str = "label",
 ) -> DataFrame:
     """nodes(entity_id) + edges(id_a, id_b) →
-    (entity_id, canonical_id = min entity_id of the component)."""
+    (entity_id, canonical_id = min entity_id of the component).
+
+    Raises RuntimeError if the labels have not reached a fixpoint after
+    ``max_iter`` rounds."""
     if algorithm == "star":
         return _connected_components_star(nodes, edges, max_iter)
     if algorithm != "label":
@@ -90,8 +93,21 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        _no_fixpoint(loop, max_iter)
     loop.close()  # statics freed; final labels keeps its checkpoint
     return labels
+
+
+def _no_fixpoint(loop: CheckpointLoop, max_iter: int) -> None:
+    """Labels that are still changing are wrong, not approximate: free
+    every checkpoint (nothing is returned) and fail loudly."""
+    loop.close(keep_last=False)
+    raise RuntimeError(
+        f"connected components did not converge within max_iter={max_iter}"
+        " rounds; raise max_iter, or use algorithm='star' for deep"
+        " components"
+    )
 
 
 def _connected_components_star(
@@ -183,6 +199,8 @@ def _connected_components_star(
         cur, n_cur = new, n_new
         if not changed:
             break
+    else:
+        _no_fixpoint(loop, max_iter)
 
     # at the fixpoint each non-root node has exactly one edge, to the
     # component root; isolated nodes label themselves

@@ -139,7 +139,7 @@ def two_hop_reach(
     OUT-degree exceeds the cap before the join, the same discipline as
     basket_cooccurrence's mega-basket purge (btd/analytics/cooccur.py)
     — a hub's two-hop contribution is near-zero signal at quadratic
-    cost. khop (btd/graph.py:97) answers the general-k BFS form; this
+    cost. khop (btd/graph.py:138) answers the general-k BFS form; this
     is the declarative k=2 with exact distinct counting.
     """
     right = edges.select(

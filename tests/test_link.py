@@ -117,6 +117,26 @@ def test_star_cc_converges_on_1000_node_chain(spark):
     assert got == {n: "n0000" for n in ids}
 
 
+@pytest.mark.parametrize("algorithm,max_iter", [("label", 25), ("star", 1)])
+def test_cc_no_fixpoint_raises_and_frees_every_checkpoint(
+    spark, algorithm, max_iter
+):
+    """A 60-node chain needs 59 label rounds (diameter) and more than
+    one star round: stopping at max_iter would hand back a wrong
+    partition (35 components at the label default), so it must raise —
+    and, returning nothing, keep no checkpoint pinned."""
+    ids = [f"n{i:02d}" for i in range(60)]
+    nodes = spark.createDataFrame([(n,) for n in ids], "entity_id string")
+    e = spark.createDataFrame(
+        [(ids[i], ids[i + 1]) for i in range(59)], "id_a string, id_b string"
+    )
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match=f"max_iter={max_iter}"):
+        connected_components(nodes, e, max_iter=max_iter, algorithm=algorithm)
+    assert jsc.getPersistentRDDs().size() == baseline
+
+
 def test_label_and_star_agree_on_random_graph(spark):
     """Seeded random graph (multi-component, cycles, isolated nodes):
     identical labels from both algorithms."""
