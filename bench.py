@@ -29,7 +29,7 @@ def cleanup(spark) -> None:
     """Reset cross-query session state so each timing is isolated.
 
     Graph queries intentionally keep their FINAL localCheckpoint alive
-    for the caller (CheckpointLoop.close(keep_last=True)); in a 50-query
+    for the caller (``CheckpointLoop.keep``); in a 50-query
     bench session those pile up and steal executor storage from later
     queries (measured: ref_top_contexts 25 s polluted vs 4.8 s fresh).
     Streaming gate queries also leave memory-sink temp views holding

@@ -8,12 +8,15 @@ long-lived cluster (or this repo's bench session) that steals storage
 from every later job — measured 2.3s → 9.2s regression on an unrelated
 aggregation after one PageRank run.
 
-``CheckpointLoop`` tracks which persisted RDD each checkpoint created
-and frees a step's blocks as soon as the next step's checkpoint has
-materialized — eager ``localCheckpoint`` guarantees the successor no
-longer reads them. Static inputs (edge lists) stay pinned until
-``close()``; the loop's final result keeps its checkpoint (the caller
-consumes it).
+``CheckpointLoop`` is a ``with``-scoped window with one lifetime rule.
+``step(df)`` keeps only the current and the previous state alive
+(eager ``localCheckpoint`` guarantees the new state no longer reads
+older ones), so a convergence test can always read both;
+``keep(state)`` names which of the two is the result; leaving the
+block frees the ``static`` inputs and every other state — everything,
+if the block exits by exception. Each step logs
+``"<name> step <i>: <wall> s"`` at INFO on ``btd.ckpt``, with no row
+count: counting would cost one more Spark job per step.
 
 Ownership is read off the checkpointed DataFrame itself: its analyzed
 plan is a ``LogicalRDD`` wrapping exactly the persisted RDD, so the id
@@ -26,7 +29,12 @@ py4j plan accessor ever changes shape.
 
 from __future__ import annotations
 
+import logging
+import time
+
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def _persistent_ids(spark: SparkSession) -> set[int]:
@@ -46,60 +54,49 @@ def _checkpoint_owned(spark: SparkSession, df: DataFrame) -> tuple[DataFrame, se
 
 
 class CheckpointLoop:
-    """Scoped manager for an iterative algorithm's checkpoints."""
+    """``with``-scoped manager for an iterative algorithm's checkpoints."""
 
-    def __init__(self, spark: SparkSession):
+    def __init__(self, spark: SparkSession, name: str):
         self._spark = spark
+        self._name = name
         self._static_ids: set[int] = set()
-        self._step_ids: set[int] = set()
-        self._deferred: set[int] = set()
+        self._window: list[tuple[DataFrame, set[int]]] = []  # [prev, cur]
+        self._kept: DataFrame | None = None
+        self._steps = 0
+
+    def __enter__(self) -> CheckpointLoop:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        kept = self._kept if exc_type is None else None
+        self._free(self._static_ids)
+        for df, ids in self._window:
+            if df is not kept:
+                self._free(ids)
 
     def static(self, df: DataFrame) -> DataFrame:
-        """Checkpoint a loop-invariant input; freed at ``close()``."""
+        """Checkpoint a loop-invariant input; freed when the block ends."""
         out, ids = _checkpoint_owned(self._spark, df)
         self._static_ids |= ids
         return out
 
-    def step(self, df: DataFrame, free_prev: bool = True) -> DataFrame:
-        """Checkpoint one iteration's state; frees the previous
-        iteration's blocks (the new checkpoint is already material).
-        Pass ``free_prev=False`` when the loop still reads the previous
-        state after this call (e.g. a convergence diff), then call
-        :meth:`release_prev` once done with it."""
-        out, new = _checkpoint_owned(self._spark, df)
-        if free_prev:
-            self._free(self._step_ids)
-        else:
-            self._deferred |= self._step_ids
-        self._step_ids = new
+    def step(self, df: DataFrame) -> DataFrame:
+        """Checkpoint one state; frees the state before the previous."""
+        t0 = time.perf_counter()
+        out, ids = _checkpoint_owned(self._spark, df)
+        self._steps += 1
+        wall = time.perf_counter() - t0
+        log.info("%s step %d: %.3f s", self._name, self._steps, wall)
+        self._window.append((out, ids))
+        if len(self._window) > 2:
+            self._free(self._window.pop(0)[1])
         return out
 
-    def release_prev(self) -> None:
-        """Free blocks of steps retained with ``free_prev=False``."""
-        self._free(self._deferred)
-        self._deferred = set()
-
-    def rollback_step(self) -> None:
-        """Free the CURRENT step's blocks and restore the previous step
-        (retained with ``free_prev=False``) as current — for loops
-        whose convergence check decides the newest step is not needed
-        and the PREVIOUS state is the result the caller keeps."""
-        self._free(self._step_ids)
-        self._step_ids = self._deferred
-        self._deferred = set()
-
-    def close(self, keep_last: bool = True) -> None:
-        """Free static checkpoints, any deferred prior-step blocks, and
-        (unless ``keep_last``) the final step's. Call after the last
-        ``step()`` has been produced — its materialized data no longer
-        depends on the statics."""
-        self._free(self._static_ids)
-        self._static_ids = set()
-        self._free(self._deferred)  # loop may exit before release_prev
-        self._deferred = set()
-        if not keep_last:
-            self._free(self._step_ids)
-            self._step_ids = set()
+    def keep(self, state: DataFrame) -> None:
+        """Mark ``state`` (one of the last two steps) as the result."""
+        if all(state is not df for df, _ in self._window):
+            raise ValueError("keep() takes one of the last two step() results")
+        self._kept = state
 
     def _free(self, ids: set[int]) -> None:
         jmap = self._spark.sparkContext._jsc.getPersistentRDDs()

@@ -27,7 +27,6 @@ def pagerank(
     dst: str = "dst",
     checkpoint_interval: int = 5,
     tol: float | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """edges(src, dst) → (node, rank); ranks sum to #nodes.
 
@@ -50,88 +49,80 @@ def pagerank(
     ceiling instead of the exact count. None (default) keeps the
     fixed-iteration contract the byte-exact oracles replicate.
 
-    ``stats``: optional dict the call fills with
-    ``{"iterations": <count actually run>}`` — the lineage-manifest
-    hook, and how the early-exit is testable without timing.
+    Each checkpoint logs ``"pagerank step <i>: <wall> s"`` (``btd.ckpt``
+    logger): iterations run = min(steps * checkpoint_interval, n_iter).
     """
-    loop = CheckpointLoop(edges.sparkSession)
-    # explode, not union-of-projections: one evaluation of the edge
-    # subtree for the node set
-    nodes = loop.static(
-        edges.select(
-            F.explode(F.array(F.col(src), F.col(dst))).alias("node")
-        ).distinct()
-    )
-    n_nodes = nodes.count()
-    out_deg = edges.groupBy(F.col(src).alias("node")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    # pre-join static structure once; re-used every iteration
-    ew = loop.static(
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("dst_node"))
-        .join(out_deg, "node")
-    )
-    # static set of dangling nodes (no out-edges) — computed once
-    dangling_nodes = loop.static(nodes.join(out_deg, "node", "left_anti"))
+    for arg, v in (("n_iter", n_iter), ("checkpoint_interval", checkpoint_interval)):
+        if v < 1:
+            raise ValueError(f"{arg} must be >= 1, got {v}")
+    with CheckpointLoop(edges.sparkSession, "pagerank") as loop:
+        # explode, not union-of-projections: one evaluation of the edge
+        # subtree for the node set
+        nodes = loop.static(
+            edges.select(
+                F.explode(F.array(F.col(src), F.col(dst))).alias("node")
+            ).distinct()
+        )
+        n_nodes = nodes.count()
+        out_deg = edges.groupBy(F.col(src).alias("node")).agg(
+            F.count(F.lit(1)).alias("out_deg")
+        )
+        # pre-join static structure once; re-used every iteration
+        ew = loop.static(
+            edges.select(F.col(src).alias("node"), F.col(dst).alias("dst_node"))
+            .join(out_deg, "node")
+        )
+        # static set of dangling nodes (no out-edges) — computed once
+        dangling_nodes = loop.static(nodes.join(out_deg, "node", "left_anti"))
 
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    prev_ck = ranks  # last checkpointed snapshot (tol mode only)
-    done = 0
-    for it in range(n_iter):
-        contribs = (
-            ew.join(ranks, "node")
-            .groupBy(F.col("dst_node").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("recv"))
-        )
-        # dangling mass as a lazy 1-row aggregate cross-joined in — no
-        # per-iteration driver action; the checkpoint below is the only
-        # job each iteration runs
-        dm = dangling_nodes.join(ranks, "node").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("recv"), F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n_nodes))
-                    )
-                ).alias("rank"),
+        ranks = nodes.withColumn("rank", F.lit(1.0))
+        prev_ck = ranks  # last checkpointed snapshot (tol mode only)
+        for it in range(n_iter):
+            contribs = (
+                ew.join(ranks, "node")
+                .groupBy(F.col("dst_node").alias("node"))
+                .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("recv"))
             )
-        )
-        done = it + 1
-        if done % checkpoint_interval == 0 or it == n_iter - 1:
-            if tol is None or it == n_iter - 1:
-                ranks = loop.step(ranks)
-            else:
-                # keep the previous snapshot's blocks alive through
-                # the convergence diff (free_prev=False), then release
-                # them — both sides are materialized checkpoints, so
-                # the delta is one node-keyed join + a 1-row max, per
-                # CHECKPOINT, not per iteration
-                ranks = loop.step(ranks, free_prev=False)
-                delta = (
-                    ranks.join(
-                        prev_ck.select(
-                            "node", F.col("rank").alias("_prev")
-                        ),
-                        "node",
-                    )
-                    .agg(F.max(F.abs(F.col("rank") - F.col("_prev"))))
-                    .collect()[0][0]
+            # dangling mass as a lazy 1-row aggregate cross-joined in — no
+            # per-iteration driver action; the checkpoint below is the only
+            # job each iteration runs
+            dm = dangling_nodes.join(ranks, "node").agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
+            )
+            ranks = (
+                nodes.join(contribs, "node", "left")
+                .crossJoin(F.broadcast(dm))
+                .select(
+                    "node",
+                    (
+                        F.lit(1.0 - damping)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("recv"), F.lit(0.0))
+                            + F.col("dm") / F.lit(float(n_nodes))
+                        )
+                    ).alias("rank"),
                 )
-                loop.release_prev()
-                if delta is not None and delta < tol:
-                    break
-                prev_ck = ranks
-    if stats is not None:
-        stats["iterations"] = done
-    loop.close()  # statics freed; final ranks keeps its checkpoint
+            )
+            if (it + 1) % checkpoint_interval == 0 or it == n_iter - 1:
+                ranks = loop.step(ranks)
+                if tol is not None and it < n_iter - 1:
+                    # the loop's window keeps the previous snapshot alive:
+                    # both sides are materialized checkpoints, so the delta
+                    # is one node-keyed join + a 1-row max, per CHECKPOINT,
+                    # not per iteration
+                    delta = (
+                        ranks.join(
+                            prev_ck.select("node", F.col("rank").alias("_prev")),
+                            "node",
+                        )
+                        .agg(F.max(F.abs(F.col("rank") - F.col("_prev"))))
+                        .collect()[0][0]
+                    )
+                    if delta is not None and delta < tol:
+                        break
+                    prev_ck = ranks
+        loop.keep(ranks)  # statics and the previous snapshot are freed
     return ranks
 
 
@@ -169,6 +160,8 @@ def khop(
     KG user runs), so the loop is driver-side like :func:`pagerank`,
     no lineage blowup at these depths.
     """
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     e = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_n"))
         .distinct()

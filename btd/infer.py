@@ -27,11 +27,11 @@ Scale posture, stated honestly:
   rule (per-level work bounded by the delta). ``infer`` raises after
   ``max_rounds`` instead of silently truncating, so a rule set that
   needs unbounded recursion fails loudly.
-* Fixpoint detection is one driver-side count of the (checkpointed)
-  fresh-triple set per round — the same bounded driver state
-  discipline as pagerank's convergence check. Lineage is cut per
-  round via :class:`btd.ckpt.CheckpointLoop`; superseded iterations'
-  blocks are freed eagerly.
+* Fixpoint detection is one driver-side ``isEmpty`` of the
+  (checkpointed) fresh-triple set per round — the same bounded driver
+  state discipline as pagerank's convergence check. Lineage is cut per
+  round via :class:`btd.ckpt.CheckpointLoop`, which keeps only the
+  current and previous round's checkpoints alive.
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from btd.bgp import _POSITIONS, _is_var, bgp_match
+from btd.ckpt import CheckpointLoop
 
 Pattern = Sequence[str]
 #: (body patterns, head templates)
@@ -121,8 +122,6 @@ def infer(
     triple never equi-matches in the fixpoint anti-join, so the loop
     could only end in that RuntimeError.
     """
-    from btd.ckpt import CheckpointLoop
-
     rules = [
         (list(body), list(head)) for body, head in rules
     ]
@@ -133,10 +132,8 @@ def infer(
             "infer rules take no optional= patterns: an unbound template "
             "variable derives NULL triples that never reach a fixpoint"
         )
-    loop = CheckpointLoop(triples.sparkSession)
-    g = loop.step(triples.select(*columns).distinct())
-    converged = False
-    try:
+    with CheckpointLoop(triples.sparkSession, "infer") as loop:
+        g = loop.step(triples.select(*columns).distinct())
         for _ in range(max_rounds):
             derived = reduce(
                 lambda a, b: a.unionByName(b),
@@ -145,25 +142,16 @@ def infer(
                     for body, head in rules
                 ],
             )
+            # the window keeps g (previous state) alive for the union below
             fresh = loop.step(
-                derived.join(g, on=list(columns), how="left_anti")
-                .distinct(),
-                free_prev=False,  # g is still an input to the union below
+                derived.join(g, on=list(columns), how="left_anti").distinct()
             )
             if fresh.isEmpty():
-                # g IS the result: drop the empty fresh step and restore
-                # g as the kept checkpoint (close() keeps the last step)
-                loop.rollback_step()
-                converged = True
+                loop.keep(g)  # g IS the result; the empty fresh is freed
                 return g
             g = loop.step(g.unionByName(fresh))
-            loop.release_prev()
         raise RuntimeError(
             f"no fixpoint after {max_rounds} rounds — the rule set "
             "recurses deeper than max_rounds; raise it, or express the "
             "recursive rule as a <p>+ property path (khop BFS)"
         )
-    finally:
-        # on no-fixpoint or any error nothing is returned, so nothing
-        # may stay pinned
-        loop.close(keep_last=converged)

@@ -47,63 +47,60 @@ def connected_components(
         return _connected_components_star(nodes, edges, max_iter)
     if algorithm != "label":
         raise ValueError(f"unknown algorithm: {algorithm!r}")
-    loop = CheckpointLoop(nodes.sparkSession)
-    # undirected: both directions once, reused every iteration. Explode,
-    # not union-of-projections — a union's branches each re-evaluate the
-    # (possibly expensive) edge subtree; explode reads it once.
-    und = loop.static(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("id_b").alias("src"), F.col("id_a").alias("dst")
-                    ),
-                )
-            ).alias("e")
+    with CheckpointLoop(nodes.sparkSession, "components") as loop:
+        # undirected: both directions once, reused every iteration. Explode,
+        # not union-of-projections — a union's branches each re-evaluate
+        # the (possibly expensive) edge subtree; explode reads it once.
+        und = loop.static(
+            edges.select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+                        ),
+                        F.struct(
+                            F.col("id_b").alias("src"), F.col("id_a").alias("dst")
+                        ),
+                    )
+                ).alias("e")
+            )
+            .select("e.src", "e.dst")
+            .distinct()
         )
-        .select("e.src", "e.dst")
-        .distinct()
-    )
-    labels = loop.step(
-        nodes.select("entity_id", F.col("entity_id").alias("canonical_id"))
-    )
+        labels = loop.step(
+            nodes.select("entity_id", F.col("entity_id").alias("canonical_id"))
+        )
 
-    for _ in range(max_iter):
-        msgs = und.join(
-            labels, und.src == labels.entity_id, "inner"
-        ).select(F.col("dst").alias("entity_id"), "canonical_id")
-        new_labels = loop.step(
-            labels.select("entity_id", "canonical_id")
-            .unionByName(msgs)
-            .groupBy("entity_id")
-            .agg(F.min("canonical_id").alias("canonical_id")),
-            free_prev=False,  # convergence diff below still reads labels
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "entity_id")
-            .where(F.col("n.canonical_id") != F.col("o.canonical_id"))
-            .limit(1)
-            .count()
-        )
-        loop.release_prev()
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        _no_fixpoint(loop, max_iter)
-    loop.close()  # statics freed; final labels keeps its checkpoint
+        for _ in range(max_iter):
+            msgs = und.join(
+                labels, und.src == labels.entity_id, "inner"
+            ).select(F.col("dst").alias("entity_id"), "canonical_id")
+            # the loop's window keeps labels alive for the diff below
+            new_labels = loop.step(
+                labels.select("entity_id", "canonical_id")
+                .unionByName(msgs)
+                .groupBy("entity_id")
+                .agg(F.min("canonical_id").alias("canonical_id"))
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "entity_id")
+                .where(F.col("n.canonical_id") != F.col("o.canonical_id"))
+                .limit(1)
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                break
+        else:
+            raise _no_fixpoint(max_iter)
+        loop.keep(labels)
     return labels
 
 
-def _no_fixpoint(loop: CheckpointLoop, max_iter: int) -> None:
-    """Labels that are still changing are wrong, not approximate: free
-    every checkpoint (nothing is returned) and fail loudly."""
-    loop.close(keep_last=False)
-    raise RuntimeError(
+def _no_fixpoint(max_iter: int) -> RuntimeError:
+    """Labels that are still changing are wrong, not approximate."""
+    return RuntimeError(
         f"connected components did not converge within max_iter={max_iter}"
         " rounds; raise max_iter, or use algorithm='star' for deep"
         " components"
@@ -127,98 +124,92 @@ def _connected_components_star(
     where root = component min. IDs compare lexicographically (strings)
     exactly as the label algorithm's F.min election does.
     """
-    loop = CheckpointLoop(nodes.sparkSession)
-    # state is kept max→min oriented and distinct, so set equality is
-    # checkable as (same count) + (no new-minus-old rows)
-    cur = loop.step(
-        edges.select(
-            F.greatest("id_a", "id_b").alias("u"),
-            F.least("id_a", "id_b").alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    n_cur = cur.count()
-
-    for _ in range(max_iter):
-        # ---- large-star ------------------------------------------------
-        und = cur.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u").alias("u"), F.col("v").alias("v")),
-                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
-                )
-            ).alias("e")
-        ).select("e.u", "e.v")
-        nbr_min = und.groupBy("u").agg(F.min("v").alias("mn"))
-        large = (
-            und.join(nbr_min, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(
-                F.col("v").alias("u"),
-                F.least(F.col("mn"), F.col("u")).alias("v"),
+    with CheckpointLoop(nodes.sparkSession, "components_star") as loop:
+        # state is kept max→min oriented and distinct, so set equality is
+        # checkable as (same count) + (no new-minus-old rows)
+        cur = loop.step(
+            edges.select(
+                F.greatest("id_a", "id_b").alias("u"),
+                F.least("id_a", "id_b").alias("v"),
             )
             .where(F.col("u") != F.col("v"))
             .distinct()
         )
-        large = loop.step(large, free_prev=False)
+        n_cur = cur.count()
 
-        # ---- small-star ------------------------------------------------
-        dirmax = (
-            large.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        nmin = dirmax.groupBy("u").agg(F.min("v").alias("mn"))
-        small = (
-            dirmax.join(nmin, "u")
-            .select(
+        for _ in range(max_iter):
+            # ---- large-star --------------------------------------------
+            und = cur.select(
                 F.explode(
                     F.array(
-                        F.struct(F.col("v").alias("a"), F.col("mn").alias("b")),
-                        F.struct(F.col("u").alias("a"), F.col("mn").alias("b")),
+                        F.struct(F.col("u").alias("u"), F.col("v").alias("v")),
+                        F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
                     )
                 ).alias("e")
+            ).select("e.u", "e.v")
+            nbr_min = und.groupBy("u").agg(F.min("v").alias("mn"))
+            large = (
+                und.join(nbr_min, "u")
+                .where(F.col("v") > F.col("u"))
+                .select(
+                    F.col("v").alias("u"),
+                    F.least(F.col("mn"), F.col("u")).alias("v"),
+                )
+                .where(F.col("u") != F.col("v"))
+                .distinct()
             )
-            .select(F.col("e.a").alias("u"), F.col("e.b").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        new = loop.step(small, free_prev=False)
 
-        # set equality (both sides max→min distinct): same cardinality
-        # and no row in new that cur lacks
-        n_new = new.count()
-        changed = (
-            n_new != n_cur
-            or new.exceptAll(cur).limit(1).count() > 0
-        )
-        loop.release_prev()
-        cur, n_cur = new, n_new
-        if not changed:
-            break
-    else:
-        _no_fixpoint(loop, max_iter)
+            # ---- small-star --------------------------------------------
+            dirmax = (
+                large.select(
+                    F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+                )
+                .where(F.col("u") != F.col("v"))
+                .distinct()
+            )
+            nmin = dirmax.groupBy("u").agg(F.min("v").alias("mn"))
+            small = (
+                dirmax.join(nmin, "u")
+                .select(
+                    F.explode(
+                        F.array(
+                            F.struct(F.col("v").alias("a"), F.col("mn").alias("b")),
+                            F.struct(F.col("u").alias("a"), F.col("mn").alias("b")),
+                        )
+                    ).alias("e")
+                )
+                .select(F.col("e.a").alias("u"), F.col("e.b").alias("v"))
+                .where(F.col("u") != F.col("v"))
+                .distinct()
+            )
+            # one checkpoint per round: the window holds cur and new
+            new = loop.step(small)
+            n_new = new.count()
+            changed = (
+                n_new != n_cur
+                or new.exceptAll(cur).limit(1).count() > 0
+            )
+            cur, n_cur = new, n_new
+            if not changed:
+                break
+        else:
+            raise _no_fixpoint(max_iter)
 
-    # at the fixpoint each non-root node has exactly one edge, to the
-    # component root; isolated nodes label themselves
-    member = cur.select(
-        F.greatest("u", "v").alias("entity_id"),
-        F.least("u", "v").alias("root"),
-    ).groupBy("entity_id").agg(F.min("root").alias("root"))
-    labels = (
-        nodes.select("entity_id")
-        .join(member, "entity_id", "left")
-        .select(
-            "entity_id",
-            F.coalesce("root", F.col("entity_id")).alias("canonical_id"),
+        # at the fixpoint each non-root node has exactly one edge, to the
+        # component root; isolated nodes label themselves
+        member = cur.select(
+            F.greatest("u", "v").alias("entity_id"),
+            F.least("u", "v").alias("root"),
+        ).groupBy("entity_id").agg(F.min("root").alias("root"))
+        out = loop.step(
+            nodes.select("entity_id")
+            .join(member, "entity_id", "left")
+            .select(
+                "entity_id",
+                F.coalesce("root", F.col("entity_id")).alias("canonical_id"),
+            )
         )
-    )
-    out = loop.step(labels, free_prev=False)
-    loop.release_prev()
-    loop.close()
+        loop.keep(out)
     return out
 
 

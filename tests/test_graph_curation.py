@@ -2,12 +2,14 @@
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from btd.dataops.curation import curate, deterministic_sample
-from btd.graph import pagerank
+from btd.graph import khop, pagerank
 
 
 def _np_pagerank(edge_list, damping=0.85, n_iter=10):
@@ -45,24 +47,37 @@ def test_pagerank_vs_numpy(spark, edge_list):
     assert abs(sum(got.values()) - len(got)) < 1e-9  # mass conserved
 
 
-def test_pagerank_tol_early_exit_matches_fixed(spark):
+def _pagerank_steps(caplog, edges, **kw):
+    """(ranks dict, number of ``pagerank step`` log records) of one call."""
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger="btd.ckpt"):
+        ranks = {r.node: r.rank for r in pagerank(edges, **kw).collect()}
+    steps = [
+        r for r in caplog.records if r.getMessage().startswith("pagerank step")
+    ]
+    return ranks, len(steps)
+
+
+def test_pagerank_tol_early_exit_matches_fixed(spark, caplog):
     """Convergence early-exit (r4 verdict item 5): on a fast-converging
     graph the tol mode must stop well before the n_iter ceiling (one
     delta check per CHECKPOINT, so the exit lands on a checkpoint
     boundary) and produce ranks identical to the fixed-iteration run
-    at the tolerance."""
+    at the tolerance. Rounds are read off the loop's per-step log."""
     edge_list = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "b")]
     edges = spark.createDataFrame(edge_list, "src string, dst string")
-    stats: dict = {}
-    got = {
+    got, steps = _pagerank_steps(
+        caplog, edges, n_iter=50, checkpoint_interval=5, tol=1e-9
+    )
+    assert steps < 50 // 5  # exits before the ceiling
+    # exits on a checkpoint cut: the ranks ARE the fixed run of
+    # steps * interval iterations
+    at_cut = {
         r.node: r.rank
-        for r in pagerank(
-            edges, n_iter=50, checkpoint_interval=5, tol=1e-9,
-            stats=stats,
-        ).collect()
+        for r in pagerank(edges, n_iter=steps * 5).collect()
     }
-    assert stats["iterations"] < 50
-    assert stats["iterations"] % 5 == 0  # exits on a checkpoint cut
+    for k in at_cut:
+        assert abs(got[k] - at_cut[k]) < 1e-12, k
     fixed = {
         r.node: r.rank
         for r in pagerank(edges, n_iter=50, checkpoint_interval=5).collect()
@@ -71,11 +86,34 @@ def test_pagerank_tol_early_exit_matches_fixed(spark):
         assert abs(got[k] - fixed[k]) < 1e-7, k
     assert abs(sum(got.values()) - len(got)) < 1e-9  # mass conserved
     # tol=None keeps the exact fixed-iteration contract (oracle mode)
-    stats2: dict = {}
-    pagerank(
-        edges, n_iter=10, checkpoint_interval=5, stats=stats2
-    ).collect()
-    assert stats2["iterations"] == 10
+    _, steps = _pagerank_steps(caplog, edges, n_iter=10, checkpoint_interval=5)
+    assert steps == 2
+
+
+@pytest.mark.parametrize("arg", ["n_iter", "checkpoint_interval"])
+def test_pagerank_rejects_nonpositive_args_and_frees(spark, arg):
+    """A non-positive iteration argument raises ValueError naming it
+    before anything is persisted (n_iter=0 would otherwise return a
+    frame whose checkpoint was never taken)."""
+    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match=arg):
+        pagerank(edges, **{arg: 0})
+    assert jsc.getPersistentRDDs().size() == baseline
+
+
+def test_khop_rejects_k_below_one(spark):
+    """"At most k hops" is undefined below k=1: raise rather than return
+    the 1-hop pairs."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")],
+        "src string, dst string",
+    )
+    assert khop(edges, 1).count() == 4
+    for k in (0, -1):
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            khop(edges, k)
 
 
 def test_pagerank_hot_node_ranks_highest(spark, triples_df):

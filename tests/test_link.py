@@ -137,6 +137,22 @@ def test_cc_no_fixpoint_raises_and_frees_every_checkpoint(
     assert jsc.getPersistentRDDs().size() == baseline
 
 
+@pytest.mark.parametrize("algorithm", ["label", "star"])
+def test_cc_bad_input_frees_every_checkpoint(spark, algorithm):
+    """nodes without an entity_id column fail to analyse — in the label
+    path after the edge static is pinned, in the star path after the
+    loop has converged — and must leave no checkpoint behind."""
+    from pyspark.errors import AnalysisException
+
+    nodes = spark.createDataFrame([("a",), ("b",)], "id string")
+    e = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    with pytest.raises(AnalysisException):
+        connected_components(nodes, e, algorithm=algorithm)
+    assert jsc.getPersistentRDDs().size() == baseline
+
+
 def test_label_and_star_agree_on_random_graph(spark):
     """Seeded random graph (multi-component, cycles, isolated nodes):
     identical labels from both algorithms."""
