@@ -156,16 +156,10 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
 # --------------------------------------------------------- minhash-LSH
 
 
-def minhash_candidates(
-    docs: DataFrame, salt_hot_bands: int | None = None
-) -> DataFrame:
-    """LSH banding (btd.lsh): candidate pairs sharing >= 1 band key.
-
-    ``salt_hot_bands``: salt the band self-join for corpora where one
-    band key goes viral (boilerplate text); identical result, see
-    :func:`btd.lsh.band_pairs`."""
+def minhash_candidates(docs: DataFrame) -> DataFrame:
+    """LSH banding (btd.lsh): candidate pairs sharing >= 1 band key."""
     ex = _with_shingles(docs).select("doc_id", F.explode("sh").alias("shingle"))
-    return band_pairs(minhash_bands(ex, "doc_id"), "doc_id", salt_hot_bands)
+    return band_pairs(minhash_bands(ex, "doc_id"), "doc_id")
 
 
 def minhash_near_dup(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
@@ -248,9 +242,7 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", _simhash64(F.col("text")).alias("simhash"))
 
 
-def simhash_near_dup(
-    docs: DataFrame, band_bits: int = 16, salt_hot_bands: int | None = None
-) -> DataFrame:
+def simhash_near_dup(docs: DataFrame, band_bits: int = 16) -> DataFrame:
     """Near-dup candidates: equal 16-bit band of the 64-bit simhash in
     any of 4 bands (classic Hamming-distance blocking)."""
     fps = simhash_fingerprints(docs)
@@ -273,7 +265,7 @@ def simhash_near_dup(
             )
         ).alias("band_key"),
     )
-    return band_pairs(bands, "doc_id", salt_hot_bands)
+    return band_pairs(bands, "doc_id")
 
 
 def auto_band_size(

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from btd.ckpt import CheckpointLoop
+
 
 def normalized(emb: DataFrame) -> DataFrame:
     """(vec_id, en): embedding widened to double and L2-normalized ONCE
@@ -377,37 +379,41 @@ def ivf_train(emb: DataFrame, n_clusters: int = 16, n_iter: int = 3):
     C /= np.linalg.norm(C, axis=1, keepdims=True)
     dim = C.shape[1]
 
-    # persist across the Lloyd iterations: each assignment pass would
-    # otherwise re-run the scan + normalize subtree (n_iter re-reads)
-    n = normalized(emb).persist()
-    for _ in range(n_iter):
-        rank = ivf_assign_kernel(C)
+    # pinned across the Lloyd iterations (each assignment pass would
+    # otherwise re-run the scan + normalize subtree) and freed when the
+    # block ends, by exception too; no step() to log: the loop state is
+    # the driver-side matrix C, not a frame
+    with CheckpointLoop(emb.sparkSession, "ivf_train") as loop:
+        n = loop.static(normalized(emb))
+        for _ in range(n_iter):
+            rank = ivf_assign_kernel(C)
 
-        @F.pandas_udf(T.IntegerType())
-        def _assign(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for batch in it:
-                Q = np.array(list(batch), dtype=np.float64)
-                yield pd.Series(rank(Q)[:, 0].astype("int32"))
+            @F.pandas_udf(T.IntegerType())
+            def _assign(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+                for batch in it:
+                    Q = np.array(list(batch), dtype=np.float64)
+                    yield pd.Series(rank(Q)[:, 0].astype("int32"))
 
-        assigned = n.select(
-            "vec_id", "en", _assign(F.col("en")).alias("cluster")
-        )
-        means = (
-            assigned.select("cluster", F.posexplode("en").alias("pos", "v"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("v").alias("m"))
-            .collect()
-        )
-        newC = C.copy()  # empty clusters keep their previous centroid
-        by_cluster: dict[int, np.ndarray] = {}
-        for r in means:
-            by_cluster.setdefault(r.cluster, np.zeros(dim))[r.pos] = r.m
-        for c, vec in by_cluster.items():
-            nv = np.linalg.norm(vec)
-            if nv > 0:
-                newC[c] = vec / nv
-        C = newC
-    n.unpersist()
+            assigned = n.select(
+                "vec_id", "en", _assign(F.col("en")).alias("cluster")
+            )
+            means = (
+                assigned.select(
+                    "cluster", F.posexplode("en").alias("pos", "v")
+                )
+                .groupBy("cluster", "pos")
+                .agg(F.avg("v").alias("m"))
+                .collect()
+            )
+            newC = C.copy()  # empty clusters keep their previous centroid
+            by_cluster: dict[int, np.ndarray] = {}
+            for r in means:
+                by_cluster.setdefault(r.cluster, np.zeros(dim))[r.pos] = r.m
+            for c, vec in by_cluster.items():
+                nv = np.linalg.norm(vec)
+                if nv > 0:
+                    newC[c] = vec / nv
+            C = newC
     return C
 
 
@@ -614,13 +620,14 @@ def _shard_hot_buckets(grouped: DataFrame, shard_cap: int) -> DataFrame:
     puts ~everything in ONE bucket). Any bucket whose MEMBER occupancy
     (side != 'q') exceeds ``shard_cap`` is split: members hash by
     vec_id into ceil(occ/cap) shards, queries replicate to every shard
-    (the same discipline btd.skew.salted_self_join applies to band
-    joins) — every (query, member) pair of the bucket is still met
-    exactly once, since the member lives in ONE shard and the query
-    visits all. Side 'b' (both) rows of a hot bucket land once as 'm'
-    and once-per-shard as 'q'. Work parallelizes from one occ × occ
-    task into occ/cap tasks of occ × cap; buckets at or under the cap
-    pass through untouched (no row duplication on the common path).
+    (replicate-salting: an applyInPandas group is one Python call that
+    nothing downstream can split) — every (query, member) pair
+    of the bucket is still met exactly once, since the member lives in
+    ONE shard and the query visits all. Side 'b' (both) rows of a hot
+    bucket land once as 'm' and once-per-shard as 'q'. Work
+    parallelizes from one occ × occ task into occ/cap tasks of
+    occ × cap; buckets at or under the cap pass through untouched (no
+    row duplication on the common path).
 
     Payload-generic: every column besides (bucket, side) rides along
     untouched — vectors for the cosine kernels, PQ code arrays for the
@@ -841,46 +848,47 @@ def pq_train(
     )
 
     # caller may hand in an already-persisted normalized frame so the
-    # scan+normalize subtree runs ONCE across train + encode + score
-    owns_n = n is None
-    if owns_n:
-        n = normalized(emb).persist()
-    for _ in range(n_iter):
-        kern = pq_assign_kernel(books)
+    # scan+normalize subtree runs ONCE across train + encode + score;
+    # otherwise one is pinned for the block (see ivf_train)
+    with CheckpointLoop(emb.sparkSession, "pq_train") as loop:
+        if n is None:
+            n = loop.static(normalized(emb))
+        for _ in range(n_iter):
+            kern = pq_assign_kernel(books)
 
-        @F.pandas_udf(T.ArrayType(T.IntegerType()))
-        def _codes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for batch in it:
-                Q = np.array(list(batch), dtype=np.float64)
-                yield pd.Series(list(kern(Q)))
+            @F.pandas_udf(T.ArrayType(T.IntegerType()))
+            def _codes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+                for batch in it:
+                    Q = np.array(list(batch), dtype=np.float64)
+                    yield pd.Series(list(kern(Q)))
 
-        assigned = n.select(
-            "vec_id", "en", _codes(F.col("en")).alias("codes")
-        )
-        means = (
-            assigned.select("codes", F.posexplode("en").alias("pos", "val"))
-            .select(
-                (F.col("pos") / sd).cast("int").alias("s"),
-                F.element_at(
-                    "codes", (F.col("pos") / sd).cast("int") + 1
-                ).alias("code"),
-                (F.col("pos") % sd).alias("i"),
-                "val",
+            assigned = n.select(
+                "vec_id", "en", _codes(F.col("en")).alias("codes")
             )
-            .groupBy("s", "code", "i")
-            .agg(F.avg("val").alias("mv"))
-            .collect()
-        )
-        new = books.copy()  # empty codes keep their previous centroid
-        got = np.zeros((m, n_codes), dtype=bool)
-        tmp = np.zeros_like(books)
-        for r in means:
-            tmp[r.s, r.code, r.i] = r.mv
-            got[r.s, r.code] = True
-        new[got] = tmp[got]
-        books = new
-    if owns_n:
-        n.unpersist()
+            means = (
+                assigned.select(
+                    "codes", F.posexplode("en").alias("pos", "val")
+                )
+                .select(
+                    (F.col("pos") / sd).cast("int").alias("s"),
+                    F.element_at(
+                        "codes", (F.col("pos") / sd).cast("int") + 1
+                    ).alias("code"),
+                    (F.col("pos") % sd).alias("i"),
+                    "val",
+                )
+                .groupBy("s", "code", "i")
+                .agg(F.avg("val").alias("mv"))
+                .collect()
+            )
+            new = books.copy()  # empty codes keep their previous centroid
+            got = np.zeros((m, n_codes), dtype=bool)
+            tmp = np.zeros_like(books)
+            for r in means:
+                tmp[r.s, r.code, r.i] = r.mv
+                got[r.s, r.code] = True
+            new[got] = tmp[got]
+            books = new
     return books
 
 

@@ -5,9 +5,9 @@ Pipeline: normalize surface → char-3gram shingles (explode) →
 btd.lsh.minhash_bands → self-join on band key. A second, cheap blocker
 on the last name-token catches person-name variants whose shingle
 jaccard is too low for LSH (standard multi-pass blocking). Self-join is
-on (band, key) — at scale AQE skew-split handles hot bands
-(stopword-ish tokens), and candidates are deduplicated before scoring
-so each pair is scored once.
+on (band, key) — hot bands (stopword-ish tokens) are purged by
+``max_block_size``, and candidates are deduplicated before scoring so
+each pair is scored once.
 """
 
 from __future__ import annotations
@@ -38,15 +38,10 @@ def shingles(col, n: int = 3):
 
 
 def candidate_pairs(
-    entities: DataFrame,
-    salt_hot_bands: int | None = None,
-    max_block_size: int | None = None,
+    entities: DataFrame, max_block_size: int | None = None
 ) -> DataFrame:
     """entities(entity_id, surface) → (id_a, id_b) candidate pairs,
     id_a < id_b, deduplicated across blockers.
-
-    ``salt_hot_bands``: salt the block self-join against a viral
-    surface form (see :func:`btd.lsh.band_pairs`); identical result.
 
     ``max_block_size``: block purging (standard entity-resolution
     block cleaning). A block key shared by more than K entities has no
@@ -60,9 +55,10 @@ def candidate_pairs(
     blocker redundancy: a true alias pair lost with a purged hot band
     is still generated by the name-token blocker (and vice versa);
     oracle parity at the gate corpus verifies exactness there (cap
-    128 is a no-op below ~100-occupancy blocks). Salting fixes WHERE
-    a hot block's pairs are computed; purging fixes HOW MANY exist —
-    they compose.
+    128 is a no-op below ~100-occupancy blocks). It is also the hot
+    block answer: AQE's skew split keys on input bytes, which a hot
+    block's posting list never reaches, so an unpurged block's pairs
+    come out of one task (SCALE.md, "What breaks first").
     """
     ents = entities.withColumn("norm", normalize(F.col("surface")))
 
@@ -88,4 +84,4 @@ def candidate_pairs(
         blocks = blocks.join(
             sizes.where(F.col("_bn") <= max_block_size), "band_key"
         ).drop("_bn")
-    return band_pairs(blocks, "entity_id", salt_hot_bands)
+    return band_pairs(blocks, "entity_id")

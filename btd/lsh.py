@@ -48,23 +48,9 @@ def minhash_bands(shingles: DataFrame, id_col: str) -> DataFrame:
     return sigs.select(id_col, F.explode(F.array(*keys)).alias("band_key"))
 
 
-def band_pairs(
-    bands: DataFrame, id_col: str, salt_hot_bands: int | None = None
-) -> DataFrame:
+def band_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     """bands(id_col, band_key) → distinct (id_a, id_b), id_a < id_b,
-    for every two ids sharing a band key.
-
-    ``salt_hot_bands``: replicate-salt the self-join over that many
-    salts (btd.skew.salted_self_join) when a viral surface form or
-    boilerplate text makes one band's posting list swamp a reducer
-    past what AQE skew-split fixes; the result is identical either way.
-    """
-    if salt_hot_bands:
-        from btd.skew import salted_self_join
-
-        return salted_self_join(
-            bands, "band_key", id_col, n_salts=salt_hot_bands
-        )
+    for every two ids sharing a band key."""
     a = bands.alias("a")
     b = bands.alias("b")
     return (

@@ -31,10 +31,17 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(needs_sample)
 
 
+def _test_heap() -> str:
+    """The test JVM's heap ceiling: half of physical memory, capped at
+    8g. The production default (``BTD_DRIVER_MEM``, 24g) can outgrow a
+    smaller host shared with other jobs and get the JVM OOM-killed
+    mid-suite."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(8192, phys_mb // 2)}m"
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
-    import os
-
     if os.environ.get("BTD_TEST_VANILLA") == "1":
         # robustness mode: the bare builder, none of btd.session's
         # tuned confs — correctness must not depend on session tuning
@@ -46,7 +53,12 @@ def spark() -> SparkSession:
             .getOrCreate()
         )
     else:
-        s = get_spark("btd-tests", cores=8, shuffle_partitions=8)
+        s = get_spark(
+            "btd-tests",
+            cores=8,
+            shuffle_partitions=8,
+            extra_conf={"spark.driver.memory": _test_heap()},
+        )
     yield s
     s.stop()
 

@@ -16,6 +16,7 @@ from btd.dataops.dedup import (
     ngram_jaccard_pairs,
     simhash_fingerprints,
     simhash_near_dup,
+    winnow_near_dup,
 )
 from btd.dataops.multimodal import decode_image, extract_features, synthesize_media
 from btd.dataops.similarity import blas_near_dup, blas_topk, lsh_topk
@@ -189,6 +190,36 @@ def test_lsh_topk_structure_and_recall(spark, emb):
     # overall recall@1 is approximate but must be well above chance
     hits = sum(1 for k in brute if k in approx and approx[k] == brute[k])
     assert hits / len(brute) >= 0.2
+
+
+def test_winnow_max_fp_df_purges_boilerplate_keeps_planted(spark):
+    """max_fp_df on a planted corpus like BENCH/winnowprobe.py's: docs
+    (2i, 2i+1) share a 30-token run inside ~100 otherwise-private
+    tokens, and 32 of the 40 docs also carry one 30-token boilerplate
+    block. The boilerplate's fingerprints have df 32, so unpurged they
+    pair most of the corpus; purged at df 8, the planted pairs stay
+    (recall floor) and the pair count stays near theirs (ceiling)."""
+    n_docs = 40
+    boiler = " ".join(f"boilertok{j}" for j in range(30))
+    rows = []
+    for i in range(n_docs):
+        private = " ".join(f"d{i}w{j}" for j in range(40))
+        planted = " ".join(f"p{i // 2}t{j}" for j in range(30))
+        text = f"{private} {planted}"
+        rows.append((i, f"{text} {boiler}" if i % 5 else text))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    planted_pairs = {(i, i + 1) for i in range(0, n_docs, 2)}
+
+    purged = {
+        (r.doc_id_a, r.doc_id_b)
+        for r in winnow_near_dup(docs, max_fp_df=8).collect()
+    }
+    recall = len(planted_pairs & purged) / len(planted_pairs)
+    assert recall >= 0.95, f"planted recall {recall:.2f}"
+    assert len(purged) <= 2 * len(planted_pairs), len(purged)
+    # the ceiling only means something if the boilerplate really pairs
+    # the corpus without the purge: C(32, 2) = 496 boilerplate pairs
+    assert winnow_near_dup(docs).count() > 10 * len(planted_pairs)
 
 
 def test_token_stats_vs_python(spark, docs, docs_pd):

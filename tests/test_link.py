@@ -13,6 +13,7 @@ from btd.fixtures import GAZETTEER
 from btd.link.blocking import candidate_pairs
 from btd.link.canonical import canonicalize_entities, connected_components
 from btd.link.scoring import score_candidates, score_pair_py
+from btd.lsh import band_pairs
 
 
 @pytest.fixture(scope="module")
@@ -197,6 +198,27 @@ def test_canonicalize_matches_gazetteer(spark, entities):
     # deterministic election: canonical is the min surface of its cluster
     for canon, members in got.items():
         assert canon == min(members)
+
+
+def test_band_pairs_hot_band_exact(spark):
+    """One band key holds 80 of 100 ids (a viral band) and every id also
+    sits in a parity band, so most pairs meet in two bands: the band
+    self-join returns each pair sharing a key exactly once, id_a < id_b."""
+    rows = [(i, "hot" if i < 80 else f"cold{i % 7}") for i in range(100)]
+    rows += [(i, f"parity{i % 2}") for i in range(100)]
+    bands = spark.createDataFrame(rows, "i long, band_key string")
+    got = band_pairs(bands, "i").collect()
+    members: dict[str, list[int]] = {}
+    for i, key in rows:
+        members.setdefault(key, []).append(i)
+    want = {
+        pair
+        for ids in members.values()
+        for pair in itertools.combinations(sorted(ids), 2)
+    }
+    assert len(got) == len(want)  # no pair twice
+    assert {(r.id_a, r.id_b) for r in got} == want
+    assert len(want) > 80 * 79 // 2  # the hot band dominates the pair set
 
 
 def test_block_purging_noop_below_cap_and_prunes_hot_block(spark, entities):

@@ -10,7 +10,13 @@ import pytest
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from btd.dataops.similarity import blas_near_dup, blas_topk, normalized
+from btd.dataops.similarity import (
+    blas_near_dup,
+    blas_topk,
+    ivf_train,
+    normalized,
+    pq_train,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -308,3 +314,29 @@ def test_pq_topk_recall_floor_and_parity_shape(spark, emb):
     assert all(r["count"] == 3 for r in per_q)
     r = recall_at_k(pq, blas_topk(emb, 3), k=3).collect()[0]
     assert r["avg_recall_at_k"] >= 0.25, r
+
+
+@pytest.mark.parametrize("which", ["ivf", "pq"])
+def test_train_bad_input_frees(spark, which):
+    """A ragged embedding (one 2-dim vector among 4-dim ones, past the
+    init rows) fails inside the Lloyd loop; the pinned normalized
+    corpus must still be freed. Each case builds its own frame (its
+    own vec_id offset): persist() on an already-cached plan is a no-op,
+    so a shared frame would hide the second leak."""
+    from pyspark.errors import PythonException
+
+    offset = {"ivf": 0, "pq": 1000}[which]
+    rows = [
+        (offset + i, [float(i % 5 + 1), 1.0, float(i % 3), 2.0])
+        for i in range(40)
+    ]
+    rows.append((offset + 40, [1.0, 2.0]))
+    bad = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    with pytest.raises(PythonException):
+        if which == "ivf":
+            ivf_train(bad, n_clusters=4, n_iter=2)
+        else:
+            pq_train(bad, m=2, n_codes=4, n_iter=2)
+    assert jsc.getPersistentRDDs().size() == baseline
