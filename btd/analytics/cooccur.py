@@ -19,6 +19,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _basket_items(
+    df: DataFrame, basket: str, item: str, max_size: int | None
+) -> DataFrame:
+    """Distinct (_b, _i) basket memberships, baskets wider than
+    ``max_size`` purged: widths are counted by a window over the
+    basket-hashed exchange the distinct already made."""
+    items = df.select(
+        F.col(basket).alias("_b"), F.col(item).alias("_i")
+    ).distinct()
+    if max_size is None:
+        return items
+    w = Window.partitionBy("_b")
+    return (
+        items.withColumn("_sz", F.count(F.lit(1)).over(w))
+        .where(F.col("_sz") <= max_size)
+        .drop("_sz")
+    )
+
+
 def basket_cooccurrence(
     df: DataFrame,
     basket: str,
@@ -40,20 +59,10 @@ def basket_cooccurrence(
     carrying near-zero signal — every pair in a mega-basket has
     support ≥ its size only from itself).
     """
-    items = df.select(
-        F.col(basket).alias("_b"), F.col(item).alias("_i")
-    ).distinct()
-    if max_basket_size is not None:
-        w = Window.partitionBy("_b")
-        items = (
-            items.withColumn("_sz", F.count(F.lit(1)).over(w))
-            .where(F.col("_sz") <= max_basket_size)
-            .drop("_sz")
-        )
-    a = items
+    items = _basket_items(df, basket, item, max_basket_size)
     b = items.select("_b", F.col("_i").alias("_j"))
     return (
-        a.join(b, "_b")
+        items.join(b, "_b")
         .where(F.col("_i") < F.col("_j"))
         .groupBy(
             F.col("_i").alias("item_a"), F.col("_j").alias("item_b")
@@ -91,16 +100,7 @@ def neighborhood_jaccard(
     counted; at scale you set it high and let the count stay partial-
     aggregated).
     """
-    pairs = df.select(
-        F.col(neighbor).alias("_b"), F.col(node).alias("_i")
-    ).distinct()
-    if max_neighbor_degree is not None:
-        w = Window.partitionBy("_b")
-        pairs = (
-            pairs.withColumn("_sz", F.count(F.lit(1)).over(w))
-            .where(F.col("_sz") <= max_neighbor_degree)
-            .drop("_sz")
-        )
+    pairs = _basket_items(df, neighbor, node, max_neighbor_degree)
     deg = pairs.groupBy(F.col("_i").alias("_n")).agg(
         F.count(F.lit(1)).alias("_deg")
     )
@@ -156,16 +156,7 @@ def adamic_adar(
     both engines; the pair-sum's summation-order drift (~1e-15) sits
     9 orders below the rounding step.
     """
-    pairs = df.select(
-        F.col(neighbor).alias("_b"), F.col(node).alias("_i")
-    ).distinct()
-    if max_neighbor_degree is not None:
-        w = Window.partitionBy("_b")
-        pairs = (
-            pairs.withColumn("_sz", F.count(F.lit(1)).over(w))
-            .where(F.col("_sz") <= max_neighbor_degree)
-            .drop("_sz")
-        )
+    pairs = _basket_items(df, neighbor, node, max_neighbor_degree)
     deg = pairs.groupBy("_b").agg(F.count(F.lit(1)).alias("_deg"))
     weighted = pairs.join(deg, "_b").select(
         "_b", "_i", (F.lit(1.0) / F.log(F.col("_deg"))).alias("_w")

@@ -9,7 +9,8 @@ plus the total so callers can divide.
 Bug compatibility (SURVEY.md §7.4): the reference's ``hasBlankObject``
 tests the SUBJECT (RDFStatement.java:40-42) and the published
 blank-object count inherits the bug (report/report.md:594-599).
-``compat='reference'`` reproduces it; default computes the correct test.
+``compat='reference'`` reproduces it; the default ``'correct'`` computes the
+correct test, and any other value raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -20,6 +21,8 @@ from pyspark.sql import functions as F
 
 def percentages(triples: DataFrame, compat: str = "correct") -> DataFrame:
     """One row: blank_subject / blank_object / no_context / total counts."""
+    if compat not in ("correct", "reference"):
+        raise ValueError(f"unknown compat: {compat!r}")
     blank_obj_col = "subject" if compat == "reference" else "object"
     one = F.lit(1)
     zero = F.lit(0)

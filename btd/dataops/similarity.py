@@ -17,6 +17,7 @@ import hashlib
 import struct
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -24,16 +25,41 @@ from pyspark.sql import functions as F
 from btd.ckpt import CheckpointLoop
 
 
+def _unit():
+    """The embedding widened to double and L2-normalized by a
+    sequential JVM fold — the one normalize expression here."""
+    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    nrm = F.sqrt(F.aggregate(dbl, F.lit(0.0), lambda acc, v: acc + v * v))
+    return F.transform(dbl, lambda x: x / nrm)
+
+
 def normalized(emb: DataFrame) -> DataFrame:
     """(vec_id, en): embedding widened to double and L2-normalized ONCE
     per row — pairwise cosine then costs a single fold instead of
     dot + two norms (3× fewer interpreted array-lambda evals; array
     higher-order functions don't enter whole-stage codegen)."""
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    nrm = F.sqrt(F.aggregate(dbl, F.lit(0.0), lambda acc, v: acc + v * v))
+    return emb.select("vec_id", _unit().alias("en"))
+
+
+def _widened(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding) with the embedding cast to array<double>."""
     return emb.select(
-        "vec_id", F.transform(dbl, lambda x: x / nrm).alias("en")
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
+
+
+def _vec_udf(fn, col: str):
+    """The one Python boundary of the per-row vector kernels: a pandas
+    UDF over ``col`` that hands ``fn`` each Arrow batch as a float64
+    (rows, dim) matrix; ``fn`` returns a (rows, w) int matrix, one
+    array<int> per row."""
+
+    @F.pandas_udf("array<int>")
+    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for batch in it:
+            yield pd.Series(list(fn(np.array(list(batch), dtype=np.float64))))
+
+    return udf(F.col(col))
 
 
 def _batch_cosines(pdf: pd.DataFrame, Mn):
@@ -142,13 +168,9 @@ def hyperplanes(dim: int, n_planes: int = 8) -> list[list[float]]:
 
 
 def lsh_bucket(
-    emb: DataFrame,
-    dim: int,
-    n_tables: int = 8,
-    bits: int = 4,
-    carry_embedding: bool = False,
+    emb: DataFrame, dim: int, n_tables: int = 8, bits: int = 4
 ) -> DataFrame:
-    """(vec_id, bucket[, embedding]): each vector exploded into
+    """(vec_id, bucket, embedding): each vector exploded into
     ``n_tables`` bucket keys, each a ``bits``-bit sign signature over
     its own hyperplane set. Multi-table LSH: a true neighbor missed by
     one table is caught by another — recall 1-(1-p^bits)^n_tables
@@ -159,14 +181,11 @@ def lsh_bucket(
     is interpreted per element (higher-order functions don't enter
     codegen) and measured ~5× slower at this kernel's width.
 
-    ``carry_embedding``: emit the vector alongside each bucket key so
-    downstream bucket-LOCAL scoring needs no join back to the table —
-    n_tables copies of each vector shuffle exactly once (the shape the
-    100x probe demanded; see :func:`_bucket_local_pairs`).
+    Each bucket row carries its vector (as double) so downstream
+    bucket-LOCAL scoring needs no join back to the table — n_tables
+    copies of each vector shuffle exactly once (the shape the 100x
+    probe demanded; see :func:`_bucket_local_pairs`).
     """
-    import numpy as np
-    import pandas as pd
-
     P = np.array(hyperplanes(dim, n_tables * bits), dtype=np.float64).T
 
     def kernel(batches):
@@ -186,17 +205,27 @@ def lsh_bucket(
                     keys.append(
                         f"{t}:" + "".join("1" if b else "0" for b in s)
                     )
-            out = {"vec_id": out_ids, "bucket": keys}
-            if carry_embedding:
-                out["embedding"] = [
-                    list(v) for v in np.repeat(Q, n_tables, axis=0)
-                ]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {
+                    "vec_id": out_ids,
+                    "bucket": keys,
+                    "embedding": [
+                        list(v) for v in np.repeat(Q, n_tables, axis=0)
+                    ],
+                }
+            )
 
-    schema = "vec_id long, bucket string"
-    if carry_embedding:
-        schema += ", embedding array<double>"
-    return emb.select("vec_id", "embedding").mapInPandas(kernel, schema)
+    return emb.select("vec_id", "embedding").mapInPandas(
+        kernel, "vec_id long, bucket string, embedding array<double>"
+    )
+
+
+def _lsh_grouped(emb: DataFrame, dim: int, n_tables: int, bits) -> DataFrame:
+    """lsh_bucket rows tagged side 'b' for :func:`_bucket_local_pairs`;
+    ``bits=None`` auto-sizes (:func:`auto_lsh_bits`, one count job)."""
+    if bits is None:
+        bits = auto_lsh_bits(emb.count(), n_tables)
+    return lsh_bucket(emb, dim, n_tables, bits).withColumn("side", F.lit("b"))
 
 
 def auto_lsh_bits(n: int, n_tables: int = 8, target_pairs_per_vec: int = 1024) -> int:
@@ -270,12 +299,7 @@ def lsh_topk(
     Bucket-local top-k provably preserves the global top-k because the
     local order (cosine DESC, id_b ASC) equals the global rank order.
     """
-    if bits is None:
-        bits = auto_lsh_bits(emb.count(), n_tables)
-
-    grouped = lsh_bucket(
-        emb, dim, n_tables, bits, carry_embedding=True
-    ).withColumn("side", F.lit("b"))
+    grouped = _lsh_grouped(emb, dim, n_tables, bits)
     return _global_topk(_bucket_local_pairs(grouped, k=k).distinct(), k)
 
 
@@ -326,11 +350,7 @@ def lsh_near_dup(
     p = 1 - angle/pi. Every emitted pair is exact (scored with the
     same ROUND(,6) float path as the baseline), so precision is 1.
     """
-    if bits is None:
-        bits = auto_lsh_bits(emb.count(), n_tables)
-    grouped = lsh_bucket(
-        emb, dim, n_tables, bits, carry_embedding=True
-    ).withColumn("side", F.lit("b"))
+    grouped = _lsh_grouped(emb, dim, n_tables, bits)
     # threshold pushed INTO the bucket kernel: output is proportional
     # to true near-dups, and vectors never ride a pair row
     return _bucket_local_pairs(grouped, threshold=threshold).distinct()
@@ -361,76 +381,95 @@ def ivf_assign_kernel(centroids):
     return rank_clusters
 
 
+def _ranked(C, p: int):
+    """Q → each row's ``p`` nearest centroids of ``C`` (int32, best
+    first) under the oracle-matched :func:`ivf_assign_kernel` ranking:
+    p = 1 is the home cluster, p = nprobe the probe list."""
+    rank = ivf_assign_kernel(C)
+    return lambda Q: rank(Q)[:, :p].astype(np.int32)
+
+
+def _home(C):
+    """int column: each embedding's home cluster under ``C``."""
+    return _vec_udf(_ranked(C, 1), "embedding")[0]
+
+
+def _lloyd(emb, n, m: int, k: int, assign, n_iter: int, unit: bool):
+    """Deterministic Lloyd iterations, Spark-native — the one trainer
+    behind ivf_train (m = 1, unit centroids) and pq_train (m subspaces,
+    plain means). Trains ``m`` codebooks of ``k`` centroids over the
+    sub-vectors en[s*sd:(s+1)*sd] of ``n``, an already-pinned
+    :func:`normalized` frame.
+
+    Init = the ``k`` smallest vec_ids' vectors of ``emb``, normalized
+    (seedless, rerun-stable). Plan per iteration: ONE Arrow-batched
+    assignment ``assign(books)`` (Q → (rows, m) codes) + ONE
+    partial-aggregated (subspace, code, position) mean — all m
+    subspaces ride the same exchange (position → subspace is
+    arithmetic, not a per-subspace job). Driver state = the (m, k, sd)
+    codebooks, never the corpus. A centroid no row chose keeps its
+    previous value; ``unit`` renormalizes the others.
+
+    Returns (m, k, dim//m) numpy.
+    """
+    init = emb.orderBy("vec_id").limit(k).collect()
+    X = np.array([r.embedding for r in init], dtype=np.float64)
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    dim = X.shape[1]
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
+    sd = dim // m
+    books = X.reshape(k, m, sd).transpose(1, 0, 2).copy()
+    sub = (F.col("pos") / sd).cast("int")
+    for _ in range(n_iter):
+        assigned = n.select("en", _vec_udf(assign(books), "en").alias("codes"))
+        means = (
+            assigned.select("codes", F.posexplode("en").alias("pos", "val"))
+            .select(
+                sub.alias("s"),
+                F.element_at("codes", sub + 1).alias("code"),
+                (F.col("pos") % sd).alias("i"),
+                "val",
+            )
+            .groupBy("s", "code", "i")
+            .agg(F.avg("val").alias("mv"))
+            .collect()
+        )
+        tmp = np.zeros_like(books)
+        got = np.zeros((m, k), dtype=bool)
+        for r in means:
+            tmp[r.s, r.code, r.i] = r.mv
+            got[r.s, r.code] = True
+        for s, c in zip(*np.nonzero(got)):
+            nv = np.linalg.norm(tmp[s, c]) if unit else 1.0
+            if nv > 0:
+                books[s, c] = tmp[s, c] / nv
+    return books
+
+
+def _ivf_lloyd(emb, n, n_clusters: int, n_iter: int):
+    """The IVF codebook: :func:`_lloyd` with one subspace, home
+    assignment and renormalized (cosine) centroids → (k, dim)."""
+    return _lloyd(
+        emb, n, 1, n_clusters, lambda B: _ranked(B[0], 1), n_iter, unit=True
+    )[0]
+
+
 def ivf_train(emb: DataFrame, n_clusters: int = 16, n_iter: int = 3):
-    """Deterministic Lloyd iterations, Spark-native: assignment is an
-    Arrow-batched argmax against the broadcast centroid matrix (k×dim
-    driver state — the only thing collected); the centroid update is a
-    posexplode + groupBy(cluster, pos) mean, i.e. one partial-aggregated
-    shuffle per iteration. Init = the ``n_clusters`` smallest vec_ids'
-    vectors (seedless, rerun-stable).
+    """The IVF coarse codebook: :func:`_lloyd` over one subspace,
+    assignment by the discretized argmax of :func:`ivf_assign_kernel`
+    against the broadcast centroid matrix, centroids renormalized.
+
+    The normalized corpus is pinned across the Lloyd iterations (each
+    assignment pass would otherwise re-run the scan + normalize
+    subtree) and freed when the block ends, by exception too; no
+    step() to log: the loop state is the driver-side codebook, not a
+    frame.
 
     Returns the final (k, dim) normalized centroid matrix (numpy).
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    init = emb.orderBy("vec_id").limit(n_clusters).collect()
-    C = np.array([r.embedding for r in init], dtype=np.float64)
-    C /= np.linalg.norm(C, axis=1, keepdims=True)
-    dim = C.shape[1]
-
-    # pinned across the Lloyd iterations (each assignment pass would
-    # otherwise re-run the scan + normalize subtree) and freed when the
-    # block ends, by exception too; no step() to log: the loop state is
-    # the driver-side matrix C, not a frame
     with CheckpointLoop(emb.sparkSession, "ivf_train") as loop:
-        n = loop.static(normalized(emb))
-        for _ in range(n_iter):
-            rank = ivf_assign_kernel(C)
-
-            @F.pandas_udf(T.IntegerType())
-            def _assign(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-                for batch in it:
-                    Q = np.array(list(batch), dtype=np.float64)
-                    yield pd.Series(rank(Q)[:, 0].astype("int32"))
-
-            assigned = n.select(
-                "vec_id", "en", _assign(F.col("en")).alias("cluster")
-            )
-            means = (
-                assigned.select(
-                    "cluster", F.posexplode("en").alias("pos", "v")
-                )
-                .groupBy("cluster", "pos")
-                .agg(F.avg("v").alias("m"))
-                .collect()
-            )
-            newC = C.copy()  # empty clusters keep their previous centroid
-            by_cluster: dict[int, np.ndarray] = {}
-            for r in means:
-                by_cluster.setdefault(r.cluster, np.zeros(dim))[r.pos] = r.m
-            for c, vec in by_cluster.items():
-                nv = np.linalg.norm(vec)
-                if nv > 0:
-                    newC[c] = vec / nv
-            C = newC
-    return C
-
-
-def _home_udf(rank):
-    """pandas-UDF: embedding → home cluster (rank[0]) under the given
-    assignment kernel. Shared by ivf_topk and cluster_sample so the
-    oracle-critical discretized argmax exists in one place."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.IntegerType())
-    def _home(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in it:
-            Q = np.array(list(batch), dtype=np.float64)
-            yield pd.Series(rank(Q)[:, 0].astype("int32"))
-
-    return _home
+        return _ivf_lloyd(emb, loop.static(normalized(emb)), n_clusters, n_iter)
 
 
 def cluster_sample(
@@ -460,10 +499,7 @@ def cluster_sample(
     if n_clusters is None:
         n_clusters = auto_nlist(emb.count())
     C = ivf_train(emb, n_clusters, n_iter)
-    buckets = emb.select(
-        "vec_id",
-        _home_udf(ivf_assign_kernel(C))(F.col("embedding")).alias("cluster"),
-    )
+    buckets = emb.select("vec_id", _home(C).alias("cluster"))
     w = Window.partitionBy("cluster").orderBy("vec_id")
     return (
         buckets.withColumn("rn", F.row_number().over(w))
@@ -477,7 +513,7 @@ def ivf_topk(
     k: int = 5,
     n_clusters: int | None = None,
     n_iter: int = 3,
-    nprobe: int | None = None,
+    nprobe: int = 8,
     shard_cap: int = 8192,
 ) -> DataFrame:
     """Approximate top-k via IVF: deterministic k-means buckets, each
@@ -493,56 +529,43 @@ def ivf_topk(
     rule): occupancy and probe cost both scale as sqrt(n) — total
     candidate volume O(n^1.5) — instead of a fixed cluster count whose
     occupancy n/nlist makes the probe join quadratic (measured 59 s vs
-    14 s at 20k vectors). ``nprobe=None`` defaults to 8 (measured at
+    14 s at 20k vectors). ``nprobe`` defaults to 8 (measured at
     auto nlist, 2k random vectors: recall 0.60 vs the fixed layout's
     0.57, at ~60%% of its wall time). Explicit values pin the layout
     for the DuckDB oracle twin (which replicates the auto rule's value
     at the gate corpus: nlist = max(16, round(sqrt(500))) = 22).
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
     if n_clusters is None:
         n_clusters = auto_nlist(emb.count())
-    if nprobe is None:
-        nprobe = 8
     C = ivf_train(emb, n_clusters, n_iter)
-    rank = ivf_assign_kernel(C)
-    _home = _home_udf(rank)
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _probes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in it:
-            Q = np.array(list(batch), dtype=np.float64)
-            yield pd.Series(
-                [list(map(int, row[:nprobe])) for row in rank(Q)]
-            )
-
     # bucket-local scoring (_bucket_local_pairs): members land in their
     # home cluster once, queries fan out to their nprobe clusters, the
     # per-cluster matmul emits <= k rows per (query, cluster) — vectors
     # shuffle (1 + nprobe) x n times total instead of once per PAIR
     # (the join+dot scorer measured ~90 GB of vector payload and 172x
     # wall at the 100x probe; see BENCH/sf10_probe_r03.json)
-    e2 = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    grouped = _probe_layout(
+        _widened(emb), C, nprobe, ["embedding"], ["embedding"]
     )
-    members = e2.select(
-        _home(F.col("embedding")).alias("bucket"),
-        F.lit("m").alias("side"),
-        "vec_id",
-        "embedding",
+    pairs = _bucket_local_pairs(grouped, k=k, shard_cap=shard_cap).distinct()
+    return _global_topk(pairs, k)
+
+
+def _probe_layout(base, C, nprobe: int, member: list, query: list) -> DataFrame:
+    """(bucket, side, vec_id, *payload) over ``base`` (vec_id,
+    embedding, ...): each vector once as a member ('m') of its home
+    cluster and once as a query ('q') of each of its ``nprobe`` nearest
+    clusters; ``member`` / ``query`` name each side's payload columns."""
+    members = base.select(
+        _home(C).alias("bucket"), F.lit("m").alias("side"), "vec_id", *member
     )
-    queries = e2.select(
-        F.explode(_probes(F.col("embedding"))).alias("bucket"),
+    queries = base.select(
+        F.explode(_vec_udf(_ranked(C, nprobe), "embedding")).alias("bucket"),
         F.lit("q").alias("side"),
         "vec_id",
-        "embedding",
+        *query,
     )
-    pairs = _bucket_local_pairs(
-        members.unionByName(queries), k=k, shard_cap=shard_cap
-    ).distinct()
-    return _global_topk(pairs, k)
+    return members.unionByName(queries)
 
 
 def auto_semdedup_nlist(n: int, cluster_target: int = 200) -> int:
@@ -592,11 +615,8 @@ def semantic_dedup(
     # cluster-local scoring: each vector lands in its ONE home cluster
     # (so no cross-bucket pair dedup is even possible), the threshold
     # runs inside the kernel, and pair rows never carry vectors
-    e2 = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    grouped = e2.select(
-        _home_udf(ivf_assign_kernel(C))(F.col("embedding")).alias("bucket"),
+    grouped = _widened(emb).select(
+        _home(C).alias("bucket"),
         F.lit("b").alias("side"),
         "vec_id",
         "embedding",
@@ -810,86 +830,19 @@ def pq_assign_kernel(books):
     return codes_of
 
 
-def pq_train(
-    emb: DataFrame,
-    m: int = 4,
-    n_codes: int = 16,
-    n_iter: int = 3,
-    n: DataFrame | None = None,
-):
+def pq_train(emb: DataFrame, m: int = 4, n_codes: int = 16, n_iter: int = 3):
     """Per-subspace L2 k-means codebooks over the NORMALIZED vectors —
     product quantization's training step (Jégou et al., TPAMI 2011;
-    public method). Deterministic like ivf_train: init = the
-    ``n_codes`` smallest vec_ids' subvectors, assignment discretized
-    (pq_assign_kernel), centroids are plain means (NOT renormalized —
-    PQ centroids live inside the subspace ball), empty codes keep the
-    previous centroid.
-
-    Plan per iteration: ONE Arrow-batched code assignment (narrow) +
-    ONE partial-aggregated (subspace, code, position) mean — all m
-    subspaces ride the same exchange (position → subspace is
-    arithmetic, not a per-subspace job). Driver state = m·n_codes·sd
-    doubles (the codebooks), never the corpus.
+    public method): :func:`_lloyd` over ``m`` subspaces, assignment
+    discretized by :func:`pq_assign_kernel`, centroids plain means (NOT
+    renormalized — PQ centroids live inside the subspace ball). The
+    normalized corpus is pinned for the block, like ivf_train.
 
     Returns (m, n_codes, dim//m) numpy.
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    init = emb.orderBy("vec_id").limit(n_codes).collect()
-    N0 = np.array([r.embedding for r in init], dtype=np.float64)
-    N0 /= np.linalg.norm(N0, axis=1, keepdims=True)
-    dim = N0.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    sd = dim // m
-    books = np.stack(
-        [N0[:, s * sd:(s + 1) * sd].copy() for s in range(m)]
-    )
-
-    # caller may hand in an already-persisted normalized frame so the
-    # scan+normalize subtree runs ONCE across train + encode + score;
-    # otherwise one is pinned for the block (see ivf_train)
     with CheckpointLoop(emb.sparkSession, "pq_train") as loop:
-        if n is None:
-            n = loop.static(normalized(emb))
-        for _ in range(n_iter):
-            kern = pq_assign_kernel(books)
-
-            @F.pandas_udf(T.ArrayType(T.IntegerType()))
-            def _codes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-                for batch in it:
-                    Q = np.array(list(batch), dtype=np.float64)
-                    yield pd.Series(list(kern(Q)))
-
-            assigned = n.select(
-                "vec_id", "en", _codes(F.col("en")).alias("codes")
-            )
-            means = (
-                assigned.select(
-                    "codes", F.posexplode("en").alias("pos", "val")
-                )
-                .select(
-                    (F.col("pos") / sd).cast("int").alias("s"),
-                    F.element_at(
-                        "codes", (F.col("pos") / sd).cast("int") + 1
-                    ).alias("code"),
-                    (F.col("pos") % sd).alias("i"),
-                    "val",
-                )
-                .groupBy("s", "code", "i")
-                .agg(F.avg("val").alias("mv"))
-                .collect()
-            )
-            new = books.copy()  # empty codes keep their previous centroid
-            got = np.zeros((m, n_codes), dtype=bool)
-            tmp = np.zeros_like(books)
-            for r in means:
-                tmp[r.s, r.code, r.i] = r.mv
-                got[r.s, r.code] = True
-            new[got] = tmp[got]
-            books = new
-    return books
+        n = loop.static(normalized(emb))
+        return _lloyd(emb, n, m, n_codes, pq_assign_kernel, n_iter, unit=False)
 
 
 def pq_topk(
@@ -899,7 +852,7 @@ def pq_topk(
     n_codes: int = 16,
     n_iter: int = 3,
     n_clusters: int | None = None,
-    nprobe: int | None = None,
+    nprobe: int = 8,
     shard_cap: int = 8192,
 ) -> DataFrame:
     """(id_a, id_b, adc, rank): approximate top-k by IVF-bucketed PQ
@@ -927,8 +880,9 @@ def pq_topk(
     (query, member) pair is scored at most once. This replaces the
     r4 design that collected the full normalized matrix to the driver
     (O(n·dim) driver memory + a corpus-sized broadcast — the one
-    scale-killer the r4 verdict flagged); the persisted normalize is
-    also released after training instead of leaking for the session.
+    scale-killer the r4 verdict flagged). Both codebooks train from ONE
+    normalized corpus pinned for the training block and freed when it
+    ends, by exception too.
 
     ``n_clusters=None`` → the shared auto_nlist √n rule; ``nprobe``
     defaults to 8 like ivf_topk; explicit values pin the layout for
@@ -939,66 +893,31 @@ def pq_topk(
     The contract is the exact-oracle-verified bucketing+ADC kernel
     with recall MEASURED (recall_at_k), not assumed.
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
     if n_clusters is None:
         n_clusters = auto_nlist(emb.count())
-    if nprobe is None:
-        nprobe = 8
-    # one persisted normalize feeds the PQ Lloyd passes, then is
-    # RELEASED — training is eager (the codebooks are numpy), so the
-    # scoring streams below rebuild the normalize lazily (one
-    # stateless rescan each, the same trade _shard_hot_buckets makes)
-    n = normalized(emb).persist()
-    books = pq_train(emb, m=m, n_codes=n_codes, n_iter=n_iter, n=n)
-    C = ivf_train(emb, n_clusters, n_iter)
-    n.unpersist()
-    kern = pq_assign_kernel(books)
-    rank = ivf_assign_kernel(C)
-    _home = _home_udf(rank)
+    # training is eager (the codebooks are numpy), so the scoring
+    # streams below rebuild the normalize lazily (one stateless rescan
+    # each, the same trade _shard_hot_buckets makes)
+    with CheckpointLoop(emb.sparkSession, "pq_topk") as loop:
+        n = loop.static(normalized(emb))
+        books = _lloyd(emb, n, m, n_codes, pq_assign_kernel, n_iter, unit=False)
+        C = _ivf_lloyd(emb, n, n_clusters, n_iter)
     _, _, sd = books.shape
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _probes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in it:
-            Q = np.array(list(batch), dtype=np.float64)
-            yield pd.Series(
-                [list(map(int, row[:nprobe])) for row in rank(Q)]
-            )
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _codes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in it:
-            X = np.array(list(batch), dtype=np.float64)
-            yield pd.Series(list(kern(X)))
 
     # home/probe assignment reads the RAW embedding (the kernel
     # normalizes once, matching the oracle's single-normalize v.e);
-    # PQ codes read the JVM-normalized en, matching pq_train
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    nrm = F.sqrt(F.aggregate(dbl, F.lit(0.0), lambda acc, v: acc + v * v))
-    base = emb.select(
-        "vec_id",
-        dbl.alias("embedding"),
-        F.transform(dbl, lambda x: x / nrm).alias("en"),
-    )
-    members = base.select(
-        _home(F.col("embedding")).alias("bucket"),
-        F.lit("m").alias("side"),
-        "vec_id",
-        _codes(F.col("en")).alias("codes"),
-        F.lit(None).cast("array<double>").alias("en"),
-    )
-    queries = base.select(
-        F.explode(_probes(F.col("embedding"))).alias("bucket"),
-        F.lit("q").alias("side"),
-        "vec_id",
-        F.lit(None).cast("array<int>").alias("codes"),
-        "en",
-    )
+    # PQ codes read the JVM-normalized en, matching the training
+    base = _widened(emb).withColumn("en", _unit())
+    codes = _vec_udf(pq_assign_kernel(books), "en").alias("codes")
     grouped = _shard_hot_buckets(
-        members.unionByName(queries), shard_cap
+        _probe_layout(
+            base,
+            C,
+            nprobe,
+            [codes, F.lit(None).cast("array<double>").alias("en")],
+            [F.lit(None).cast("array<int>").alias("codes"), "en"],
+        ),
+        shard_cap,
     )
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -203,6 +203,53 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
+def _tokens(docs: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, _t, _n): each doc's whitespace tokens and their
+    count."""
+    return docs.select(
+        "doc_id", *keep, F.split("text", " ").alias("_t")
+    ).withColumn("_n", F.size("_t"))
+
+
+def _bigrams(toks: DataFrame) -> DataFrame:
+    """(doc_id, *keep, w1, w2) from :func:`_tokens`: every adjacent
+    token pair by slice+zip (narrow, no self-join); docs with < 2
+    tokens carry none."""
+    keep = [c for c in toks.columns if c not in ("_t", "_n")]
+    return (
+        toks.where(F.col("_n") >= 2)
+        .select(
+            *keep,
+            F.explode(
+                F.arrays_zip(
+                    F.slice("_t", 1, F.col("_n") - 1).alias("w1"),
+                    F.slice(F.col("_t"), 2, F.col("_n") - 1).alias("w2"),
+                )
+            ).alias("_p"),
+        )
+        .select(*keep, F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2"))
+    )
+
+
+def _with_bigram_model(
+    bg: DataFrame, train: DataFrame, c12: str, c1: str, how: str = "inner"
+) -> DataFrame:
+    """``bg`` joined (``how``) to the add-one bigram model's counts over
+    the ``train`` bigrams: ``c12`` = c(w1,w2) from ONE
+    partial-aggregated (w1,w2) exchange, ``c1`` = c(w1·) summed from
+    that vocabulary-sized model table itself, not the corpus."""
+    model = train.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias(c12))
+    starts = model.groupBy("w1").agg(F.sum(c12).alias(c1))
+    return bg.join(model, ["w1", "w2"], how).join(starts, "w1", how)
+
+
+def _vocab(toks: DataFrame, name: str) -> DataFrame:
+    """1 row: ``name`` = distinct tokens over :func:`_tokens` rows."""
+    return toks.select(F.explode("_t").alias("_w")).agg(
+        F.count_distinct("_w").alias(name)
+    )
+
+
 def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, avg_logp): score every document by the mean
     log-probability of its word bigrams under an add-one-smoothed
@@ -225,32 +272,11 @@ def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     double on both engines; the 1e-13-scale summation-order drift of
     the mean sits 7 orders below the rounding step.
     """
-    toks = docs.select(
-        "doc_id", F.split("text", " ").alias("_t")
-    ).withColumn("_n", F.size("_t"))
-    bg = (
-        toks.where(F.col("_n") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("_t", 1, F.col("_n") - 1).alias("w1"),
-                    F.slice(F.col("_t"), 2, F.col("_n") - 1).alias("w2"),
-                )
-            ).alias("_p"),
-        )
-        .select("doc_id", F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2"))
-    )
-    model = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    starts = model.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("_w"))
-        .agg(F.count_distinct("_w").alias("v"))
-    )
+    toks = _tokens(docs)
+    bg = _bigrams(toks)
     scored = (
-        bg.join(model, ["w1", "w2"])
-        .join(starts, "w1")
-        .crossJoin(F.broadcast(vocab))
+        _with_bigram_model(bg, bg, "c12", "c1")
+        .crossJoin(F.broadcast(_vocab(toks, "v")))
         .select(
             "doc_id",
             F.log(
@@ -361,9 +387,7 @@ def dsir_weights(docs: DataFrame, target_source: str) -> DataFrame:
     ROUND(,6) of a mean of exact same-input doubles — engine-stable
     like avg_logp.
     """
-    toks = docs.select(
-        "doc_id", "source", F.split("text", " ").alias("_t")
-    ).withColumn("_n", F.size("_t"))
+    toks = _tokens(docs, "source")
     # fail fast on an empty target slice: tv would be 0, making the
     # target denominator 0 — log(x/0) is inf/NULL (or an ANSI error),
     # which would silently poison every weight instead of pointing at
@@ -376,54 +400,21 @@ def dsir_weights(docs: DataFrame, target_source: str) -> DataFrame:
             f"dsir_weights: no documents with source={target_source!r} — "
             "the target bigram model would be empty (vocab 0)"
         )
-    bg = (
-        toks.where(F.col("_n") >= 2)
-        .select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("_t", 1, F.col("_n") - 1).alias("w1"),
-                    F.slice(F.col("_t"), 2, F.col("_n") - 1).alias("w2"),
-                )
-            ).alias("_p"),
-        )
-        .select(
-            "doc_id", "source",
-            F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2"),
-        )
-    )
-    corpus_model = bg.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("c12")
-    )
-    corpus_starts = corpus_model.groupBy("w1").agg(
-        F.sum("c12").alias("c1")
-    )
+    bg = _bigrams(toks)
+    is_tgt = F.col("source") == target_source
     # vocab rides the ALREADY-SPLIT token frame (toks has every doc —
     # the n>=2 filter applies only to bg), not a second scan+split of
     # the text column (review finding r4)
-    corpus_vocab = toks.select(F.explode("_t").alias("_w")).agg(
-        F.count_distinct("_w").alias("v")
-    )
-
-    tgt = bg.where(F.col("source") == target_source)
-    tgt_model = tgt.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("t12")
-    )
-    tgt_starts = tgt_model.groupBy("w1").agg(F.sum("t12").alias("t1"))
-    tgt_vocab = (
-        toks.where(F.col("source") == target_source)
-        .select(F.explode("_t").alias("_w"))
-        .agg(F.count_distinct("_w").alias("tv"))
-    )
-
     scored = (
-        bg.join(corpus_model, ["w1", "w2"])
-        .join(corpus_starts, "w1")
-        .join(tgt_model, ["w1", "w2"], "left")
-        .join(tgt_starts, "w1", "left")
-        .crossJoin(F.broadcast(corpus_vocab))
-        .crossJoin(F.broadcast(tgt_vocab))
+        _with_bigram_model(
+            _with_bigram_model(bg, bg, "c12", "c1"),
+            bg.where(is_tgt),
+            "t12",
+            "t1",
+            how="left",
+        )
+        .crossJoin(F.broadcast(_vocab(toks, "v")))
+        .crossJoin(F.broadcast(_vocab(toks.where(is_tgt), "tv")))
         .select(
             "doc_id",
             (
@@ -469,9 +460,7 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window
 
-    toks = docs.select(
-        "doc_id", F.split("text", " ").alias("_t")
-    ).withColumn("_n", F.size("_t"))
+    toks = _tokens(docs)
     grams = (
         toks.where(F.col("_n") >= k)
         .select(

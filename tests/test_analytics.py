@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import collections
 
+import pytest
+
 from btd.analytics import (
     distinct_contexts_per_triple,
     distinct_subject_count,
@@ -69,6 +71,8 @@ def test_percentages_correct_and_compat(spark, triples_df, triples_rows):
     # reference bug-compat: blank_object mirrors blank_subject
     rc = percentages(triples_df, compat="reference").collect()[0]
     assert rc.blank_object == rc.blank_subject == bs
+    with pytest.raises(ValueError, match="refrence"):
+        percentages(triples_df, compat="refrence")
 
 
 def test_distinct_contexts_per_triple(spark, triples_df, triples_rows):

@@ -15,6 +15,7 @@ from btd.dataops.similarity import (
     blas_topk,
     ivf_train,
     normalized,
+    pq_topk,
     pq_train,
 )
 
@@ -316,7 +317,7 @@ def test_pq_topk_recall_floor_and_parity_shape(spark, emb):
     assert r["avg_recall_at_k"] >= 0.25, r
 
 
-@pytest.mark.parametrize("which", ["ivf", "pq"])
+@pytest.mark.parametrize("which", ["ivf", "pq", "pq_topk"])
 def test_train_bad_input_frees(spark, which):
     """A ragged embedding (one 2-dim vector among 4-dim ones, past the
     init rows) fails inside the Lloyd loop; the pinned normalized
@@ -325,7 +326,7 @@ def test_train_bad_input_frees(spark, which):
     so a shared frame would hide the second leak."""
     from pyspark.errors import PythonException
 
-    offset = {"ivf": 0, "pq": 1000}[which]
+    offset = {"ivf": 0, "pq": 1000, "pq_topk": 2000}[which]
     rows = [
         (offset + i, [float(i % 5 + 1), 1.0, float(i % 3), 2.0])
         for i in range(40)
@@ -337,6 +338,8 @@ def test_train_bad_input_frees(spark, which):
     with pytest.raises(PythonException):
         if which == "ivf":
             ivf_train(bad, n_clusters=4, n_iter=2)
-        else:
+        elif which == "pq":
             pq_train(bad, m=2, n_codes=4, n_iter=2)
+        else:
+            pq_topk(bad, m=2, n_codes=4, n_iter=2)
     assert jsc.getPersistentRDDs().size() == baseline
