@@ -1293,7 +1293,7 @@ def gates() -> tuple[tuple[str, QueryFn, str], ...]:
 
         # 3-37: the stale tail, last graded r03/r04: the training-data ops
         # (btd/dataops/contract.py; the three near-dup rows run the
-        # btd.lsh.band_pairs join) and the ev_* batch suite
+        # btd.lsh.key_pairs kernel) and the ev_* batch suite
         ("doc_curation", D._q_curation, D.CURATION_SQL),
         ("doc_sample", D._q_doc_sample, D.DOC_SAMPLE_SQL),
         ("doc_exact_dedup", D._q_exact_dedup, D.EXACT_DEDUP_SQL),

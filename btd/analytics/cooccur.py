@@ -7,35 +7,19 @@ The scale discipline is the per-basket self-join: pair volume is
 Σ m_b² over basket sizes m_b — bounded by the data model's basket
 width, NOT the corpus size, so it stays linear as baskets accumulate.
 The hazard is a pathological mega-basket (one basket holding 10⁵
-items → 10¹⁰ pairs); ``max_basket_size`` purges those before pairing,
-the same guard the LSH blocking join uses (btd/link/blocking.py).
-The pair aggregation itself keys on (item_a, item_b) — hot ITEMS are
-harmless because no shuffle keys on a single item.
+items → 10¹⁰ pairs); ``max_basket_size`` purges those before pairing.
+All three functions are calls to the one shared-key pair kernel and
+its purge (btd.lsh.key_pairs, basket = key). The pair aggregation
+keys on (item_a, item_b) — hot ITEMS are harmless because no shuffle
+keys on a single item.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _basket_items(
-    df: DataFrame, basket: str, item: str, max_size: int | None
-) -> DataFrame:
-    """Distinct (_b, _i) basket memberships, baskets wider than
-    ``max_size`` purged: widths are counted by a window over the
-    basket-hashed exchange the distinct already made."""
-    items = df.select(
-        F.col(basket).alias("_b"), F.col(item).alias("_i")
-    ).distinct()
-    if max_size is None:
-        return items
-    w = Window.partitionBy("_b")
-    return (
-        items.withColumn("_sz", F.count(F.lit(1)).over(w))
-        .where(F.col("_sz") <= max_size)
-        .drop("_sz")
-    )
+from btd.lsh import _purge_hot_keys, key_pairs
 
 
 def basket_cooccurrence(
@@ -48,28 +32,21 @@ def basket_cooccurrence(
     """(item_a, item_b, n_baskets): unordered item pairs co-occurring
     in at least ``min_shared`` distinct baskets, item_a < item_b.
 
-    Plan: distinct (basket, item) — one exchange that also de-dupes
-    repeated items within a basket — then a self-equi-join on basket
-    (co-partitioned: both sides arrive hashed by basket, so the join
-    itself is shuffle-free on top of the distinct), then one
-    partial-aggregated count keyed by the pair. With
-    ``max_basket_size``, basket widths are counted with a window over
-    the same basket-hashed exchange and oversized baskets dropped
-    before pairing (purged baskets would dominate pair volume while
-    carrying near-zero signal — every pair in a mega-basket has
-    support ≥ its size only from itself).
+    Distinct (basket, item) memberships — one exchange hashed on both,
+    which also de-dupes repeated items within a basket — then
+    ``key_pairs`` with basket = key: a window over a basket-hashed
+    exchange sizes baskets when ``max_basket_size`` is set (the
+    self-join reuses that exchange), then one partial-aggregated count
+    per pair. ``max_basket_size`` drops oversized baskets before
+    pairing: they would dominate pair volume while carrying near-zero
+    signal.
     """
-    items = _basket_items(df, basket, item, max_basket_size)
-    b = items.select("_b", F.col("_i").alias("_j"))
-    return (
-        items.join(b, "_b")
-        .where(F.col("_i") < F.col("_j"))
-        .groupBy(
-            F.col("_i").alias("item_a"), F.col("_j").alias("item_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_baskets"))
-        .where(F.col("n_baskets") >= min_shared)
-    )
+    items = df.select(basket, item).distinct()
+    return key_pairs(items, basket, item, max_basket_size).select(
+        F.col("id_a").alias("item_a"),
+        F.col("id_b").alias("item_b"),
+        F.col("n_shared").alias("n_baskets"),
+    ).where(F.col("n_baskets") >= min_shared)
 
 
 def neighborhood_jaccard(
@@ -100,31 +77,22 @@ def neighborhood_jaccard(
     counted; at scale you set it high and let the count stay partial-
     aggregated).
     """
-    pairs = _basket_items(df, neighbor, node, max_neighbor_degree)
-    deg = pairs.groupBy(F.col("_i").alias("_n")).agg(
-        F.count(F.lit(1)).alias("_deg")
-    )
-    other = pairs.select("_b", F.col("_i").alias("_j"))
-    common = (
-        pairs.join(other, "_b")
-        .where(F.col("_i") < F.col("_j"))
-        .groupBy("_i", "_j")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    m = df.select(F.col(neighbor).alias("_k"), F.col(node).alias("_i")).distinct()
+    if max_neighbor_degree is not None:
+        m = _purge_hot_keys(m, "_k", max_neighbor_degree)
+    deg = m.groupBy("_i").agg(F.count(F.lit(1)).alias("_d"))
+    n = F.col("n_shared")
     return (
-        common.join(deg.withColumnRenamed("_n", "_i"), "_i")
-        .withColumnRenamed("_deg", "_di")
-        .join(deg.withColumnRenamed("_n", "_j"), "_j")
-        .withColumnRenamed("_deg", "_dj")
+        key_pairs(m, "_k", "_i")
+        .join(deg.toDF("id_a", "_da"), "id_a")
+        .join(deg.toDF("id_b", "_db"), "id_b")
         .select(
-            F.col("_i").alias("node_a"),
-            F.col("_j").alias("node_b"),
-            "n_common",
-            F.round(
-                F.col("n_common")
-                / (F.col("_di") + F.col("_dj") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
+            F.col("id_a").alias("node_a"),
+            F.col("id_b").alias("node_b"),
+            n.alias("n_common"),
+            F.round(n / (F.col("_da") + F.col("_db") - n), 6).alias(
+                "jaccard"
+            ),
         )
         .where(F.col("jaccard") >= min_jaccard)
     )
@@ -145,27 +113,22 @@ def adamic_adar(
 
     Same candidate-generation scale shape (pairs only through shared
     neighbors, Σ deg² bounded, ``max_neighbor_degree`` purge knob),
-    but the per-neighbor weight rides the pairing join, so scoring
-    needs NO degree re-join afterward: distinct edges → neighbor
-    degree (one partial-aggregated exchange) → self-join through the
-    neighbor carrying 1/ln(deg) → pair-keyed sum. A degree-1 neighbor
-    is shared by nobody, so ln(deg) ≥ ln 2 wherever a weight is
-    evaluated — no division hazard.
+    but the per-neighbor weight rides the pairing join: it is
+    ``key_pairs``' ``adamic_adar`` sum over the key size its purge
+    window already counts (on distinct memberships, so |key| =
+    deg(z)), so there is no degree group-by or re-join. A
+    degree-1 neighbor is shared by nobody, so ln(deg) ≥ ln 2 wherever
+    a weight is summed — no division hazard.
 
     aa_score is ROUND(,6): addends are exact same-input doubles on
     both engines; the pair-sum's summation-order drift (~1e-15) sits
     9 orders below the rounding step.
     """
-    pairs = _basket_items(df, neighbor, node, max_neighbor_degree)
-    deg = pairs.groupBy("_b").agg(F.count(F.lit(1)).alias("_deg"))
-    weighted = pairs.join(deg, "_b").select(
-        "_b", "_i", (F.lit(1.0) / F.log(F.col("_deg"))).alias("_w")
-    )
-    other = weighted.select("_b", F.col("_i").alias("_j"), "_w")
-    return (
-        weighted.drop("_w")
-        .join(other, "_b")
-        .where(F.col("_i") < F.col("_j"))
-        .groupBy(F.col("_i").alias("node_a"), F.col("_j").alias("node_b"))
-        .agg(F.round(F.sum("_w"), 6).alias("aa_score"))
+    edges = df.select(neighbor, node).distinct()
+    return key_pairs(
+        edges, neighbor, node, max_neighbor_degree, adamic_adar=True
+    ).select(
+        F.col("id_a").alias("node_a"),
+        F.col("id_b").alias("node_b"),
+        F.round("w_sum", 6).alias("aa_score"),
     )

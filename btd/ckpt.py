@@ -14,7 +14,9 @@ aggregation after one PageRank run.
 older ones), so a convergence test can always read both;
 ``keep(state)`` names which of the two is the result; leaving the
 block frees the ``static`` inputs and every other state — everything,
-if the block exits by exception. Each step logs
+if the block exits by exception. The kept state outlives the block:
+``release(df)`` frees it once the caller is done with ``df`` or with
+any frame built on it (a wrapper's ``select`` or join). Each step logs
 ``"<name> step <i>: <wall> s"`` at INFO on ``btd.ckpt``, with no row
 count: counting would cost one more Spark job per step.
 
@@ -35,6 +37,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger(__name__)
+
+# the RDD name that marks a kept loop result for release()
+_KEPT = "CheckpointLoop.keep"
 
 
 def _persistent_ids(spark: SparkSession) -> set[int]:
@@ -94,13 +99,31 @@ class CheckpointLoop:
 
     def keep(self, state: DataFrame) -> None:
         """Mark ``state`` (one of the last two steps) as the result."""
-        if all(state is not df for df, _ in self._window):
+        ids = next((ids for df, ids in self._window if df is state), None)
+        if ids is None:
             raise ValueError("keep() takes one of the last two step() results")
         self._kept = state
+        for rdd in self._rdds(ids):
+            rdd.setName(_KEPT)
+
+    def _rdds(self, ids: set[int]) -> list:
+        """The still-persisted JavaRDDs among ``ids``."""
+        jmap = self._spark.sparkContext._jsc.getPersistentRDDs()
+        return [rdd for rdd in map(jmap.get, ids) if rdd is not None]
 
     def _free(self, ids: set[int]) -> None:
-        jmap = self._spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in ids:
-            rdd = jmap.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
+        for rdd in self._rdds(ids):
+            rdd.unpersist(False)
+
+
+def release(df: DataFrame) -> None:
+    """Free the ``CheckpointLoop.keep`` checkpoints ``df`` reads from —
+    the ``LogicalRDD`` leaves of its analyzed plan that a ``keep``
+    marked, so a caller's own ``persist`` or checkpoint is never
+    touched. Call it after the last action on ``df``: a freed local
+    checkpoint cannot be recomputed."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for leaf in (leaves.apply(i) for i in range(leaves.size())):
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            if leaf.rdd().name() == _KEPT:
+                leaf.rdd().unpersist(False)

@@ -105,7 +105,7 @@ def _q_minhash_near_dup(spark, sf):
     return minhash_near_dup(docs_with_dups(spark, sf), 0.5)
 
 
-#: MinHash signatures, band keys and the band self-join (btd.lsh) over
+#: MinHash signatures, band keys and the band pairs (btd.lsh) over
 #: the shingle sets, shared by the near-dup and dedup-groups oracles
 _SIG_COLS = ", ".join(f"min(md5('{i}:' || shingle)) AS sig_{i}" for i in range(8))
 _BAND_LIST = ", ".join(

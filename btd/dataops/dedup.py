@@ -7,12 +7,13 @@ Scale notes (the point of each variant):
   equi-join on shingle — full recall, cost ~ sum of posting-list²; the
   quadratic baseline you run at small scale to validate the LSH path.
 - MinHash-LSH (btd.lsh, shared with entity blocking): signatures in
-  ONE groupBy (k partial mins), banding self-join — the 100 TB path;
+  ONE groupBy (k partial mins), band pairs from the shared-key pair
+  kernel btd.lsh.key_pairs — the 100 TB path;
   recall is probabilistic, precision restored by the same
   exact-jaccard verification as the n-gram path, on candidates only.
 - SimHash: 64-bit fingerprint via vectorized pandas UDF (bit ops are
-  Python/numpy territory), near-dup = equal band keys (same band
-  self-join as MinHash).
+  Python/numpy territory), near-dup = equal band keys (same
+  key_pairs kernel as MinHash).
 
 Hashes are md5-derived so the DuckDB oracle can reproduce them
 byte-for-byte.
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from btd.lsh import NUM_HASHES, band_pairs, minhash_bands
+from btd.lsh import key_pairs, minhash_bands
 
 # ---------------------------------------------------------------- exact
 
@@ -108,6 +109,10 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     the naive inverted-index join, but hot shingles (the quadratic
     posting lists) fall out of the prefixes — at 100 TB the join cost
     tracks rare-shingle co-occurrence, not stopword n-gram frequency.
+    The self-join stays here rather than in btd.lsh.key_pairs because
+    its length filter is a join predicate: the prefix postings run
+    through the kernel (no length filter) gave the same rows but were
+    slower at sf0.1 on local[4] (pair medians 8.96 s vs 8.0 s).
     """
     from pyspark.sql import Window
 
@@ -159,7 +164,9 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
 def minhash_candidates(docs: DataFrame) -> DataFrame:
     """LSH banding (btd.lsh): candidate pairs sharing >= 1 band key."""
     ex = _with_shingles(docs).select("doc_id", F.explode("sh").alias("shingle"))
-    return band_pairs(minhash_bands(ex, "doc_id"), "doc_id")
+    return key_pairs(minhash_bands(ex, "doc_id"), "band_key", "doc_id").select(
+        "id_a", "id_b"
+    )
 
 
 def minhash_near_dup(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
@@ -265,39 +272,7 @@ def simhash_near_dup(docs: DataFrame, band_bits: int = 16) -> DataFrame:
             )
         ).alias("band_key"),
     )
-    return band_pairs(bands, "doc_id")
-
-
-def auto_band_size(
-    threshold: float, num_hashes: int = NUM_HASHES
-) -> tuple[int, int]:
-    """(band_size, n_bands) whose LSH S-curve midpoint sits closest to
-    the target Jaccard ``threshold`` — the standard (1/b)^(1/r) rule
-    (Leskovec/Rajaraman/Ullman, MMDS ch.3): with r rows per band and
-    b bands, a pair at similarity s collides with probability
-    1-(1-s^r)^b, steepest at s* ≈ (1/b)^(1/r). Scanning the divisors
-    of ``num_hashes`` is exact (there are ≤ d(num_hashes) layouts).
-
-    Same auto-sizing discipline as auto_lsh_bits/auto_nlist, but keyed
-    to the SIMILARITY target instead of the corpus size: a 0.9 exact-
-    dup sweep wants narrow bands caught late (fewer false candidates);
-    a 0.5 fuzzy sweep wants wide early-collision bands. At NUM_HASHES=8
-    the midpoints are r=1→0.125, r=2→0.5, r=4→0.841, r=8→1.0; the
-    default (r=2, t≈0.5) is what the graded gate pins, so this helper
-    changes nothing unless callers opt in.
-    """
-    if not 0 < threshold < 1:
-        raise ValueError(f"threshold must be in (0,1): {threshold}")
-    best = None
-    for r in range(1, num_hashes + 1):
-        if num_hashes % r:
-            continue
-        b = num_hashes // r
-        mid = (1.0 / b) ** (1.0 / r) if b > 1 else 1.0
-        d = abs(mid - threshold)
-        if best is None or d < best[0]:
-            best = (d, r, b)
-    return best[1], best[2]
+    return key_pairs(bands, "band_key", "doc_id").select("id_a", "id_b")
 
 
 def winnow_near_dup(
@@ -318,11 +293,11 @@ def winnow_near_dup(
     detection at corpus scale.
 
     Pure composition: winnow_fingerprints (one bounded-frame window +
-    a distinct) feeding basket_cooccurrence with the roles flipped —
-    basket = fingerprint, item = doc_id — so pair volume is
-    Σ df(fp)² over fingerprint document-frequencies, and a
-    boilerplate fingerprint shared by half the corpus is exactly the
-    mega-basket ``max_fp_df`` purges before pairing (near-zero signal,
+    a distinct) feeding the shared-key pair kernel (btd.lsh.key_pairs,
+    via basket_cooccurrence) with key = fingerprint, id = doc_id — so
+    pair volume is Σ df(fp)² over fingerprint document-frequencies,
+    and a boilerplate fingerprint shared by half the corpus is exactly
+    the hot key ``max_fp_df`` purges before pairing (near-zero signal,
     quadratic cost — the same judgment as stopword lists).
     """
     from btd.analytics.cooccur import basket_cooccurrence

@@ -2,12 +2,12 @@
 blocker, pure Catalyst.
 
 Pipeline: normalize surface → char-3gram shingles (explode) →
-btd.lsh.minhash_bands → self-join on band key. A second, cheap blocker
-on the last name-token catches person-name variants whose shingle
-jaccard is too low for LSH (standard multi-pass blocking). Self-join is
-on (band, key) — hot bands (stopword-ish tokens) are purged by
-``max_block_size``, and candidates are deduplicated before scoring so
-each pair is scored once.
+btd.lsh.minhash_bands → btd.lsh.key_pairs on the block key. A second,
+cheap blocker on the last name-token catches person-name variants whose
+shingle jaccard is too low for LSH (standard multi-pass blocking). Both
+blockers' keys go through one key_pairs call, so hot blocks
+(stopword-ish tokens) are purged by its ``max_key_size`` cap
+(``max_block_size``) and each candidate pair comes out once.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from btd.lsh import band_pairs, minhash_bands
+from btd.lsh import key_pairs, minhash_bands
 
 
 def normalize(col):
@@ -76,12 +76,7 @@ def candidate_pairs(
         ),
     )
 
-    blocks = bands.unionByName(tokens)
-    if max_block_size:
-        sizes = blocks.groupBy("band_key").agg(
-            F.count(F.lit(1)).alias("_bn")
-        )
-        blocks = blocks.join(
-            sizes.where(F.col("_bn") <= max_block_size), "band_key"
-        ).drop("_bn")
-    return band_pairs(blocks, "entity_id")
+    return key_pairs(
+        bands.unionByName(tokens), "band_key", "entity_id",
+        max_block_size or None,
+    ).select("id_a", "id_b")

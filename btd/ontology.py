@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from btd.lsh import _purge_hot_keys
+
 
 def ontology_stats(triples: DataFrame) -> DataFrame:
     """Per-predicate schema profile: assertion count, distinct
@@ -136,22 +138,18 @@ def two_hop_reach(
     shuffle each side — then a distinct count keyed by source. The
     scale hazard is a hub mid (an object with 10⁶ in-edges joined to
     10⁶ out-edges → 10¹² pairs); ``max_mid_fanout`` purges mids whose
-    OUT-degree exceeds the cap before the join, the same discipline as
-    basket_cooccurrence's mega-basket purge (btd/analytics/cooccur.py)
-    — a hub's two-hop contribution is near-zero signal at quadratic
-    cost. khop (btd/graph.py:138) answers the general-k BFS form; this
-    is the declarative k=2 with exact distinct counting.
+    OUT-degree exceeds the cap before the join, through the one
+    hot-key purge of the shared-key pair kernel
+    (btd.lsh._purge_hot_keys) — a hub's two-hop contribution is
+    near-zero signal at quadratic cost. khop (btd/graph.py:138)
+    answers the general-k BFS form; this is the declarative k=2 with
+    exact distinct counting.
     """
     right = edges.select(
         F.col("subject").alias("_mid"), F.col("object").alias("_dst")
     )
     if max_mid_fanout is not None:
-        w = Window.partitionBy("_mid")
-        right = (
-            right.withColumn("_deg", F.count(F.lit(1)).over(w))
-            .where(F.col("_deg") <= max_mid_fanout)
-            .drop("_deg")
-        )
+        right = _purge_hot_keys(right, "_mid", max_mid_fanout).drop("_n")
     left = edges.select(
         F.col("subject").alias("src"), F.col("object").alias("_mid")
     )

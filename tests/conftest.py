@@ -63,6 +63,20 @@ def spark() -> SparkSession:
     s.stop()
 
 
+@pytest.fixture
+def caller_checkpoint(spark):
+    """(frame, RDD ids) of a local checkpoint the test owns, freed after
+    the test. A leak check asserts its ids outlive the call under test,
+    so a path that frees a cache it does not own fails too."""
+    from btd.ckpt import _checkpoint_owned
+
+    own, ids = _checkpoint_owned(spark, spark.range(7))
+    yield own, ids
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for rdd in filter(None, map(jmap.get, ids)):
+        rdd.unpersist(False)
+
+
 @pytest.fixture(scope="session")
 def triples_rows():
     return gen_triples(n=3000, seed=42)

@@ -6,7 +6,12 @@ from __future__ import annotations
 
 import pytest
 
-from btd.ckpt import CheckpointLoop, _checkpoint_owned, _persistent_ids
+from btd.ckpt import (
+    CheckpointLoop,
+    _checkpoint_owned,
+    _persistent_ids,
+    release,
+)
 
 
 def test_checkpoint_owned_is_exact(spark):
@@ -64,7 +69,8 @@ def test_loop_frees_all_but_the_kept_state(spark):
         loop.keep(state)
     assert len(_persistent_ids(spark) - baseline) == 1
     assert sorted(r.a for r in state.collect()) == list(range(3, 13))
-    loop._free(_persistent_ids(spark) - baseline)
+    release(state.selectExpr("a * 2 AS b"))  # a frame built on the result
+    assert _persistent_ids(spark) == baseline
 
 
 def test_loop_frees_everything_on_exception(spark):
@@ -76,3 +82,82 @@ def test_loop_frees_everything_on_exception(spark):
             loop.keep(state)
             raise RuntimeError("boom")
     assert _persistent_ids(spark) == baseline
+
+
+def _pagerank(spark):
+    from btd.graph import pagerank
+
+    e = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    return pagerank(e, n_iter=2)
+
+
+def _components(algorithm):
+    def run(spark):
+        from btd.link.canonical import connected_components
+
+        nodes = spark.createDataFrame([(i,) for i in range(6)], "entity_id long")
+        edges = spark.createDataFrame(
+            [(0, 1), (1, 2), (4, 5)], "id_a long, id_b long"
+        )
+        return connected_components(nodes, edges, algorithm=algorithm)
+
+    return run
+
+
+def _infer(spark):
+    from btd.infer import infer
+
+    df = spark.createDataFrame(
+        [("a", "p", "b")], "subj string, pred string, obj string"
+    )
+    return infer(df, [([("?x", "p", "?y")], [("?y", "q", "?x")])])
+
+
+def _semantic_dedup(spark):
+    from btd.dataops.similarity import semantic_dedup
+
+    rows = [(i, [1.0, 0.01 * i, float(i % 3)]) for i in range(12)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return semantic_dedup(emb, threshold=0.9, n_clusters=2)
+
+
+def _near_dup_groups(spark):
+    from btd.dataops.dedup import near_dup_groups
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    rows = [(0, text), (1, text + " twice"), (2, "something else entirely")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return near_dup_groups(docs)
+
+
+def _canonicalize(spark):
+    from btd.link.canonical import canonicalize_entities
+
+    ents = spark.createDataFrame(
+        [("a", "A"), ("b", "B"), ("c", "C")], "entity_id string, surface string"
+    )
+    same = spark.createDataFrame(
+        [("a", "b", 0.9)], "id_a string, id_b string, score double"
+    )
+    return canonicalize_entities(ents, same)
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_pagerank, _components("label"), _components("star"), _infer,
+     _semantic_dedup, _near_dup_groups, _canonicalize],
+    ids=["pagerank", "cc_label", "cc_star", "infer", "semantic_dedup",
+         "near_dup_groups", "canonicalize_entities"],
+)
+def test_release_frees_kept_loop_result(spark, caller_checkpoint, run):
+    """A loop result (or a wrapper's frame over it) holds its kept
+    checkpoint until release(); release frees it and nothing else —
+    a caller's own checkpoint in the same plan survives."""
+    own, own_ids = caller_checkpoint
+    baseline = _persistent_ids(spark)
+    out = run(spark)
+    assert out.collect()
+    assert _persistent_ids(spark) - baseline  # the kept checkpoint
+    release(out.crossJoin(own))
+    assert not _persistent_ids(spark) - baseline
+    assert own_ids <= _persistent_ids(spark)

@@ -627,22 +627,3 @@ def test_bigram_lm_scores_vs_python(spark, docs, docs_pd):
     # every doc's mean logp must beat the worst-case floor ln(1/(max c1+v))
     floor = math.log(1.0 / (max(c1.values()) + v))
     assert all(s > floor for _, s in got.values())
-
-
-def test_auto_band_size_midpoints():
-    from btd.dataops.dedup import auto_band_size
-
-    # NUM_HASHES=8 midpoints: r=1 -> 0.125, r=2 -> 0.5, r=4 -> 0.707,
-    # r=8 -> 1.0 (single band collides only on exact signature match)
-    assert auto_band_size(0.5) == (2, 4)        # the gate's pinned layout
-    assert auto_band_size(0.15) == (1, 8)       # fuzzy: early collisions
-    assert auto_band_size(0.7) == (4, 2)
-    assert auto_band_size(0.95) == (8, 1)       # near-exact: late
-    # wider signature: 128 hashes, classic 0.8 target -> r in the
-    # 5-7 zone the MMDS rule predicts
-    r, b = auto_band_size(0.8, 128)
-    assert r * b == 128 and 4 <= r <= 16
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        auto_band_size(1.5)

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from btd.ckpt import _persistent_ids
 from btd.dataops.curation import curate, deterministic_sample
 from btd.graph import khop, pagerank
 
@@ -91,16 +92,18 @@ def test_pagerank_tol_early_exit_matches_fixed(spark, caplog):
 
 
 @pytest.mark.parametrize("arg", ["n_iter", "checkpoint_interval"])
-def test_pagerank_rejects_nonpositive_args_and_frees(spark, arg):
+def test_pagerank_rejects_nonpositive_args_and_frees(
+    spark, caller_checkpoint, arg
+):
     """A non-positive iteration argument raises ValueError naming it
     before anything is persisted (n_iter=0 would otherwise return a
     frame whose checkpoint was never taken)."""
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    jsc = spark.sparkContext._jsc
-    baseline = jsc.getPersistentRDDs().size()
+    baseline = _persistent_ids(spark)
     with pytest.raises(ValueError, match=arg):
         pagerank(edges, **{arg: 0})
-    assert jsc.getPersistentRDDs().size() == baseline
+    assert not _persistent_ids(spark) - baseline
+    assert caller_checkpoint[1] <= _persistent_ids(spark)
 
 
 def test_khop_rejects_k_below_one(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from btd.ckpt import _persistent_ids
 from btd.infer import construct, infer
 
 
@@ -121,7 +122,9 @@ def test_infer_frees_loop_checkpoints(kg, spark):
     assert len(after - before) <= 1
 
 
-def test_infer_no_fixpoint_frees_every_checkpoint(spark):
+def test_infer_no_fixpoint_frees_every_checkpoint(
+    spark, caller_checkpoint
+):
     # the RuntimeError path returns nothing, so the loop must not keep
     # its last step pinned for the session lifetime
     rows = [(f"n{i}", "next", f"n{i+1}") for i in range(6)]
@@ -132,11 +135,11 @@ def test_infer_no_fixpoint_frees_every_checkpoint(spark):
             [("?a", "next", "?c")],
         )
     ]
-    jsc = spark.sparkContext._jsc
-    baseline = jsc.getPersistentRDDs().size()
+    baseline = _persistent_ids(spark)
     with pytest.raises(RuntimeError, match="fixpoint"):
         infer(df, rules, max_rounds=1)
-    assert jsc.getPersistentRDDs().size() == baseline
+    assert not _persistent_ids(spark) - baseline
+    assert caller_checkpoint[1] <= _persistent_ids(spark)
 
 
 def test_infer_rejects_optional(kg):

@@ -5,15 +5,18 @@ canonical-ID election determinism."""
 from __future__ import annotations
 
 import itertools
+import math
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from btd.ckpt import _persistent_ids
 from btd.fixtures import GAZETTEER
 from btd.link.blocking import candidate_pairs
 from btd.link.canonical import canonicalize_entities, connected_components
 from btd.link.scoring import score_candidates, score_pair_py
-from btd.lsh import band_pairs
+from btd.lsh import key_pairs
 
 
 @pytest.fixture(scope="module")
@@ -120,7 +123,7 @@ def test_star_cc_converges_on_1000_node_chain(spark):
 
 @pytest.mark.parametrize("algorithm,max_iter", [("label", 25), ("star", 1)])
 def test_cc_no_fixpoint_raises_and_frees_every_checkpoint(
-    spark, algorithm, max_iter
+    spark, caller_checkpoint, algorithm, max_iter
 ):
     """A 60-node chain needs 59 label rounds (diameter) and more than
     one star round: stopping at max_iter would hand back a wrong
@@ -131,15 +134,17 @@ def test_cc_no_fixpoint_raises_and_frees_every_checkpoint(
     e = spark.createDataFrame(
         [(ids[i], ids[i + 1]) for i in range(59)], "id_a string, id_b string"
     )
-    jsc = spark.sparkContext._jsc
-    baseline = jsc.getPersistentRDDs().size()
+    baseline = _persistent_ids(spark)
     with pytest.raises(RuntimeError, match=f"max_iter={max_iter}"):
         connected_components(nodes, e, max_iter=max_iter, algorithm=algorithm)
-    assert jsc.getPersistentRDDs().size() == baseline
+    assert not _persistent_ids(spark) - baseline
+    assert caller_checkpoint[1] <= _persistent_ids(spark)
 
 
 @pytest.mark.parametrize("algorithm", ["label", "star"])
-def test_cc_bad_input_frees_every_checkpoint(spark, algorithm):
+def test_cc_bad_input_frees_every_checkpoint(
+    spark, caller_checkpoint, algorithm
+):
     """nodes without an entity_id column fail to analyse — in the label
     path after the edge static is pinned, in the star path after the
     loop has converged — and must leave no checkpoint behind."""
@@ -147,11 +152,11 @@ def test_cc_bad_input_frees_every_checkpoint(spark, algorithm):
 
     nodes = spark.createDataFrame([("a",), ("b",)], "id string")
     e = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
-    jsc = spark.sparkContext._jsc
-    baseline = jsc.getPersistentRDDs().size()
+    baseline = _persistent_ids(spark)
     with pytest.raises(AnalysisException):
         connected_components(nodes, e, algorithm=algorithm)
-    assert jsc.getPersistentRDDs().size() == baseline
+    assert not _persistent_ids(spark) - baseline
+    assert caller_checkpoint[1] <= _persistent_ids(spark)
 
 
 def test_label_and_star_agree_on_random_graph(spark):
@@ -200,25 +205,55 @@ def test_canonicalize_matches_gazetteer(spark, entities):
         assert canon == min(members)
 
 
-def test_band_pairs_hot_band_exact(spark):
-    """One band key holds 80 of 100 ids (a viral band) and every id also
-    sits in a parity band, so most pairs meet in two bands: the band
-    self-join returns each pair sharing a key exactly once, id_a < id_b."""
-    rows = [(i, "hot" if i < 80 else f"cold{i % 7}") for i in range(100)]
-    rows += [(i, f"parity{i % 2}") for i in range(100)]
-    bands = spark.createDataFrame(rows, "i long, band_key string")
-    got = band_pairs(bands, "i").collect()
-    members: dict[str, list[int]] = {}
+# (key, id) rows; the first holds one band key with 80 of 100 ids (a
+# viral band), every id also in a parity band, so most pairs meet in two
+_HOT_BAND = [(i, "hot" if i < 80 else f"cold{i % 7}") for i in range(100)]
+_HOT_BAND += [(i, f"parity{i % 2}") for i in range(100)]
+# repeated (key, id) rows: each pair still comes out once, but n_shared
+# counts joined rows — why the callers that read it pass distinct rows
+_DUPS = [(1, "x"), (1, "x"), (2, "x"), (2, "y"), (1, "y"), (1, "y"), (3, "y")]
+# key "wide" (6 ids) is over a cap of 4 and drops with all its pairs
+_PURGE = [(i, "wide") for i in range(6)] + [(i, f"k{i // 2}") for i in range(6)]
+_PURGE += [(0, "k9"), (1, "k9"), (2, "k9"), (5, "k9")]
+
+
+@pytest.mark.parametrize(
+    "rows,cap,aa",
+    [(_HOT_BAND, None, False), (_DUPS, None, False), (_PURGE, 4, False),
+     (_PURGE, None, True), (_PURGE, 4, True)],
+    ids=["hot_band", "dup_rows", "purged", "adamic_adar", "purged_aa"],
+)
+def test_key_pairs_exact(spark, rows, cap, aa):
+    """key_pairs against an itertools.combinations reference: each pair
+    sharing a key once, id_a < id_b, n_shared = the joined rows (the
+    shared keys, on distinct rows), keys over ``max_key_size`` rows
+    dropped, and with ``adamic_adar`` w_sum = Σ 1/ln(|key|) over them."""
+    df = spark.createDataFrame(rows, "i long, band_key string")
+    got = key_pairs(
+        df, "band_key", "i", max_key_size=cap, adamic_adar=aa
+    ).collect()
+    members: dict[str, Counter[int]] = {}
     for i, key in rows:
-        members.setdefault(key, []).append(i)
-    want = {
-        pair
-        for ids in members.values()
-        for pair in itertools.combinations(sorted(ids), 2)
-    }
-    assert len(got) == len(want)  # no pair twice
-    assert {(r.id_a, r.id_b) for r in got} == want
-    assert len(want) > 80 * 79 // 2  # the hot band dominates the pair set
+        members.setdefault(key, Counter())[i] += 1
+    n_want: Counter[tuple[int, int]] = Counter()
+    w_want: Counter[tuple[int, int]] = Counter()
+    for ids in members.values():
+        size = sum(ids.values())
+        if cap is None or size <= cap:
+            for a, b in itertools.combinations(sorted(ids), 2):
+                n_want[a, b] += ids[a] * ids[b]
+                w_want[a, b] += ids[a] * ids[b] / math.log(size)
+    assert len(got) == len(n_want)  # no pair twice
+    assert {(r.id_a, r.id_b): r.n_shared for r in got} == n_want
+    if aa:
+        for r in got:
+            assert abs(r.w_sum - w_want[r.id_a, r.id_b]) < 1e-12
+    if rows is _HOT_BAND:  # the hot band dominates the pair set
+        assert len(n_want) > 80 * 79 // 2
+    if rows is _DUPS:  # (1, 2) meets in x and in y, id 1 twice in each
+        assert n_want[1, 2] == 4
+    if rows is _PURGE and cap is not None:
+        assert (0, 5) in n_want and (3, 4) not in n_want
 
 
 def test_block_purging_noop_below_cap_and_prunes_hot_block(spark, entities):

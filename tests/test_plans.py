@@ -370,6 +370,40 @@ def test_cooccurrence_join_is_coparitioned_equi(spark):
     assert plan.count("HashAggregate") >= 2
 
 
+def test_purged_key_pairs_exchange_count_is_pinned(spark):
+    """The purged shared-key pair kernel, as basket_cooccurrence runs
+    it, has exactly three exchanges: the caller's (basket, item)
+    distinct, the basket-hashed purge window (which the basket
+    self-join reuses) and the pair group-by. AQE and broadcast are off
+    so the static shape is the one pinned; one more exchange here is
+    one more full shuffle of the memberships."""
+    from btd.analytics.cooccur import basket_cooccurrence
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        plan = basket_cooccurrence(
+            li, "l_orderkey", "l_partkey", max_basket_size=40
+        )._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    keys = [
+        re.sub(r"#\d+L?", "", k)
+        for k in re.findall(
+            r"(?m)^[\s:+-]*Exchange hashpartitioning\((.*), \d+\)", plan
+        )
+    ]
+    assert keys == ["_i, _j", "_k", "l_orderkey, l_partkey"], plan
+    assert plan.count("ReusedExchange") == 1, plan  # the self-join's side
+
+
 def test_bigram_lm_broadcasts_vocab_only(spark):
     """V (a 1-row aggregate) is the only hand-broadcast; model and
     starts tables join on their keys (vocabulary ∝ corpus — a forced

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from btd.ckpt import _persistent_ids
 from btd.dataops.similarity import (
     blas_near_dup,
     blas_topk,
@@ -318,7 +319,7 @@ def test_pq_topk_recall_floor_and_parity_shape(spark, emb):
 
 
 @pytest.mark.parametrize("which", ["ivf", "pq", "pq_topk"])
-def test_train_bad_input_frees(spark, which):
+def test_train_bad_input_frees(spark, caller_checkpoint, which):
     """A ragged embedding (one 2-dim vector among 4-dim ones, past the
     init rows) fails inside the Lloyd loop; the pinned normalized
     corpus must still be freed. Each case builds its own frame (its
@@ -333,8 +334,7 @@ def test_train_bad_input_frees(spark, which):
     ]
     rows.append((offset + 40, [1.0, 2.0]))
     bad = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    jsc = spark.sparkContext._jsc
-    baseline = jsc.getPersistentRDDs().size()
+    baseline = _persistent_ids(spark)
     with pytest.raises(PythonException):
         if which == "ivf":
             ivf_train(bad, n_clusters=4, n_iter=2)
@@ -342,4 +342,5 @@ def test_train_bad_input_frees(spark, which):
             pq_train(bad, m=2, n_codes=4, n_iter=2)
         else:
             pq_topk(bad, m=2, n_codes=4, n_iter=2)
-    assert jsc.getPersistentRDDs().size() == baseline
+    assert not _persistent_ids(spark) - baseline
+    assert caller_checkpoint[1] <= _persistent_ids(spark)
